@@ -94,6 +94,9 @@ class Context:
     micro_batch: bool = False
     # $probe cross-micro-batch rollover state: name -> {minute, count}
     probe_state: dict = field(default_factory=dict)
+    # tokenizer broadcasts memoized by functions/bpe.py; a field, so the
+    # per-micro-batch copies of the context share it like the two above
+    _bpe_broadcasts: dict = field(default_factory=dict, repr=False)
     # directory resolving $jq/$jslt "resource:/..." script roots — the
     # classpath-resources analog (Script.java:28-46)
     resource_root: Optional[str] = None
@@ -108,6 +111,12 @@ class Context:
         raise KeyError(f"unknown collection {name!r} (no loader configured)")
 
     def write_collection(self, name: str, df: DataFrame) -> None:
+        # a micro-batch materializes its write before the epoch ends, so
+        # batch n reads stored rows, not batches 0..n-1.  A plain batch
+        # run keeps the plan: even a lazy pin runs its shuffle stages
+        # while the DataFrame is being built (AQE plans them eagerly).
+        if self.micro_batch:
+            df = pin(df, eager=True)
         self.collections[name] = df
         if self.collection_writer is not None:
             self.collection_writer(name, df)
@@ -115,3 +124,34 @@ class Context:
     def send(self, topic: str, key: Optional[str], value: dict) -> None:
         if self.producer is not None:
             self.producer(topic, key, value)
+
+
+def _scans_stored_rows(plan) -> bool:
+    """True when an analyzed plan is a leaf relation under nothing but
+    filters and plain column selections: reading it is a scan, not a
+    recomputation."""
+    while not plan.children().isEmpty():
+        kind = plan.getClass().getSimpleName()
+        if kind == "Project":
+            cols = plan.projectList()
+            if any(cols.apply(i).getClass().getSimpleName()
+                   != "AttributeReference" for i in range(cols.size())):
+                return False
+        elif kind != "Filter":
+            return False
+        plan = plan.children().apply(0)
+    return True
+
+
+def pin(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage: a durable ``checkpoint`` when the
+    SparkContext has a checkpoint directory (it survives executor loss;
+    see SCALE.md), ``localCheckpoint`` otherwise.  Lazy unless ``eager``.
+    Streaming frames and frames that already scan stored rows come back
+    unchanged."""
+    if df.isStreaming or _scans_stored_rows(
+            df._jdf.queryExecution().analyzed()):
+        return df
+    if df.sparkSession.sparkContext._jsc.sc().getCheckpointDir().isDefined():
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)

@@ -267,10 +267,7 @@ def broadcast_tokenizer(ctx, merges_name: str, vocab_name=None):
     ``collection_loader`` path still collects once per Context.)  Long-
     lived Contexts can free executor memory with
     :func:`release_broadcasts`."""
-    cache = getattr(ctx, "_bpe_broadcasts", None)
-    if cache is None:
-        cache = {}
-        ctx._bpe_broadcasts = cache
+    cache = ctx._bpe_broadcasts
     # resolve FIRST (Context.collection caches loader results), then key
     # the memo on the resolved DataFrame identities: same frames -> one
     # broadcast forever; a rebound name -> unpersist + re-collect
@@ -327,10 +324,7 @@ def broadcast_vocab(ctx, vocab_name: str):
     needs no merge table) — same per-Context memo/rebind/release
     discipline as :func:`broadcast_tokenizer`, stored under the
     ``(None, vocab_name)`` key so the two never collide."""
-    cache = getattr(ctx, "_bpe_broadcasts", None)
-    if cache is None:
-        cache = {}
-        ctx._bpe_broadcasts = cache
+    cache = ctx._bpe_broadcasts
     try:
         vdf = ctx.collection(vocab_name)
     except KeyError as e:
@@ -392,7 +386,7 @@ def release_broadcasts(ctx) -> int:
     models is still going to execute; the rebind path inside
     :func:`broadcast_tokenizer` uses the gentler unpersist for exactly
     that reason."""
-    cache = getattr(ctx, "_bpe_broadcasts", None) or {}
+    cache = ctx._bpe_broadcasts
     n = 0
     for _, bc in cache.values():
         try:

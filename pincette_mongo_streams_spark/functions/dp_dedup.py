@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..context import Context
+from ..context import Context, pin
 from ..expressions import ExprContext, compile_expr
 from ..pipeline import StageFn, register_stage
 
@@ -140,34 +140,21 @@ def _pin_computed(df: DataFrame) -> DataFrame:
     bounded (a trained model, a buckets-capped count table) so the
     materialization pays at any scale.
 
-    Convention mirrors graphcc._pin / lookup.py (ADVICE r13): durable
-    ``checkpoint`` when the session has a checkpoint directory
-    (survives executor loss on real clusters), ``localCheckpoint``
-    otherwise (single-JVM local mode has no executor to lose).
-    DEPLOYMENT NOTE (ADVICE r13, low): the ``localCheckpoint`` fallback
-    stores blocks on executors — on a multi-executor cluster WITHOUT a
-    configured checkpoint dir, losing an executor (including dynamic-
-    allocation decommission) makes queries over the pinned frame fail
-    unrecoverably where un-pinned lineage would recompute.  Cluster
-    deployments must set ``spark.sparkContext.setCheckpointDir(...)``
-    (reliable storage) so the durable branch is taken; see SCALE.md.
-    A frame
-    read straight from storage (bare relation / projection — no
+    The pin is a lazy ``context.pin``.  DEPLOYMENT NOTE (ADVICE r13):
+    without a checkpoint dir, ``localCheckpoint`` blocks live on
+    executors, so losing one fails queries over the pinned frame — and
+    loses a streaming ``$merge``/``$out``/``$delete``/``$deduplicate``
+    collection target outright.  Cluster deployments must set
+    ``spark.sparkContext.setCheckpointDir(...)``; see SCALE.md.  A
+    frame read straight from storage (bare relation / projection — no
     aggregate, join or generate in its analyzed plan) is NOT pinned:
     re-scanning a stored table per reference is cheaper than copying
-    it.  Streaming frames are never pinned (checkpoint would raise)."""
-    if df.isStreaming:
-        return df
+    it."""
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
     except Exception:  # pragma: no cover - py4j edge
         return df
-    if not _COMPUTED_NODE_RE.search(plan):
-        return df
-    sc = df.sparkSession.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isDefined():
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
+    return pin(df) if _COMPUTED_NODE_RE.search(plan) else df
 
 
 def _spread(df: DataFrame, light: bool = False) -> DataFrame:

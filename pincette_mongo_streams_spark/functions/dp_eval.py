@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..context import Context
+from ..context import Context, pin
 from ..expressions import ExprContext, compile_expr
 from ..pipeline import StageFn, register_stage
 from .dp_dedup import _spread
@@ -3651,10 +3651,7 @@ def paired_bootstrap_stage(expression: Any, ctx: Context) -> StageFn:
                 *[F.col(f"__pbb_{f}").alias(f"__b_{f}") for f in fields])
             # same checkpoint barrier + ordering rationale as the mean
             # path below (predicate-pushdown substitution hazard)
-            has_dir = c.spark.sparkContext._jsc.sc().getCheckpointDir() \
-                .isDefined()
-            slim = (slim.checkpoint(eager=False) if has_dir
-                    else slim.localCheckpoint(eager=False))
+            slim = pin(slim)
             pairs = slim.filter(
                 F.col("__id").isNotNull() & F.col("__ok"))
             statcols = ([f"__a_{f}" for f in fields]
@@ -3706,7 +3703,7 @@ def paired_bootstrap_stage(expression: Any, ctx: Context) -> StageFn:
         b = compile_expr(b_e, sctx).cast("double")
         slim = df.select(
             idc.alias("__id"), a.alias("__a"), b.alias("__b"))
-        # HARD plan barrier (checkpoint, the graphcc policy) BETWEEN
+        # HARD plan barrier (a checkpoint) BETWEEN
         # the projection and the null filter.  Ordering is the whole
         # point: a filter placed below the barrier gets predicate-
         # pushed through every upstream Project, each crossing
@@ -3717,13 +3714,8 @@ def paired_bootstrap_stage(expression: Any, ctx: Context) -> StageFn:
         # barrier first, the filter tests materialized slim rows, the
         # upstream metric evaluates exactly once per row, and the
         # base-means and replicate subtrees share the same
-        # materialization.  Durable checkpoint when the session has a
-        # checkpoint dir (cluster), local otherwise — same policy as
-        # $connectedComponents/$pageRank.
-        has_dir = c.spark.sparkContext._jsc.sc().getCheckpointDir() \
-            .isDefined()
-        slim = (slim.checkpoint(eager=False) if has_dir
-                else slim.localCheckpoint(eager=False))
+        # materialization (context.pin).
+        slim = pin(slim)
         pairs = slim.filter(
             F.col("__id").isNotNull() & F.col("__a").isNotNull()
             & F.col("__b").isNotNull())
@@ -3785,12 +3777,13 @@ def materialize_stage(expression: Any, ctx: Context) -> StageFn:
     measured 173-s-vs-7-s hazard in SCALE.md §"pairedBootstrap") — and
     (2) multiple downstream consumers share ONE upstream evaluation.
 
-    ``auto`` (default) durably checkpoints when the session has a
-    checkpoint directory configured (survives executor loss — the
-    cluster choice) and uses ``localCheckpoint`` otherwise; ``local``
-    and ``durable`` force the respective behavior (``durable`` without
-    a checkpoint dir raises at run time, from Spark).  Lazy in both
-    modes: nothing materializes until the first downstream action.
+    ``auto`` (default) is ``context.pin``: durable with a checkpoint
+    directory (survives executor loss — the cluster choice),
+    ``localCheckpoint`` otherwise, and a pass-through for rows that are
+    already a plain scan; ``local`` and ``durable`` force the respective
+    behavior (``durable`` without a checkpoint dir raises at run time,
+    from Spark).  Lazy in all modes (under AQE the shuffle stages still
+    run when the pin is built).
 
     Batch-only in the streaming PLAN path (an unbounded DataFrame
     cannot checkpoint); inside foreachBatch it is a per-micro-batch
@@ -3809,10 +3802,7 @@ def materialize_stage(expression: Any, ctx: Context) -> StageFn:
             return df.localCheckpoint(eager=False)
         if mode == "durable":
             return df.checkpoint(eager=False)
-        has_dir = c.spark.sparkContext._jsc.sc().getCheckpointDir() \
-            .isDefined()
-        return (df.checkpoint(eager=False) if has_dir
-                else df.localCheckpoint(eager=False))
+        return pin(df)
 
     return fn
 
@@ -3904,10 +3894,6 @@ def bootstrap_ci_stage(expression: Any, ctx: Context) -> StageFn:
         _corpus_only("$bootstrapCI", c)
         sctx = ExprContext(schema=df.schema)
         idc = compile_expr(id_e, sctx).cast("string")
-        has_dir = c.spark.sparkContext._jsc.sc().getCheckpointDir() \
-            .isDefined()
-        barrier = lambda d: (d.checkpoint(eager=False) if has_dir  # noqa: E731
-                             else d.localCheckpoint(eager=False))
         if statistic != "mean":
             shared, build, stat_score, _lower, fields = machinery
             stage = df.withColumn("__bci_id", idc)
@@ -3917,7 +3903,7 @@ def bootstrap_ci_stage(expression: Any, ctx: Context) -> StageFn:
                 F.col("__bci_id").alias("__id"),
                 (ok_sh & ok_a).alias("__ok"),
                 *[F.col(f"__pba_{f}").alias(f"__a_{f}") for f in fields])
-            slim = barrier(slim)
+            slim = pin(slim)
             pairs = slim.filter(
                 F.col("__id").isNotNull() & F.col("__ok"))
             statcols = [f"__a_{f}" for f in fields]
@@ -3941,7 +3927,7 @@ def bootstrap_ci_stage(expression: Any, ctx: Context) -> StageFn:
         else:
             v = compile_expr(in_e, sctx).cast("double")
             slim = df.select(idc.alias("__id"), v.alias("__v"))
-            slim = barrier(slim)
+            slim = pin(slim)
             pairs = slim.filter(
                 F.col("__id").isNotNull() & F.col("__v").isNotNull())
             ws = F.transform(

@@ -27,7 +27,7 @@ Scale notes (the 100 TB story):
   even when the vocab is 10^8.
 - $bradleyTerry: each MM round is one join + one key-partitioned
   aggregate over the PAIR table; lineage is pinned every few rounds
-  (graphcc._pin convention).
+  (``context.pin``, eager).
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..context import Context
+from ..context import Context, pin
 from ..expressions import ExprContext, compile_expr
 from ..pipeline import StageFn, register_stage
 from .dp_dedup import _pin_computed, _spread
@@ -549,7 +549,7 @@ def bradley_terry_stage(expression: Any, ctx: Context) -> StageFn:
 
     Each round = one join of the current strengths onto the pair table
     + one key-partitioned aggregate; lineage pinned every 5 rounds
-    (graphcc._pin convention).  ``iterations`` defaults to 20; the MM
+    (``context.pin``, eager).  ``iterations`` defaults to 20; the MM
     map is a contraction near the optimum, so tens of rounds suffice
     for ranking purposes.
     """
@@ -591,9 +591,7 @@ def bradley_terry_stage(expression: Any, ctx: Context) -> StageFn:
             (F.col("a.__wij") + F.coalesce(F.col("b.__wij"), F.lit(0.0)))
             .alias("__nij"),
         )
-        from ..operators.graphcc import _pin
-
-        opp = _pin(opp)
+        opp = pin(opp, eager=True)
         players = opp.groupBy(F.col("__i").alias("player")).agg(
             F.sum("__wij").alias("__W"),
             F.sum("__nij").alias("__G"),
@@ -630,7 +628,7 @@ def bradley_terry_stage(expression: Any, ctx: Context) -> StageFn:
             # unpinned loop doubles the plan tree per iteration —
             # exponential analysis cost by iteration 5
             if it + 1 < iterations:
-                players = _pin(players)
+                players = pin(players, eager=True)
         total = players.agg(F.sum("__pi").alias("__t"))
         players = players.join(
             F.broadcast(total), F.lit(True), "left",

@@ -21,10 +21,10 @@ properties of each round:
   node of a large component (its minimum, which every member eventually
   points at) is handled by partial aggregation, not a single giant task;
 - the edge set shrinks monotonically toward a star forest;
-- lineage is truncated every round with ``localCheckpoint`` so the
-  iterative plan does not grow unboundedly (on a real cluster, swap in
-  ``checkpoint`` to reliable storage via ``spark.sparkContext.
-  setCheckpointDir`` — same call site, durable against executor loss).
+- lineage is truncated every round with ``context.pin`` so the
+  iterative plan does not grow unboundedly (``localCheckpoint``, or a
+  durable ``checkpoint`` once ``spark.sparkContext.setCheckpointDir``
+  is set on a real cluster).
 
 The driver loop only compares edge-set fingerprints for convergence; the
 data never collects to the driver.
@@ -37,7 +37,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..context import Context
+from ..context import Context, pin
 from ..expressions import ExprContext, compile_expr
 from ..pipeline import StageFn, register_stage
 
@@ -79,31 +79,22 @@ def _small_star(directed: DataFrame) -> DataFrame:
     return pairs.union(selfs).distinct()
 
 
-def _pin(df: DataFrame) -> DataFrame:
-    """Truncate lineage between rounds: durable ``checkpoint`` when the
-    session has a checkpoint directory configured (survives executor loss
-    — the right choice on a cluster), ``localCheckpoint`` otherwise."""
-    sc = df.sparkSession.sparkContext
-    has_dir = sc._jsc.sc().getCheckpointDir().isDefined()
-    return df.checkpoint(eager=True) if has_dir else df.localCheckpoint(eager=True)
-
-
 def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFrame:
     """(a, b) edge DataFrame → (``__cc_node``, ``__cc_comp``) labels, where
     the component id is the minimum node id of the component.  Nodes that
     appear in no edge are absent (callers coalesce to the node's own id).
     Node ids may be any orderable type (numeric, string)."""
-    cur = _pin(
+    cur = pin(
         edges.filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .filter(F.col("a") != F.col("b"))
-        .distinct()
+        .distinct(), eager=True
     )
     cur_count = cur.count()
     if cur_count == 0:
         return cur.select(F.col("a").alias("__cc_node"), F.col("b").alias("__cc_comp"))
     for _ in range(max_iterations):
-        nxt = _pin(_small_star(_large_star(cur)))
+        nxt = pin(_small_star(_large_star(cur)), eager=True)
         nxt_count = nxt.count()
         if nxt_count == cur_count and nxt.exceptAll(cur).isEmpty():
             break
@@ -173,15 +164,15 @@ def page_rank(edges: DataFrame, damping: float, iterations: int) -> DataFrame:
     node key, partial aggregation absorbs hub skew; lineage is truncated
     per round (same durable/local checkpoint policy as
     $connectedComponents)."""
-    e = _pin(
+    e = pin(
         edges.filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .filter(F.col("a") != F.col("b"))
-        .distinct()
+        .distinct(), eager=True
     )
-    nodes = _pin(
+    nodes = pin(
         e.select(F.col("a").alias("__n"))
         .union(e.select(F.col("b").alias("__n")))
-        .distinct()
+        .distinct(), eager=True
     )
     n = nodes.count()
     if n == 0:
@@ -189,9 +180,9 @@ def page_rank(edges: DataFrame, damping: float, iterations: int) -> DataFrame:
                             F.lit(None).cast("double").alias("__pr_rank"))
     # r14: outdeg is loop-invariant — pin it once instead of paying its
     # groupBy shuffle inside every round's join tree
-    outdeg = _pin(e.groupBy(F.col("a").alias("__n")).agg(
+    outdeg = pin(e.groupBy(F.col("a").alias("__n")).agg(
         F.count(F.lit(1)).cast("double").alias("__deg")
-    ))
+    ), eager=True)
     ranks = nodes.withColumn("__r", F.lit(1.0 / n))
     base = (1.0 - damping) / n
     # r14 (guide §5): the eager per-round checkpoint was a full job
@@ -220,7 +211,7 @@ def page_rank(edges: DataFrame, damping: float, iterations: int) -> DataFrame:
              ).alias("__r"),
         )
         if (i + 1) % PIN_EVERY == 0 or i == iterations - 1:
-            ranks = _pin(ranks)
+            ranks = pin(ranks, eager=True)
     return ranks.select(F.col("__n").alias("__pr_node"),
                         F.col("__r").alias("__pr_rank"))
 

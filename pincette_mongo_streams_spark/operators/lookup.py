@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..context import Context
+from ..context import Context, pin
 from ..expressions import ExprContext, compile_expr
 from ..pipeline import StageFn, register_stage
 
@@ -295,12 +295,9 @@ def _null_split_join(
     present or unknown -> materialize once.  The materialization is
     bounded by the same budget that lets the join broadcast, and the
     foreign side of a $lookup is always a static collection, so
-    checkpointing is legal in streaming pipelines too.  Like graphcc's ``_pin``, the materialization is a
-    durable ``checkpoint`` when the session has a checkpoint directory
-    configured (``localCheckpoint`` stores blocks on executors and
-    truncates lineage — losing an executor on a real cluster would fail
-    the query instead of recomputing) and ``localCheckpoint`` otherwise
-    (single-JVM local mode has no executor to lose).
+    checkpointing is legal in streaming pipelines too.  The
+    materialization is ``context.pin``: durable with a checkpoint
+    directory, ``localCheckpoint`` otherwise.
 
     ``small=False/None`` (foreign side above the budget, or no
     estimate): materializing the aggregate could spill executor disks,
@@ -331,11 +328,7 @@ def _null_split_join(
         # prune the null-branch scan to a footer read, and the A/B
         # measured the checkpoint itself at ~0.07-0.1 s per query at
         # sf0.1).  Nulls present or unknown -> materialize once.
-        sc = grouped.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isDefined():
-            grouped = grouped.checkpoint(eager=False)
-        else:
-            grouped = grouped.localCheckpoint(eager=False)
+        grouped = pin(grouped)
         main = F.broadcast(grouped.filter(F.col("__fk").isNotNull()))
     else:
         main = grouped.filter(F.col("__fk").isNotNull())

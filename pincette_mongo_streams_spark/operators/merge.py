@@ -34,7 +34,7 @@ from typing import Any, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..context import Context
+from ..context import Context, pin
 from ..expressions import ExprContext, compile_expr
 from ..pipeline import StageFn, register_stage
 from .stateless import KEY_COL, _rekey_on_id
@@ -260,6 +260,11 @@ def merge_stage(expression: Any, ctx: Context) -> StageFn:
         carry = [F.col("__in_id")] if restore_id else []
         written = joined.select(F.col(on[0]).isNotNull().alias("__from_src"),
                                 matched.alias("__matched"), *carry, *out_cols)
+        if c.micro_batch or "fail" in (when_matched, when_not_matched):
+            # one materialization of the join serves the fail probes, the
+            # emitted messages and the new target (a bare filter over it,
+            # so write_collection stores it as is)
+            written = pin(written, eager=True)
         if when_matched == "fail":
             n = written.filter("__matched").limit(1).count()
             if n:

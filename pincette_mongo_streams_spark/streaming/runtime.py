@@ -19,6 +19,7 @@ DataFrame; state lives in Spark's state store:
 
 from __future__ import annotations
 
+import dataclasses
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
@@ -310,10 +311,13 @@ def run_streaming(
                 last_emitted[0] = None  # first start: no persisted state
 
         def process(batch_df: DataFrame, epoch: int) -> None:
-            batch_ctx = ctx
-            batch_ctx.streaming = False  # inside foreachBatch everything is batch
-            batch_ctx.micro_batch = True  # ...but stages with cross-batch
-            # accumulators ($probe rollover) see the stream context
+            # inside foreachBatch everything is batch, but stages with
+            # cross-batch accumulators ($probe rollover) and collection
+            # writes see the stream context.  A copy, so a failing batch
+            # leaves the caller's flags alone; collections and probe_state
+            # stay shared, so targets carry across batches and to the caller
+            batch_ctx = dataclasses.replace(ctx, streaming=False,
+                                            micro_batch=True)
             out = compile_pipeline(batch_part, batch_ctx)(batch_df) if batch_part else batch_df
             if suppress_unchanged:
                 cols = out.columns
@@ -369,8 +373,6 @@ def run_streaming(
                         (fresh.withColumn("__epoch", F.lit(epoch))
                          .write.mode("append").parquet(state_dir))
                         deltas_since_compact[0] += 1
-            batch_ctx.streaming = True
-            batch_ctx.micro_batch = False
 
         writer = transformed.writeStream.foreachBatch(process)
         writer = writer.outputMode(_output_mode(plan_part))

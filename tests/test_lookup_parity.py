@@ -328,7 +328,7 @@ def _nation_lookup(spark):
 def test_small_lookup_checkpoint_durable_when_dir_set(
         spark, tmp_path, monkeypatch):
     """ADVICE r13: when the small-side materialization fires, it mirrors
-    graphcc._pin — durable `checkpoint` when the session has a
+    context.pin — durable `checkpoint` when the session has a
     checkpoint directory (localCheckpoint blocks die with their executor
     on a real cluster), `localCheckpoint` otherwise.  `_key_has_nulls`
     is forced True so the materialization fires on the no-null testdata

@@ -247,3 +247,28 @@ def test_merge_project_numeric_inclusion(spark):
     )(src).collect()
     row = ctx.collection("t").collect()[0]
     assert row["total"] == 10.0 and row["_id"] == 1
+
+
+def test_batch_merge_starts_no_job_while_building(spark):
+    """A plain batch $merge builds its output and its new target without
+    running a Spark job (the target is pinned only inside a streaming
+    micro-batch); the first action then yields scenario 6's target."""
+    stored = spark.createDataFrame(
+        [(("0", "1"), "0", "1", 0)],
+        "_id struct<f1:string,f2:string>, f1 string, f2 string, test long")
+    incoming = spark.createDataFrame(
+        [("0", "0", "1", 1)], "_id string, f1 string, f2 string, test long")
+    ctx = Context(spark=spark, collections={"m": stored})
+    sc = spark.sparkContext
+    sc.setJobGroup("merge-build", "batch $merge build")
+    try:
+        out = compile_pipeline([
+            {"$merge": {"into": "m", "on": ["f1", "f2"],
+                        "key": {"f1": "$f1", "f2": "$f2"}}}], ctx)(incoming)
+        built = list(sc.statusTracker().getJobIdsForGroup("merge-build"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert built == []
+    assert _docs(out) == [{"_id": "0", "f1": "0", "f2": "1", "test": 1}]
+    assert _docs(ctx.collection("m")) == [
+        {"_id": {"f1": "0", "f2": "1"}, "f1": "0", "f2": "1", "test": 1}]

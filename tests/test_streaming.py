@@ -1432,3 +1432,104 @@ def test_tokenizer_family_streams(spark, tmpdir):
         assert r["n_chunks"] >= 2
     # one broadcast total despite per-micro-batch stage recompilation
     assert len(ctx._bpe_broadcasts) == 1
+
+
+_COLLECTION_PIPELINE = [
+    {"$delete": {"from": "del", "on": "_id"}},
+    {"$deduplicate": {"expression": "$k", "collection": "seen"}},
+    {"$merge": {"into": "tgt", "on": "_id", "whenMatched": "replace"}},
+    {"$out": "copy"},
+]
+
+
+def _plan_of(df) -> str:
+    # expression ids grow with every batch; their digits are not depth
+    import re
+
+    return re.sub(r"#\d+L?", "#", df._jdf.queryExecution().analyzed()
+                  .toString())
+
+
+def test_collection_plans_stay_flat_across_micro_batches(spark, tmpdir):
+    """Every collection write in a micro-batch stores materialized rows:
+    after 21 batches the $delete, $deduplicate {collection}, $merge and
+    $out targets have no join/union/aggregate in their plans and are no
+    longer than after batch 2, and their rows equal a plain-Python fold
+    of the same batches."""
+    import re
+
+    schema = "_id string, k long, v long, seq long"
+    batches = [[{"_id": f"u{(7 * i + j) % 12}", "k": (5 * i + j) % 30,
+                 "v": 100 * i + j, "seq": 10 * i + j} for j in range(4)]
+               for i in range(21)]
+    dele = spark.createDataFrame([(f"u{n}",) for n in range(40)],
+                                 "_id string")
+    ctx = Context(spark=spark, collections={"del": dele}, order_by="seq")
+    names = ("del", "seen", "tgt", "copy")
+    early: dict = {}
+
+    def sink(df, epoch):
+        df.count()
+        if epoch == 1:
+            early.update({n: _plan_of(ctx.collections[n]) for n in names})
+
+    in_dir = os.path.join(tmpdir, "in")
+    _write_batches(in_dir, batches)
+    source = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).json(in_dir))
+    q = run_streaming(source, _COLLECTION_PIPELINE, ctx, sink,
+                      trigger={"availableNow": True},
+                      checkpoint=os.path.join(tmpdir, "ckpt"))
+    try:
+        q.awaitTermination(300)
+    finally:
+        q.stop()
+    assert q.exception() is None
+    assert q.lastProgress["batchId"] == 20
+
+    deleted, seen, tgt = {f"u{n}" for n in range(40)}, set(), {}
+    for docs in batches:
+        deleted -= {d["_id"] for d in docs}
+        first: dict = {}
+        for d in sorted(docs, key=lambda d: d["seq"]):
+            first.setdefault(d["k"], d)
+        kept = [d for k, d in first.items() if k not in seen]
+        seen |= {d["k"] for d in kept}
+        for d in sorted(kept, key=lambda d: d["seq"]):
+            tgt[d["_id"]] = d
+    rows = {n: [r.asDict() for r in ctx.collections[n].collect()]
+            for n in names}
+    assert {r["_id"] for r in rows["del"]} == deleted
+    assert {r["_id"] for r in rows["seen"]} == seen
+    for n in ("tgt", "copy"):
+        assert {r["_id"]: r for r in rows[n]} == tgt
+    for n in names:
+        plan = _plan_of(ctx.collections[n])
+        assert not re.search(r"(?m)^[\s:+-]*(Join|Union|Aggregate)\b",
+                             plan), (n, plan)
+        assert len(plan) <= len(early[n]), (n, early[n], plan)
+
+
+def test_failing_sink_leaves_caller_context_flags(spark, tmpdir):
+    """Each micro-batch runs on a copy of the Context: a sink that raises
+    on batch 1 leaves the caller's streaming/micro_batch flags as
+    run_streaming set them, while the shared collections still carry
+    batch 0's $merge target."""
+    in_dir = os.path.join(tmpdir, "in")
+    _write_batches(in_dir, [[{"_id": "a", "v": 1}], [{"_id": "b", "v": 2}]])
+    ctx = Context(spark=spark)
+
+    def sink(df, epoch):
+        df.count()
+        if epoch == 1:
+            raise RuntimeError("sink down")
+
+    source = (spark.readStream.schema("_id string, v long")
+              .option("maxFilesPerTrigger", 1).json(in_dir))
+    q = run_streaming(source, [{"$merge": {"into": "tgt", "on": "_id"}}],
+                      ctx, sink, trigger={"availableNow": True},
+                      checkpoint=os.path.join(tmpdir, "ckpt"))
+    with pytest.raises(Exception, match="sink down"):
+        q.awaitTermination(120)
+    assert ctx.streaming is True and ctx.micro_batch is False
+    assert "a" in {r["_id"] for r in ctx.collections["tgt"].collect()}
