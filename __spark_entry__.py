@@ -8660,7 +8660,7 @@ _ORDER = [
     # driver-canon-checked by tests/test_driver_canon.py):
     #   dsir_score -> bleu_eval (curation family stays composed
     #     in-window by training_pipeline; corpus-mode $dsirScore is
-    #     _corpus_only-gated and locally oracled)
+    #     rejected in streaming by its corpus kind and locally oracled)
     #   window_group_hourly -> rouge_l_eval ($windowGroup stays covered
     #     in-window by window_all)
     #   entropy_score -> ngram_overlap (the scorer family keeps

@@ -18,7 +18,7 @@ from pyspark.sql import types as T
 
 from ..context import Context
 from ..expressions import ExprContext, compile_expr
-from ..pipeline import StageFn, register_stage
+from ..pipeline import StageFn, check_kind, register_stage
 
 from .dp_dedup import (_WS, _pair_dot, _pin_computed, _seeded_hasher,
                        _spread, _unit_vector, md5_long, word_shingles)
@@ -27,7 +27,7 @@ from .dp_retrieval import SCRUB_RULES
 from .dp_vector import _round9_col
 
 
-@register_stage("$dsirScore")
+@register_stage("$dsirScore", "per_batch")
 def dsir_score_stage(expression: Any, ctx: Context) -> StageFn:
     """DSIR importance weighting (Xie et al. 2023, arXiv:2302.03169):
     ``{input, id, from, targetInput?, sourceFrom?, sourceInput?, n?,
@@ -75,12 +75,10 @@ def dsir_score_stage(expression: Any, ctx: Context) -> StageFn:
     if n < 1 or buckets < 1 or alpha <= 0:
         raise ValueError(
             "$dsirScore needs n >= 1, buckets >= 1 and smoothing > 0")
+    if source_from is None:  # the source model fits on the input itself
+        check_kind("$dsirScore", "corpus", ctx)
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        if source_from is None:
-            from ..operators.extended import _corpus_only
-
-            _corpus_only("$dsirScore", c)
         tgt = c.collection(from_coll)
 
         def feats(col: Column) -> Column:
@@ -193,7 +191,7 @@ def dsir_score_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$mmr")
+@register_stage("$mmr", "batch")
 def mmr_stage(expression: Any, ctx: Context) -> StageFn:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
     1998): ``{score, input, id, by?, k?, lambda?, as?}`` — per group
@@ -236,9 +234,6 @@ def mmr_stage(expression: Any, ctx: Context) -> StageFn:
         raise ValueError("$mmr lambda must be in [0, 1]")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from ..operators.extended import _batch_only
-
-        _batch_only("$mmr", c)
         ectx = ExprContext(schema=df.schema)
         emb = compile_expr(inp, ectx).cast("array<double>")
         score = compile_expr(score_e, ectx).cast("double")
@@ -359,7 +354,7 @@ def mmr_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$rankEval")
+@register_stage("$rankEval", "batch")
 def rank_eval_stage(expression: Any, ctx: Context) -> StageFn:
     """Ranking-quality evaluation over (group, rank, gain) triples:
     ``{by, rank, gain, k?, dcg?}`` — one output row per group (query):
@@ -393,9 +388,6 @@ def rank_eval_stage(expression: Any, ctx: Context) -> StageFn:
         raise ValueError("$rankEval dcg must be 'linear' or 'exp'")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from ..operators.extended import _batch_only
-
-        _batch_only("$rankEval", c)
         ectx = ExprContext(schema=df.schema)
         g = compile_expr(by, ectx)
         rank = compile_expr(rank_e, ectx).cast("double")
@@ -451,7 +443,7 @@ def rank_eval_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$decontaminate")
+@register_stage("$decontaminate", "per_batch")
 def decontaminate_stage(expression: Any, ctx: Context) -> StageFn:
     """Training-corpus decontamination against a reference set (e.g. an
     eval benchmark): ``{input, against: <collection>, againstField,
@@ -506,7 +498,7 @@ def decontaminate_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$mediaEmbed")
+@register_stage("$mediaEmbed", "per_batch")
 def media_embed_stage(expression: Any, ctx: Context) -> StageFn:
     """Deterministic feature embedding of a binary column:
     ``{input, dim, as}`` -> ``array<double>`` in [-1, 1).
@@ -540,7 +532,7 @@ def media_embed_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$urlParse")
+@register_stage("$urlParse", "per_batch")
 def url_parse_stage(expression: Any, ctx: Context) -> StageFn:
     """URL decomposition for corpus curation: ``{input, as?}`` adds a
     struct (default ``url``) with ``scheme``, ``host``, ``domain``
@@ -600,7 +592,7 @@ def url_parse_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$groupCap")
+@register_stage("$groupCap", "batch")
 def group_cap_stage(expression: Any, ctx: Context) -> StageFn:
     """Per-group row cap: ``{by, cap, sortBy}`` keeps the first ``cap``
     rows of each group in ``sortBy`` order — the domain-cap /
@@ -633,9 +625,8 @@ def group_cap_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, c: Context) -> DataFrame:
         from pyspark.sql import Window
 
-        from ..operators.extended import _batch_only, _sort_cols
+        from ..operators.extended import _sort_cols
 
-        _batch_only("$groupCap", c)
         ectx = ExprContext(schema=df.schema)
         keys = by if isinstance(by, list) else [by]
         w = Window.partitionBy(
@@ -662,7 +653,7 @@ HTML_ENTITIES: list[tuple[str, str]] = [
 ]
 
 
-@register_stage("$htmlStrip")
+@register_stage("$htmlStrip", "per_batch")
 def html_strip_stage(expression: Any, ctx: Context) -> StageFn:
     """Markup removal for web-scraped corpora: ``{input, as?}`` adds a
     struct:
@@ -714,7 +705,7 @@ def html_strip_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$readability")
+@register_stage("$readability", "per_batch")
 def readability_stage(expression: Any, ctx: Context) -> StageFn:
     """Flesch readability metrics (Flesch 1948 / Kincaid et al. 1975):
     ``{input, as?}`` adds a struct:
@@ -772,7 +763,7 @@ def readability_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$entropyScore")
+@register_stage("$entropyScore", "per_batch")
 def entropy_score_stage(expression: Any, ctx: Context) -> StageFn:
     """Shannon entropy of the document's unigram distribution —
     ``{input, as?, unit?: "char"|"word"}`` adds a double column (bits):
@@ -844,7 +835,7 @@ def entropy_score_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$piiStats")
+@register_stage("$piiStats", "per_batch")
 def pii_stats_stage(expression: Any, ctx: Context) -> StageFn:
     """PII density signals: ``{input, as?}`` adds a struct with a
     non-overlapping match count per $scrubText rule — ``{email, url,
@@ -877,7 +868,7 @@ def pii_stats_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$shuffle")
+@register_stage("$shuffle", "batch")
 def shuffle_stage(expression: Any, ctx: Context) -> StageFn:
     """Deterministic corpus shuffle: ``{id, seed?}`` orders the corpus
     by ``md5(seed:id)`` — the write-order randomization step of a
@@ -903,9 +894,6 @@ def shuffle_stage(expression: Any, ctx: Context) -> StageFn:
     seed = int(expression.get("seed", 0))
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from ..operators.extended import _batch_only
-
-        _batch_only("$shuffle", c)
         idc = compile_expr(id_expr, ExprContext(schema=df.schema))
         ids = idc.cast("string")
         return df.orderBy(md5_long(ids, seed), ids)
@@ -913,7 +901,7 @@ def shuffle_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$truncateTokens")
+@register_stage("$truncateTokens", "per_batch")
 def truncate_tokens_stage(expression: Any, ctx: Context) -> StageFn:
     """Token-budget truncation: ``{input, as?, max, unit?:
     "tokens"|"chars"}`` cuts each document to its first ``max``
@@ -985,7 +973,7 @@ def truncate_tokens_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$mixCorpora")
+@register_stage("$mixCorpora", "batch")
 def mix_corpora_stage(expression: Any, ctx: Context) -> StageFn:
     """Deterministic weighted corpus mixture — the "70% web / 30%
     books" composition step of a training-data pipeline:

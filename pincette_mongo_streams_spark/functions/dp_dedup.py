@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 
 from ..context import Context, pin
 from ..expressions import ExprContext, compile_expr
-from ..pipeline import StageFn, register_stage
+from ..pipeline import StageFn, check_kind, register_stage
 
 
 def md5_long(col: Column, seed: int) -> Column:
@@ -348,7 +348,7 @@ def _component_dups(labels: DataFrame) -> DataFrame:
 # ------------------------------------------------------------- exact dedup
 
 
-@register_stage("$dedupExact")
+@register_stage("$dedupExact", "corpus")
 def dedup_exact_stage(expression: Any, ctx: Context) -> StageFn:
     """Exact dedup on one or more key expressions: single hash-partitioned
     shuffle; deterministic keeper = min of ``keep`` column (default: first
@@ -435,10 +435,6 @@ def minhash_sig_terms_sql(bases_col: str, num: int) -> str:
     return f"array({terms})"
 
 
-def minhash_sig_sql(bases_col: str, num: int) -> Column:
-    return F.expr(minhash_sig_terms_sql(bases_col, num))
-
-
 def minhash_signature(text: Column, n: int, num: int) -> Column:
     return minhash_sig_from_bases(minhash_bases(text, n), num)
 
@@ -469,7 +465,7 @@ def with_minhash_sig(df: DataFrame, inp: Any, n: int, num: int,
     )
 
 
-@register_stage("$minhash")
+@register_stage("$minhash", "per_batch")
 def minhash_stage(expression: Any, ctx: Context) -> StageFn:
     """Add a MinHash signature column: ``{input, as, shingle: n, numHashes}``.
     Row-local, no shuffle, single pass over the shingles."""
@@ -511,7 +507,7 @@ def _check_bands(stage: str, num: int, bands: int) -> None:
         )
 
 
-@register_stage("$minhashDedup")
+@register_stage("$minhashDedup", "corpus")
 def minhash_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     """Near-dup removal via MinHash + LSH banding.
 
@@ -629,7 +625,7 @@ def minhash_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$crossDedup")
+@register_stage("$crossDedup", "per_batch")
 def cross_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     """Cross-corpus near-dup removal: drop input documents that
     near-duplicate ANY document of a *reference* collection.
@@ -719,7 +715,7 @@ def cross_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$jaccardJoin")
+@register_stage("$jaccardJoin", "per_batch")
 def jaccard_join_stage(expression: Any, ctx: Context) -> StageFn:
     """Near-dup PAIR output: ``{from?, input, id, foreignInput?,
     foreignId?, shingle, numHashes, bands, threshold}`` →
@@ -738,6 +734,8 @@ def jaccard_join_stage(expression: Any, ctx: Context) -> StageFn:
     (the SQL-oracle convention).
     """
     from_coll = expression.get("from")
+    if from_coll is None:  # a self-join pairs rows across the input
+        check_kind("$jaccardJoin", "batch", ctx)
     inp = expression["input"]
     id_field = expression.get("id", "_id")
     fin = expression.get("foreignInput", inp)
@@ -803,7 +801,7 @@ def jaccard_join_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$editDistanceJoin")
+@register_stage("$editDistanceJoin", "per_batch")
 def edit_distance_join_stage(expression: Any, ctx: Context) -> StageFn:
     """Edit-distance similarity join: ``{from?, input, id, foreignInput?,
     foreignId?, maxDistance, gram}`` → ``(left_id, right_id, distance)``
@@ -836,6 +834,8 @@ def edit_distance_join_stage(expression: Any, ctx: Context) -> StageFn:
     unordered pair once (left_id < right_id).  Null strings never match.
     """
     from_coll = expression.get("from")
+    if from_coll is None:  # a self-join pairs rows across the input
+        check_kind("$editDistanceJoin", "batch", ctx)
     inp = expression["input"]
     id_field = expression.get("id", "_id")
     fin = expression.get("foreignInput", inp)
@@ -995,7 +995,7 @@ def edit_distance_join_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$simhash")
+@register_stage("$simhash", "per_batch")
 def simhash_stage(expression: Any, ctx: Context) -> StageFn:
     """64-bit SimHash over word shingles: ``{input, as, shingle, bits}``.
     bit_j = sign of sum over shingles of (hash bit j ? +1 : -1); near-dups
@@ -1055,7 +1055,7 @@ def _with_simhash(df: DataFrame, inp: Any, n: int, bits: int,
     )
 
 
-@register_stage("$simhashDedup")
+@register_stage("$simhashDedup", "corpus")
 def simhash_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     """Hamming-ball near-dup removal over SimHash signatures:
     ``{input, id, shingle, bits, maxHamming, transitive?}``.
@@ -1151,7 +1151,7 @@ def simhash_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$ngramJaccardDedup")
+@register_stage("$ngramJaccardDedup", "corpus")
 def ngram_jaccard_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     """Exact n-gram Jaccard near-dup removal: ``{input, id, n, threshold}``.
 

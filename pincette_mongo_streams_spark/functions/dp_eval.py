@@ -22,7 +22,7 @@ from ..pipeline import StageFn, register_stage
 from .dp_dedup import _spread
 
 
-@register_stage("$ngramOverlap")
+@register_stage("$ngramOverlap", "per_batch")
 def ngram_overlap_stage(expression: Any, ctx: Context) -> StageFn:
     """Clipped word-n-gram overlap between a candidate and a reference
     text IN THE SAME ROW — the row-local core of BLEU/ROUGE-style eval
@@ -356,7 +356,7 @@ def _eval_clipped_multi(gc: Column, grs: Column) -> Column:
     )
 
 
-@register_stage("$profile")
+@register_stage("$profile", "corpus")
 def profile_stage(expression: Any, ctx: Context) -> StageFn:
     """One-pass data profiling: ``{columns: [...], percentiles?:
     [0.25, 0.5, 0.75], exact?: false, topK?: 0}`` -> one row PER COLUMN
@@ -390,9 +390,8 @@ def profile_stage(expression: Any, ctx: Context) -> StageFn:
     CORPUS-ONLY (r9, carried r7 verdict item): the output claims to be
     a profile of the whole input — inside a foreachBatch re-entry it
     would silently profile ONE micro-batch and label it a corpus
-    profile, the exact silent-wrong-answer class ``_corpus_only``
-    exists for.  Rejected at submit time by the streaming runtime and
-    per micro-batch here (defense in depth)."""
+    profile, the silent-wrong-answer class the ``corpus`` kind
+    rejects when the pipeline compiles."""
     cols = expression["columns"]
     pcts = expression.get("percentiles", [0.25, 0.5, 0.75])
     exact = bool(expression.get("exact", False))
@@ -412,9 +411,6 @@ def profile_stage(expression: Any, ctx: Context) -> StageFn:
             f"{names} — use distinct hundredths")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from ..operators.extended import _corpus_only
-
-        _corpus_only("$profile", c)
         kinds: dict = {}
         for col in cols:
             if col not in df.columns:
@@ -647,7 +643,7 @@ _ROUGE_TYPE = ("struct<lcs:bigint,precision:double,"
                "recall:double,f1:double>")
 
 
-@register_stage("$rougeL")
+@register_stage("$rougeL", "per_batch")
 def rouge_l_stage(expression: Any, ctx: Context) -> StageFn:
     """ROUGE-L (Lin 2004): longest-common-subsequence overlap between a
     candidate and a reference text in the same row — ``{candidate,
@@ -807,7 +803,7 @@ def _rouge_words(tok: str, t: Column, max_words: int) -> Column:
             else _eval_words(t, max_words))
 
 
-@register_stage("$rougeN")
+@register_stage("$rougeN", "per_batch")
 def rouge_n_stage(expression: Any, ctx: Context) -> StageFn:
     """ROUGE-N (Lin 2004) with rouge_score-library parity: ``{candidate,
     reference | references, n?, tokenizer?, maxWords?, as?}`` adds
@@ -937,7 +933,7 @@ _ROUGE_LSUM_TYPE = ("struct<hits:bigint,precision:double,"
                     "recall:double,f1:double>")
 
 
-@register_stage("$rougeLsum")
+@register_stage("$rougeLsum", "per_batch")
 def rouge_lsum_stage(expression: Any, ctx: Context) -> StageFn:
     """ROUGE-Lsum — summary-level ROUGE-L (Lin 2004 §3.2 as implemented
     by google-research/rouge, the variant summarization papers report):
@@ -1135,7 +1131,7 @@ _METEOR_TYPE = ("struct<matches:bigint,chunks:bigint,"
                 "score:double>")
 
 
-@register_stage("$meteor")
+@register_stage("$meteor", "per_batch")
 def meteor_stage(expression: Any, ctx: Context) -> StageFn:
     """METEOR, exact-match variant with NLTK parity (Banerjee & Lavie
     2005; nltk.translate.meteor_score's exact stage): ``{candidate,
@@ -1302,7 +1298,7 @@ def meteor_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$bleu")
+@register_stage("$bleu", "per_batch")
 def bleu_stage(expression: Any, ctx: Context) -> StageFn:
     """Sentence-level BLEU (Papineni et al. 2002): ``{candidate,
     reference | references, maxN?, maxWords?, smooth?, as?}`` adds the
@@ -1457,7 +1453,7 @@ def bleu_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$bleuCorpus")
+@register_stage("$bleuCorpus", "corpus")
 def bleu_corpus_stage(expression: Any, ctx: Context) -> StageFn:
     """CORPUS-level BLEU (Papineni 2002 §2 — the metric MT papers
     actually report; sentence-BLEU averaged is NOT it): ``{candidate,
@@ -1506,9 +1502,6 @@ def bleu_corpus_stage(expression: Any, ctx: Context) -> StageFn:
         # corpus out across cores first (dp_dedup._spread's row-group
         # gate makes this a no-op for already-wide real-scale inputs)
         df = _spread(df)
-        from ..operators.extended import _corpus_only
-
-        _corpus_only("$bleuCorpus", c)
         sctx = ExprContext(schema=df.schema)
         cand = compile_expr(cand_e, sctx)
         tok = _tok_fn(tokenizer)
@@ -1608,7 +1601,7 @@ def bleu_corpus_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$chrf")
+@register_stage("$chrf", "per_batch")
 def chrf_stage(expression: Any, ctx: Context) -> StageFn:
     """chrF (Popović 2015): character-n-gram F-score between a
     candidate and a reference in the same row — the eval-family's
@@ -1931,7 +1924,7 @@ def _check_word_order(stage: str, expression: dict) -> tuple[int, int]:
 _QA_PUNCT = r"""[!"#$%&'()*+,\-./:;<=>?@\[\\\]^_`{|}~]"""
 
 
-@register_stage("$qaEval")
+@register_stage("$qaEval", "per_batch")
 def qa_eval_stage(expression: Any, ctx: Context) -> StageFn:
     """SQuAD-style QA eval (Rajpurkar et al. 2016): ``{prediction,
     answers, as?}`` adds ``struct<exact_match, f1>`` scored against an
@@ -2019,7 +2012,7 @@ def qa_eval_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$chrfCorpus")
+@register_stage("$chrfCorpus", "corpus")
 def chrf_corpus_stage(expression: Any, ctx: Context) -> StageFn:
     """CORPUS-level chrF: ``{candidate, reference, maxN?, beta?,
     maxChars?}`` -> ONE row ``(chrf, n_segments, p1..p<maxN>,
@@ -2072,9 +2065,6 @@ def chrf_corpus_stage(expression: Any, ctx: Context) -> StageFn:
         # corpus out across cores first (dp_dedup._spread's row-group
         # gate makes this a no-op for already-wide real-scale inputs)
         df = _spread(df)
-        from ..operators.extended import _corpus_only
-
-        _corpus_only("$chrfCorpus", c)
         sctx = ExprContext(schema=df.schema)
         cand = compile_expr(cand_e, sctx)
         ref = compile_expr(ref_e, sctx)
@@ -2238,7 +2228,7 @@ def _make_wer_scorers(max_words: int):
     return score_one, score_multi
 
 
-@register_stage("$wer")
+@register_stage("$wer", "per_batch")
 def wer_stage(expression: Any, ctx: Context) -> StageFn:
     """Word error rate (the standard ASR / MT edit metric):
     ``{candidate, reference | references, maxWords?, as?}`` adds
@@ -2344,7 +2334,7 @@ def wer_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$werCorpus")
+@register_stage("$werCorpus", "corpus")
 def wer_corpus_stage(expression: Any, ctx: Context) -> StageFn:
     """CORPUS-level word error rate — TOTAL edit distance over TOTAL
     reference words (how ASR harnesses report WER; the mean of
@@ -2386,9 +2376,6 @@ def wer_corpus_stage(expression: Any, ctx: Context) -> StageFn:
         # corpus out across cores first (dp_dedup._spread's row-group
         # gate makes this a no-op for already-wide real-scale inputs)
         df = _spread(df)
-        from ..operators.extended import _corpus_only
-
-        _corpus_only("$werCorpus", c)
         sctx = ExprContext(schema=df.schema)
         cand = compile_expr(cand_e, sctx)
         if not case_sensitive:
@@ -2716,7 +2703,7 @@ def _make_ter_scorers(max_words: int, max_shift_size: int,
     return score_one, score_multi
 
 
-@register_stage("$ter")
+@register_stage("$ter", "per_batch")
 def ter_stage(expression: Any, ctx: Context) -> StageFn:
     """Translation Edit Rate (Snover 2006) — the third metric of the
     sacrebleu BLEU/chrF/TER triple: ``{candidate, reference |
@@ -2811,7 +2798,7 @@ def ter_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$terCorpus")
+@register_stage("$terCorpus", "corpus")
 def ter_corpus_stage(expression: Any, ctx: Context) -> StageFn:
     """CORPUS-level TER (tercom's corpus number): ``{candidate,
     reference | references, maxWords?, maxShiftSize?,
@@ -2848,9 +2835,6 @@ def ter_corpus_stage(expression: Any, ctx: Context) -> StageFn:
         # corpus out across cores first (dp_dedup._spread's row-group
         # gate makes this a no-op for already-wide real-scale inputs)
         df = _spread(df)
-        from ..operators.extended import _corpus_only
-
-        _corpus_only("$terCorpus", c)
         sctx = ExprContext(schema=df.schema)
         cand = compile_expr(cand_e, sctx)
         if not case_sensitive:
@@ -2915,7 +2899,7 @@ def ter_corpus_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$classificationEval")
+@register_stage("$classificationEval", "corpus")
 def classification_eval_stage(expression: Any, ctx: Context) -> StageFn:
     """Classification metrics over (predicted, actual) label pairs —
     the standard harness summary for classifier / LLM-labeling runs:
@@ -2962,9 +2946,6 @@ def classification_eval_stage(expression: Any, ctx: Context) -> StageFn:
             "$classificationEval labels must be a non-empty list")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from ..operators.extended import _corpus_only
-
-        _corpus_only("$classificationEval", c)
         sctx = ExprContext(schema=df.schema)
         pred = compile_expr(pred_e, sctx).cast("string")
         act = compile_expr(act_e, sctx).cast("string")
@@ -3073,7 +3054,7 @@ def classification_eval_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$regressionEval")
+@register_stage("$regressionEval", "corpus")
 def regression_eval_stage(expression: Any, ctx: Context) -> StageFn:
     """Regression metrics over (predicted, actual) numeric pairs:
     ``{predicted, actual}`` -> ONE row ``(n, mse, rmse, mae, r2)``.
@@ -3096,9 +3077,6 @@ def regression_eval_stage(expression: Any, ctx: Context) -> StageFn:
     act_e = expression["actual"]
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from ..operators.extended import _corpus_only
-
-        _corpus_only("$regressionEval", c)
         sctx = ExprContext(schema=df.schema)
         pred = compile_expr(pred_e, sctx).cast("double")
         act = compile_expr(act_e, sctx).cast("double")
@@ -3544,7 +3522,7 @@ def _corpus_stat_machinery(statistic: str, expression: dict, stage_name: str):
     return shared, build, score, True, fields
 
 
-@register_stage("$pairedBootstrap")
+@register_stage("$pairedBootstrap", "corpus")
 def paired_bootstrap_stage(expression: Any, ctx: Context) -> StageFn:
     """Paired bootstrap resampling (Koehn 2004, "Statistical
     Significance Tests for Machine Translation Evaluation") over two
@@ -3633,9 +3611,6 @@ def paired_bootstrap_stage(expression: Any, ctx: Context) -> StageFn:
         # corpus out across cores first (dp_dedup._spread's row-group
         # gate makes this a no-op for already-wide real-scale inputs)
         df = _spread(df)
-        from ..operators.extended import _corpus_only
-
-        _corpus_only("$pairedBootstrap", c)
         sctx = ExprContext(schema=df.schema)
         idc = compile_expr(id_e, sctx).cast("string")
         if statistic != "mean":
@@ -3767,7 +3742,7 @@ def paired_bootstrap_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$materialize")
+@register_stage("$materialize", "batch")
 def materialize_stage(expression: Any, ctx: Context) -> StageFn:
     """Explicit plan barrier: ``{}`` or ``{mode: "auto"|"local"|
     "durable"}``.  Pins the current rows as materialized data so that
@@ -3795,9 +3770,6 @@ def materialize_stage(expression: Any, ctx: Context) -> StageFn:
             f"$materialize mode must be auto|local|durable, got {mode!r}")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from ..operators.extended import _batch_only
-
-        _batch_only("$materialize", c)
         if mode == "local":
             return df.localCheckpoint(eager=False)
         if mode == "durable":
@@ -3823,7 +3795,7 @@ def _poisson1_weight(seed: int, id_col: Column, r: Column) -> Column:
     return w.cast("long")
 
 
-@register_stage("$bootstrapCI")
+@register_stage("$bootstrapCI", "corpus")
 def bootstrap_ci_stage(expression: Any, ctx: Context) -> StageFn:
     """Bootstrap confidence interval for a per-segment metric's mean:
     ``{id, input, samples?, alpha?, seed?}`` -> ONE row ``(n, mean,
@@ -3889,9 +3861,6 @@ def bootstrap_ci_stage(expression: Any, ctx: Context) -> StageFn:
         df = _spread(df)
         import math
 
-        from ..operators.extended import _corpus_only
-
-        _corpus_only("$bootstrapCI", c)
         sctx = ExprContext(schema=df.schema)
         idc = compile_expr(id_e, sctx).cast("string")
         if statistic != "mean":
@@ -3976,7 +3945,7 @@ def bootstrap_ci_stage(expression: Any, ctx: Context) -> StageFn:
 
 # ----------------------------------------------------------------- SARI
 
-@register_stage("$sari")
+@register_stage("$sari", "per_batch")
 def sari_stage(expression: Any, ctx: Context) -> StageFn:
     """SARI (Xu et al. 2016, "Optimizing Statistical Machine Translation
     for Text Simplification", TACL) — THE text-simplification /
@@ -4152,7 +4121,7 @@ def sari_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$permutationTest")
+@register_stage("$permutationTest", "corpus")
 def permutation_test_stage(expression: Any, ctx: Context) -> StageFn:
     """Paired sign-flip permutation test (Fisher randomization; the
     exact-test alternative to $pairedBootstrap): ``{id, a, b,
@@ -4181,9 +4150,6 @@ def permutation_test_stage(expression: Any, ctx: Context) -> StageFn:
         raise ValueError("$permutationTest samples must be in 1..10000")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from ..operators.extended import _corpus_only
-
-        _corpus_only("$permutationTest", c)
         sctx = ExprContext(schema=df.schema)
         idc = compile_expr(id_e, sctx).cast("string")
         a = compile_expr(a_e, sctx).cast("double")

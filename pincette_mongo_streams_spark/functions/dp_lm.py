@@ -90,7 +90,7 @@ def _position_grams(toks: Column, n: int) -> Column:
     return out
 
 
-@register_stage("$ngramLmTrain")
+@register_stage("$ngramLmTrain", "corpus")
 def ngram_lm_train_stage(expression: Any, ctx: Context) -> StageFn:
     """Train a count-based n-gram LM over the corpus: ``{input, n?,
     minCount?, tokenizer?, maxWords?}`` emits the model table
@@ -130,9 +130,6 @@ def ngram_lm_train_stage(expression: Any, ctx: Context) -> StageFn:
             f"$ngramLmTrain tokenizer must be one of {_LM_TOKENIZERS}")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from ..operators.extended import _corpus_only
-
-        _corpus_only("$ngramLmTrain", c)
         text = compile_expr(inp, ExprContext(schema=df.schema))
         toks = _lm_tokens(tok, text, max_words)
         # gram generation is the per-row-heavy work (interpreted HOF
@@ -171,7 +168,7 @@ _LM_SCORE_TYPE = ("struct<n_tokens:bigint,oov:bigint,"
                   "logprob:double,perplexity:double>")
 
 
-@register_stage("$ngramLmScore")
+@register_stage("$ngramLmScore", "per_batch")
 def ngram_lm_score_stage(expression: Any, ctx: Context) -> StageFn:
     """Score documents against an $ngramLmTrain model: ``{input,
     model: <collection>, n?, backoff?, alpha?, tokenizer?, maxWords?,

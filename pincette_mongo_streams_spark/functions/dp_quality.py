@@ -43,7 +43,7 @@ def _stopword_hits(words: Column, lang: str) -> Column:
     return F.size(F.filter(words, lambda w: F.array_contains(sw, w)))
 
 
-@register_stage("$langId")
+@register_stage("$langId", "per_batch")
 def lang_id_stage(expression: Any, ctx: Context) -> StageFn:
     """Stopword-vote language ID: ``{input, as}``.  Argmax over per-language
     stopword hit counts ('und' for ties/zero hits).  Pure column algebra —
@@ -75,7 +75,7 @@ def lang_id_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$qualityScore")
+@register_stage("$qualityScore", "per_batch")
 def quality_score_stage(expression: Any, ctx: Context) -> StageFn:
     """Heuristic doc quality in [0,1]: ``{input, as}`` — blend of length
     band, alpha ratio, punctuation ratio and mean word length.  Map-only."""
@@ -102,7 +102,7 @@ def quality_score_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$repetitionScore")
+@register_stage("$repetitionScore", "per_batch")
 def repetition_score_stage(expression: Any, ctx: Context) -> StageFn:
     """Gopher-style repetition signals (Rae et al. 2021, table A1), the
     classic pretraining-data repetition filters: ``{input, as?}`` adds a
@@ -228,7 +228,7 @@ def repetition_score_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$gopherRules")
+@register_stage("$gopherRules", "per_batch")
 def gopher_rules_stage(expression: Any, ctx: Context) -> StageFn:
     """Gopher's published document-quality filters (Rae et al. 2021,
     Table A1 — the non-repetition rules; `$repetitionScore` carries the
@@ -351,7 +351,7 @@ def gopher_rules_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$c4Filter")
+@register_stage("$c4Filter", "per_batch")
 def c4_filter_stage(expression: Any, ctx: Context) -> StageFn:
     """C4-style cleaning (Raffel et al. 2020 §2.2, the public heuristics
     behind the C4 corpus): ``{input, as?, minWords?}`` adds a struct:
@@ -411,7 +411,7 @@ def c4_filter_stage(expression: Any, ctx: Context) -> StageFn:
 
 
 
-@register_stage("$lexicalDiversity")
+@register_stage("$lexicalDiversity", "per_batch")
 def lexical_diversity_stage(expression: Any, ctx: Context) -> StageFn:
     """Lexical diversity: ``{input, window?, caseSensitive?, maxWords?,
     as?}`` adds ``struct<n_tokens, n_types, ttr, mattr>`` — the

@@ -29,7 +29,7 @@ import re as _re_mod
 _IDENT = _re_mod.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
-@register_stage("$bm25")
+@register_stage("$bm25", "per_batch")
 def bm25_stage(expression: Any, ctx: Context) -> StageFn:
     """BM25 ranked retrieval: ``{query, input, id, k, k1, b}`` →
     ``(id, score, rank)`` for the top-k documents.
@@ -194,7 +194,7 @@ FROM __bm_top"""
     return fn
 
 
-@register_stage("$tfIdf")
+@register_stage("$tfIdf", "per_batch")
 def tf_idf_stage(expression: Any, ctx: Context) -> StageFn:
     """Per-document top-K TF-IDF keyword extraction:
     ``{input, id, topK, minDf?, maxDfRatio?}`` → ``(id, term, tf, score,
@@ -279,7 +279,7 @@ def tf_idf_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$collocations")
+@register_stage("$collocations", "per_batch")
 def collocations_stage(expression: Any, ctx: Context) -> StageFn:
     """Corpus-level collocation mining: ``{input, top, minCount?}`` →
     the ``top`` adjacent word pairs by pointwise mutual information, as

@@ -44,15 +44,9 @@ from .dp_dedup import _pin_computed, _spread
 from .dp_lm import _LM_TOKENIZERS, _lm_tokens
 
 
-def _corpus_only(name: str, c: Context) -> None:
-    from ..operators.extended import _corpus_only as gate
-
-    gate(name, c)
-
-
 # --------------------------------------------------------------- kappa
 
-@register_stage("$cohenKappa")
+@register_stage("$cohenKappa", "corpus")
 def cohen_kappa_stage(expression: Any, ctx: Context) -> StageFn:
     """Cohen's kappa (Cohen 1960) between two annotators' label columns
     — THE chance-corrected agreement statistic for "are these two
@@ -79,7 +73,6 @@ def cohen_kappa_stage(expression: Any, ctx: Context) -> StageFn:
             "$cohenKappa weights must be none | linear | quadratic")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _corpus_only("$cohenKappa", c)
         sctx = ExprContext(schema=df.schema)
         a = compile_expr(a_e, sctx)
         b = compile_expr(b_e, sctx)
@@ -141,7 +134,7 @@ def cohen_kappa_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$fleissKappa")
+@register_stage("$fleissKappa", "corpus")
 def fleiss_kappa_stage(expression: Any, ctx: Context) -> StageFn:
     """Fleiss' kappa (Fleiss 1971) for m raters in long format:
     ``{item, rating}`` (one row per (item, rater) judgment) -> ONE row
@@ -157,7 +150,6 @@ def fleiss_kappa_stage(expression: Any, ctx: Context) -> StageFn:
     item_e, rating_e = expression["item"], expression["rating"]
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _corpus_only("$fleissKappa", c)
         sctx = ExprContext(schema=df.schema)
         item = compile_expr(item_e, sctx).cast("string")
         rating = compile_expr(rating_e, sctx).cast("string")
@@ -208,7 +200,7 @@ def fleiss_kappa_stage(expression: Any, ctx: Context) -> StageFn:
 
 # ---------------------------------------------------------- divergence
 
-@register_stage("$corpusDivergence")
+@register_stage("$corpusDivergence", "corpus")
 def corpus_divergence_stage(expression: Any, ctx: Context) -> StageFn:
     """Token-distribution drift between the pipeline corpus and a
     reference collection: ``{input, against, againstField?, n?,
@@ -266,7 +258,6 @@ def corpus_divergence_stage(expression: Any, ctx: Context) -> StageFn:
         )
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _corpus_only("$corpusDivergence", c)
         ref = c.collection(against)
         p = grams_of(
             df, compile_expr(inp, ExprContext(schema=df.schema)))
@@ -338,7 +329,7 @@ def corpus_divergence_stage(expression: Any, ctx: Context) -> StageFn:
 
 # ----------------------------------------------------------- diversity
 
-@register_stage("$distinctN")
+@register_stage("$distinctN", "corpus")
 def distinct_n_stage(expression: Any, ctx: Context) -> StageFn:
     """Corpus-level distinct-n diversity (Li et al. 2016): ``{input,
     maxN?, tokenizer?, maxWords?}`` -> ONE row with ``distinct_1 ..
@@ -361,7 +352,6 @@ def distinct_n_stage(expression: Any, ctx: Context) -> StageFn:
         raise ValueError("$distinctN maxWords must be >= 1")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _corpus_only("$distinctN", c)
         text = compile_expr(inp, ExprContext(schema=df.schema))
         # r13: tokens bound to a column + single-task corpora fanned
         # out — the per-position gram lambdas re-evaluated the captured
@@ -443,7 +433,7 @@ def distinct_n_stage(expression: Any, ctx: Context) -> StageFn:
 
 # ------------------------------------------------------------ zipf fit
 
-@register_stage("$zipfFit")
+@register_stage("$zipfFit", "corpus")
 def zipf_fit_stage(expression: Any, ctx: Context) -> StageFn:
     """Zipf's-law fit of the corpus token-frequency distribution
     (Zipf 1949): ``{input, tokenizer?, maxWords?, minCount?}`` -> ONE
@@ -473,7 +463,6 @@ def zipf_fit_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, c: Context) -> DataFrame:
         from pyspark.sql import Window
 
-        _corpus_only("$zipfFit", c)
         text = compile_expr(inp, ExprContext(schema=df.schema))
         toks = _lm_tokens(tok, text, max_words)
         words = df.select(F.explode(toks).alias("__w"))
@@ -529,7 +518,7 @@ def zipf_fit_stage(expression: Any, ctx: Context) -> StageFn:
 
 # -------------------------------------------------------- bradley-terry
 
-@register_stage("$bradleyTerry")
+@register_stage("$bradleyTerry", "corpus")
 def bradley_terry_stage(expression: Any, ctx: Context) -> StageFn:
     """Bradley-Terry preference-strength fitting (Bradley & Terry 1952)
     by Hunter 2004's MM algorithm — the standard model behind pairwise
@@ -560,7 +549,6 @@ def bradley_terry_stage(expression: Any, ctx: Context) -> StageFn:
         raise ValueError("$bradleyTerry iterations must be in 1..200")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _corpus_only("$bradleyTerry", c)
         sctx = ExprContext(schema=df.schema)
         wcol = compile_expr(winner_e, sctx).cast("string")
         lcol = compile_expr(loser_e, sctx).cast("string")
@@ -647,7 +635,7 @@ def bradley_terry_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$krippendorffAlpha")
+@register_stage("$krippendorffAlpha", "corpus")
 def krippendorff_alpha_stage(expression: Any, ctx: Context) -> StageFn:
     """Krippendorff's alpha (Krippendorff 2011, "Computing
     Krippendorff's Alpha-Reliability") — the agreement coefficient that
@@ -679,7 +667,6 @@ def krippendorff_alpha_stage(expression: Any, ctx: Context) -> StageFn:
             "$krippendorffAlpha metric must be nominal | interval")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _corpus_only("$krippendorffAlpha", c)
         sctx = ExprContext(schema=df.schema)
         item = compile_expr(item_e, sctx).cast("string")
         value = compile_expr(value_e, sctx)
@@ -748,7 +735,7 @@ def krippendorff_alpha_stage(expression: Any, ctx: Context) -> StageFn:
 
 # ------------------------------------------------- distribution tests
 
-@register_stage("$ksTest")
+@register_stage("$ksTest", "corpus")
 def ks_test_stage(expression: Any, ctx: Context) -> StageFn:
     """Two-sample Kolmogorov-Smirnov test between a numeric column of
     this corpus and a reference collection's — the standard numeric
@@ -781,7 +768,6 @@ def ks_test_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, c: Context) -> DataFrame:
         from pyspark.sql import Window
 
-        _corpus_only("$ksTest", c)
         ref = c.collection(against)
         fld = against_field or (
             inp[1:] if isinstance(inp, str) and inp.startswith("$")
@@ -878,7 +864,7 @@ def _erf(x: Column) -> Column:
     return sign * (1.0 - poly * F.exp(-ax * ax))
 
 
-@register_stage("$chiSquareTest")
+@register_stage("$chiSquareTest", "corpus")
 def chi_square_test_stage(expression: Any, ctx: Context) -> StageFn:
     """Chi-squared homogeneity test between a categorical column of
     this corpus and a reference collection's (2 x C contingency
@@ -898,7 +884,6 @@ def chi_square_test_stage(expression: Any, ctx: Context) -> StageFn:
     against_field = expression.get("againstField")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _corpus_only("$chiSquareTest", c)
         ref = c.collection(against)
         fld = against_field or (
             inp[1:] if isinstance(inp, str) and inp.startswith("$")

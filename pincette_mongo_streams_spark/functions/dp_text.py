@@ -26,7 +26,7 @@ from .dp_eval import _eval_words
 from .dp_retrieval import SCRUB_RULES
 
 
-@register_stage("$scrubText")
+@register_stage("$scrubText", "per_batch")
 def scrub_text_stage(expression: Any, ctx: Context) -> StageFn:
     """PII scrubbing for training corpora: ``{input, as, rules?}`` —
     emails, URLs, IPs and phone-number-shaped digit runs are replaced by
@@ -54,7 +54,7 @@ def scrub_text_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$datasetSplit")
+@register_stage("$datasetSplit", "per_batch")
 def dataset_split_stage(expression: Any, ctx: Context) -> StageFn:
     """Deterministic train/val/test assignment:
     ``{id, weights: {name: w, ...}, as, seed}``.
@@ -118,7 +118,7 @@ def dataset_split_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$packSequences")
+@register_stage("$packSequences", "batch")
 def pack_sequences_stage(expression: Any, ctx: Context) -> StageFn:
     """Concatenate-then-chunk layout for LLM pretraining shards:
     ``{tokens, budget, sortBy, as, partitionBy?}``.
@@ -170,7 +170,7 @@ def pack_sequences_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$sentenceSplit")
+@register_stage("$sentenceSplit", "per_batch")
 def sentence_split_stage(expression: Any, ctx: Context) -> StageFn:
     """Sentence segmentation: ``{input, as, minChars?}`` — splits on
     runs of sentence-ending punctuation (``.!?``) followed by
@@ -198,7 +198,7 @@ def sentence_split_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$spanDedup")
+@register_stage("$spanDedup", "corpus")
 def span_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     """C4's corpus-wide sentence-span dedup (Raffel et al. 2020 §2.2:
     "we removed any three-sentence span occurring more than once"):
@@ -255,12 +255,6 @@ def span_dedup_stage(expression: Any, ctx: Context) -> StageFn:
         raise ValueError("$spanDedup span must be >= 1")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from ..operators.extended import _corpus_only
-
-        # corpus-wide ownership needs the whole corpus: a streaming
-        # micro-batch would dedup only within itself (and the self-join
-        # shape is unsupported on streams anyway)
-        _corpus_only("$spanDedup", c)
         ectx = ExprContext(schema=df.schema)
         if unit == "tokens":
             seg = F.filter(
@@ -343,7 +337,7 @@ def span_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$winnow")
+@register_stage("$winnow", "per_batch")
 def winnow_stage(expression: Any, ctx: Context) -> StageFn:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken
     2003 — the MOSS algorithm): ``{input, as?, k?, window?}`` — the text
@@ -402,7 +396,7 @@ def winnow_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$charLmScore")
+@register_stage("$charLmScore", "corpus")
 def char_lm_score_stage(expression: Any, ctx: Context) -> StageFn:
     """Corpus-trained character-bigram cross-entropy: ``{input, as}`` —
     appends bits-per-character under a Laplace-smoothed char-bigram
@@ -495,7 +489,7 @@ def char_lm_score_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$quantileBin")
+@register_stage("$quantileBin", "corpus")
 def quantile_bin_stage(expression: Any, ctx: Context) -> StageFn:
     """Equal-frequency bin labels: ``{input, bins, as, exact?,
     accuracy?}`` — appends a 1-based bin index (decile/percentile
@@ -550,7 +544,7 @@ def quantile_bin_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$fingerprint")
+@register_stage("$fingerprint", "per_batch")
 def fingerprint_stage(expression: Any, ctx: Context) -> StageFn:
     """Normalized content fingerprint: ``{input, as}`` = md5 of
     lowercase/whitespace-collapsed/punctuation-stripped text — the standard
@@ -590,7 +584,7 @@ metadata.  Partitioning guidance: bucket by media_id; keep `content` out of
 every projection until the decode stage (column pruning keeps scans thin)."""
 
 
-@register_stage("$decodeMedia")
+@register_stage("$decodeMedia", "per_batch")
 def decode_media_stage(expression: Any, ctx: Context) -> StageFn:
     """Decode/feature-extract media bytes: ``{input, kind, as, op}``.
 
@@ -647,7 +641,7 @@ def decode_media_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$frameSample")
+@register_stage("$frameSample", "per_batch")
 def frame_sample_stage(expression: Any, ctx: Context) -> StageFn:
     """Sample fixed-size byte windows ("frames") from a binary column:
     ``{input, frameSize, stride, as}`` -> ``array<struct<idx, data>>``.
@@ -686,7 +680,7 @@ def frame_sample_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$stratifiedSample")
+@register_stage("$stratifiedSample", "per_batch")
 def stratified_sample_stage(expression: Any, ctx: Context) -> StageFn:
     """Deterministic per-stratum sampling for training-mix construction:
     ``{by: <expr>, fractions: {value: fraction, ...} | fraction,
@@ -728,7 +722,7 @@ def stratified_sample_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$chunkText")
+@register_stage("$chunkText", "per_batch")
 def chunk_text_stage(expression: Any, ctx: Context) -> StageFn:
     """Split a text column into overlapping WORD-window chunks (training
     context windows / RAG passages): ``{input, size, overlap?, as}`` ->

@@ -20,7 +20,7 @@ from ..expressions import ExprContext, compile_expr
 from ..pipeline import StageFn, register_stage
 
 
-@register_stage("$tokenCount")
+@register_stage("$tokenCount", "per_batch")
 def token_count_stage(expression: Any, ctx: Context) -> StageFn:
     """Token counting: ``{input, as, mode: whitespace|bpe, tokenizer?}``.
     ``bpe`` uses a GPT-style pre-tokenizer regex (contractions / letter
@@ -78,7 +78,7 @@ def token_count_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$bpeEncode")
+@register_stage("$bpeEncode", "per_batch")
 def bpe_encode_stage(expression: Any, ctx: Context) -> StageFn:
     """Full BPE tokenization — the artifact a training pipeline
     actually materializes: ``{input, tokenizer: {merges, vocab?}, as?}``
@@ -132,7 +132,7 @@ def bpe_encode_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$bpeDecode")
+@register_stage("$bpeDecode", "per_batch")
 def bpe_decode_stage(expression: Any, ctx: Context) -> StageFn:
     """Invert ``$bpeEncode``: ``{input, as?, tokenizer?, onError?}``
     turns a token array back into text.
@@ -273,7 +273,7 @@ def bpe_decode_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$bpeTrain")
+@register_stage("$bpeTrain", "corpus")
 def bpe_train_stage(expression: Any, ctx: Context) -> StageFn:
     """Learn a BPE merge table FROM the corpus — the in-engine source
     for ``$tokenCount``/``$truncateTokens`` ``tokenizer: {merges}``:
@@ -301,9 +301,6 @@ def bpe_train_stage(expression: Any, ctx: Context) -> StageFn:
             "$bpeTrain needs merges >= 1, minCount >= 1, maxWords >= 1")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from ..operators.extended import _corpus_only
-
-        _corpus_only("$bpeTrain", c)
         from . import bpe as _bpe
 
         _bpe.ship()  # the scanner closure pickles by value

@@ -18,7 +18,7 @@ from pyspark.sql import types as T
 
 from ..context import Context
 from ..expressions import ExprContext, compile_expr
-from ..pipeline import StageFn, register_stage
+from ..pipeline import StageFn, check_kind, register_stage
 
 from . import dp_dedup
 from .dp_dedup import (_annotate_components,
@@ -54,7 +54,7 @@ def cosine_hoisted(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return F.try_divide(vec_dot(a, b), na * nb)
 
 
-@register_stage("$embedDedup")
+@register_stage("$embedDedup", "corpus")
 def embed_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     """Embedding-cosine near-dup removal: ``{input, id, threshold, bits}``.
 
@@ -151,7 +151,7 @@ def embed_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$vectorNormalize")
+@register_stage("$vectorNormalize", "per_batch")
 def vector_normalize_stage(expression: Any, ctx: Context) -> StageFn:
     """Unit-normalize an embedding column: ``{input, as}``.  Zero vectors
     pass through unchanged (same convention as $embedDedup).  Map-only.
@@ -169,7 +169,7 @@ def vector_normalize_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$vectorQuantize")
+@register_stage("$vectorQuantize", "per_batch")
 def vector_quantize_stage(expression: Any, ctx: Context) -> StageFn:
     """Symmetric per-vector int quantization for embedding storage:
     ``{input, as, bits=8}`` -> struct ``{scale: double, q: array<int>}``
@@ -201,7 +201,7 @@ def vector_quantize_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$vectorDequantize")
+@register_stage("$vectorDequantize", "per_batch")
 def vector_dequantize_stage(expression: Any, ctx: Context) -> StageFn:
     """Inverse of $vectorQuantize: ``{input, as}`` — the ``{scale, q}``
     struct back to ``array<double>``.  Map-only."""
@@ -216,7 +216,7 @@ def vector_dequantize_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$annTopK")
+@register_stage("$annTopK", "batch")
 def ann_topk_stage(expression: Any, ctx: Context) -> StageFn:
     """Brute-force cosine top-k: ``{queries: <collection>, input, id, k, as}``.
 
@@ -336,7 +336,7 @@ def lsh_bucket(emb: Column, bits: int, dim: int) -> Column:
     return value
 
 
-@register_stage("$annLsh")
+@register_stage("$annLsh", "per_batch")
 def ann_lsh_stage(expression: Any, ctx: Context) -> StageFn:
     """LSH-bucketed ANN: adds a sign-bit bucket column for a seeded set of
     md5-derived hyperplanes: ``{input, as, bits, dim}``.  Candidate search
@@ -354,7 +354,7 @@ def ann_lsh_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$annLshSearch")
+@register_stage("$annLshSearch", "batch")
 def ann_lsh_search_stage(expression: Any, ctx: Context) -> StageFn:
     """The 100 TB ANN path: ``{queries, input, id, k, bits, dim, probes}``.
 
@@ -421,7 +421,7 @@ def ann_lsh_search_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$annIvfSearch")
+@register_stage("$annIvfSearch", "batch")
 def ann_ivf_search_stage(expression: Any, ctx: Context) -> StageFn:
     """IVF-flat ANN: ``{queries, input, id, k, nlist, nprobe}``.
 
@@ -612,7 +612,7 @@ def _lloyd_centroids(
     return cents
 
 
-@register_stage("$kmeans")
+@register_stage("$kmeans", "batch")
 def kmeans_stage(expression: Any, ctx: Context) -> StageFn:
     """Lloyd k-means over an embedding column: ``{input, id, k,
     iterations, as, distanceAs?}`` — labels every row with its final
@@ -649,9 +649,6 @@ def kmeans_stage(expression: Any, ctx: Context) -> StageFn:
     dist_as = expression.get("distanceAs")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from ..operators.extended import _batch_only
-
-        _batch_only("$kmeans", c)
         emb = compile_expr(inp, ExprContext(schema=df.schema)).cast("array<double>")
         pts = df.withColumn("__km_e", emb)
         cents = _lloyd_centroids(pts, id_field, k, iterations)
@@ -666,7 +663,7 @@ def kmeans_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$semanticDedup")
+@register_stage("$semanticDedup", "corpus")
 def semantic_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): ``{input, id, k, iterations?, threshold?, keep?,
@@ -722,9 +719,6 @@ def semantic_dedup_stage(expression: Any, ctx: Context) -> StageFn:
         keep = "minId" if transitive else "far"
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from ..operators.extended import _corpus_only
-
-        _corpus_only("$semanticDedup", c)
         emb = compile_expr(inp, ExprContext(schema=df.schema)).cast("array<double>")
         # r13: same single-scan-task hazard as $embedDedup — the cell
         # pair join and the per-row dist2/assignment algebra fan out
@@ -783,7 +777,7 @@ def semantic_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$knnJoin")
+@register_stage("$knnJoin", "per_batch")
 def knn_join_stage(expression: Any, ctx: Context) -> StageFn:
     """k-NN JOIN: ``{from?, input, id, foreignInput?, foreignId?, k, bits,
     dim, probes, excludeSelf?}`` — every LEFT document finds its ``k``
@@ -812,6 +806,8 @@ def knn_join_stage(expression: Any, ctx: Context) -> StageFn:
     quadratic, only for tests/oracles and small corpora.
     """
     from_coll = expression.get("from")
+    if from_coll is None:  # a self-join pairs rows across the input
+        check_kind("$knnJoin", "batch", ctx)
     inp = expression["input"]
     id_field = expression.get("id", "_id")
     fin = expression.get("foreignInput", inp)
@@ -825,9 +821,6 @@ def knn_join_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, c: Context) -> DataFrame:
         from pyspark.sql import Window
 
-        from ..operators.extended import _batch_only
-
-        _batch_only("$knnJoin", c)
         left_emb = compile_expr(inp, ExprContext(schema=df.schema)).cast(
             "array<double>"
         )

@@ -45,7 +45,7 @@ VSCORE = "__meta_vectorSearchScore"
 SSCORE = "__meta_searchScore"
 
 
-@register_stage("$vectorSearch")
+@register_stage("$vectorSearch", "batch")
 def vector_search_stage(expression: Any, ctx: Context) -> StageFn:
     """``{index?, path, queryVector, numCandidates?, limit, filter?,
     exact?, bits?}`` — Atlas $vectorSearch syntax.
@@ -69,10 +69,6 @@ def vector_search_stage(expression: Any, ctx: Context) -> StageFn:
     bits = int(expression.get("bits", 8))
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from .extended import _batch_only
-
-        # top-k emission is a global sort + limit
-        _batch_only("$vectorSearch", c)
         ectx = ExprContext(schema=df.schema)
         if flt:
             df = df.filter(compile_match(flt, ectx))
@@ -1183,7 +1179,7 @@ def _bm25_prepare(df: DataFrame, query: str, paths: Any, tag: str,
     return out, F.expr(f"0.0D + {score_sql}"), drops
 
 
-@register_stage("$search")
+@register_stage("$search", "batch")
 def search_stage(expression: Any, ctx: Context) -> StageFn:
     """``{index?, <operator>: {...}}`` — the Atlas $search surface:
     ``text`` (BM25-scored, k1=1.2, b=0.75; ``synonyms: "name"`` expands
@@ -1246,10 +1242,6 @@ def search_stage(expression: Any, ctx: Context) -> StageFn:
         raise ValueError("$search sort takes a non-empty sort document")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from .extended import _batch_only
-
-        # score-ordered emission is a global sort
-        _batch_only("$search", c)
         out, pred, score, drops = _search_clause(df, op, spec, [0], c)
         # filter on the raw predicate FIRST: a plain boolean conjunction
         # splits into conjuncts and the pushable ones (range bounds,
@@ -1456,7 +1448,7 @@ def _facet_bucket_col(df: DataFrame, name: str, spec: dict) -> DataFrame:
     )
 
 
-@register_stage("$searchMeta")
+@register_stage("$searchMeta", "batch")
 def search_meta_stage(expression: Any, ctx: Context) -> StageFn:
     """``{index?, <operator>: {...}, count?: {type}}`` or the facet form
     ``{facet: {operator?: {...}, facets: {name: {type, path, ...}}}}`` —
@@ -1483,10 +1475,6 @@ def search_meta_stage(expression: Any, ctx: Context) -> StageFn:
             )
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from .extended import _batch_only
-
-        # corpus-wide counts/facets assembled with broadcast cross joins
-        _batch_only("$searchMeta", c)
         if facet is None:
             filt = _meta_filtered(df, expression, c)
             return filt.groupBy().agg(
@@ -1511,7 +1499,7 @@ def search_meta_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$geoNear")
+@register_stage("$geoNear", "batch")
 def geo_near_stage(expression: Any, ctx: Context) -> StageFn:
     """MongoDB-core ``$geoNear``: ``{near, distanceField, key, query?,
     minDistance?, maxDistance?, distanceMultiplier?, includeLocs?,
@@ -1551,10 +1539,7 @@ def geo_near_stage(expression: Any, ctx: Context) -> StageFn:
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
         from ..paths import set_path
-        from .extended import _batch_only
 
-        # nearest-first emission is a global sort
-        _batch_only("$geoNear", c)
         lon, lat = _geo_lonlat(df, key)
         dist = _haversine_m(lon, lat, olon, olat)
         pred = lon.isNotNull() & lat.isNotNull()

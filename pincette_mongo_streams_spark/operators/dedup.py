@@ -30,7 +30,7 @@ from ..expressions import ExprContext, compile_expr
 from ..pipeline import StageFn, register_stage
 
 
-@register_stage("$deduplicate")
+@register_stage("$deduplicate", "plan")
 def deduplicate_stage(expression: Any, ctx: Context) -> StageFn:
     if isinstance(expression, dict):
         value_expr = expression["expression"]

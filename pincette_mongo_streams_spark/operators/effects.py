@@ -99,7 +99,7 @@ def _pin_once(df: DataFrame, c: Context) -> DataFrame:
     return df
 
 
-@register_stage("$send")
+@register_stage("$send", "per_batch")
 def send_stage(expression: Any, ctx: Context) -> StageFn:
     topic_expr = expression["topic"] if isinstance(expression, dict) else expression
 
@@ -113,7 +113,7 @@ def send_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$delay")
+@register_stage("$delay", "per_batch")
 def delay_stage(expression: Any, ctx: Context) -> StageFn:
     """``{duration, topic, delayTopic?}``.  The reference schedules an
     in-process send after ``duration`` ms and drops the message
@@ -183,7 +183,7 @@ def delay_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$delayRelease")
+@register_stage("$delayRelease", "per_batch")
 def delay_release_stage(expression: Any, ctx: Context) -> StageFn:
     """Consumer half of the ``$delay`` retry-topic pattern (engine
     extension): input rows are ``{deliverAt, topic, doc}`` envelopes.
@@ -204,7 +204,7 @@ def delay_release_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$probe")
+@register_stage("$probe", "per_batch")
 def probe_stage(expression: Any, ctx: Context) -> StageFn:
     """Passthrough tap emitting ``{name, minute, count}`` (Probe.java:
     43-78).  Batch run: one count per run (minute = epoch minute int).
@@ -243,7 +243,7 @@ def probe_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$per")
+@register_stage("$per", "aggregate")
 def per_stage(expression: Any, ctx: Context) -> StageFn:
     amount = expression["amount"]
     as_field = expression.get("as", "messages")
@@ -398,7 +398,7 @@ def _per_streaming(df: DataFrame, amount: int, as_field: str,
     )
 
 
-@register_stage("$throttle")
+@register_stage("$throttle", "plan")
 def throttle_stage(expression: Any, ctx: Context) -> StageFn:
     max_per_second = expression["maxPerSecond"]
     if not isinstance(max_per_second, int) or max_per_second <= 0:
@@ -544,7 +544,7 @@ def _make_transport(ssl_spec: Optional[dict]):
 _default_transport = _make_transport(None)
 
 
-@register_stage("$http")
+@register_stage("$http", "per_batch")
 def http_stage(expression: Any, ctx: Context) -> StageFn:
     as_field = expression.get("as")
     unwind = bool(expression.get("unwind", False))

@@ -6,7 +6,10 @@ SURVEY.md §2.2): ``$sort``, ``$limit``, ``$skip``, ``$sample``, ``$facet``,
 ``$sortByCount``, ``$unionWith``, ``$setWindowFields``, ``$fill``,
 ``$densify``.  A MongoDB user switching to this engine still runs them in
 *batch* pipelines, so they are implemented here with public-MongoDB
-semantics on native Spark operators (sort -> global orderBy which Catalyst
+semantics; the kind each one declares in ``register_stage`` (the table in
+pipeline.py, listed in README.md) says whether it also streams —
+``$sortByCount`` does, as an update-mode aggregate.  They run on native
+Spark operators (sort -> global orderBy which Catalyst
 collapses to TakeOrderedAndProject under a following $limit; window fields
 -> Spark window functions; densify -> sequence + anti-join union).
 
@@ -41,58 +44,31 @@ def _sort_cols(sort_by: dict[str, int]) -> list[Column]:
     return cols
 
 
-def _batch_only(name: str, c: Context) -> None:
-    if c.streaming:
-        raise ValueError(
-            f"{name} is batch-only (the reference excludes it from infinite "
-            "streams — Pipeline.java:31-32)"
-        )
-
-
-def _corpus_only(name: str, c: Context) -> None:
-    """Stricter than :func:`_batch_only`: also refuses inside a
-    foreachBatch micro-batch (``c.micro_batch``).  The streaming runtime
-    deliberately re-enters stage compilers with ``streaming=False`` per
-    micro-batch — fine for per-batch semantics ($asOfJoin against a
-    static side is a pinned feature) but a SILENT WRONG ANSWER for
-    corpus-wide operators, which would quietly compute within-batch
-    results (r6 advisor finding: default-mode $dsirScore fit its source
-    model per micro-batch)."""
-    if c.streaming or getattr(c, "micro_batch", False):
-        raise ValueError(
-            f"{name} is corpus-wide and batch-only: a streaming "
-            "micro-batch would silently compute within-batch results"
-        )
-
-
-@register_stage("$sort")
+@register_stage("$sort", "batch")
 def sort_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _batch_only("$sort", c)
         return df.orderBy(*_sort_cols(expression))
 
     return fn
 
 
-@register_stage("$limit")
+@register_stage("$limit", "batch")
 def limit_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _batch_only("$limit", c)
         return df.limit(int(expression))
 
     return fn
 
 
-@register_stage("$skip")
+@register_stage("$skip", "batch")
 def skip_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _batch_only("$skip", c)
         return df.offset(int(expression))
 
     return fn
 
 
-@register_stage("$sample")
+@register_stage("$sample", "batch")
 def sample_stage(expression: Any, ctx: Context) -> StageFn:
     """``{size: n}`` = MongoDB's random-n, EXACT count.  r6 scale path
     (Spark's own ``RDD.takeSample`` shape as DataFrame ops): count the
@@ -116,7 +92,6 @@ def sample_stage(expression: Any, ctx: Context) -> StageFn:
     fraction = expression.get("fraction")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _batch_only("$sample", c)
         seed = expression.get("seed")
         if fraction is not None:
             # keyword fraction=: the positional form binds to
@@ -147,7 +122,7 @@ def sample_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$sortByCount")
+@register_stage("$sortByCount", "aggregate")
 def sort_by_count_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, c: Context) -> DataFrame:
         key = compile_expr(expression, ExprContext(schema=df.schema))
@@ -159,7 +134,7 @@ def sort_by_count_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$unionWith")
+@register_stage("$unionWith", "batch")
 def union_with_stage(expression: Any, ctx: Context) -> StageFn:
     if isinstance(expression, str):
         coll, sub = expression, None
@@ -179,7 +154,7 @@ def union_with_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$rankFusion")
+@register_stage("$rankFusion", "batch")
 def rank_fusion_stage(expression: Any, ctx: Context) -> StageFn:
     """Hybrid-search reciprocal rank fusion (MongoDB 8.0's $rankFusion):
     ``{input: {pipelines: {name: [...stages]}}, combination: {weights},
@@ -208,7 +183,6 @@ def rank_fusion_stage(expression: Any, ctx: Context) -> StageFn:
         raise ValueError("$rankFusion needs at least one input pipeline")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _batch_only("$rankFusion", c)
         fused: Optional[DataFrame] = None
         contribs = []
         for name, sub in pipelines.items():
@@ -284,7 +258,7 @@ def _fusion_top(
     return local.orderBy(*order)
 
 
-@register_stage("$scoreFusion")
+@register_stage("$scoreFusion", "batch")
 def score_fusion_stage(expression: Any, ctx: Context) -> StageFn:
     """Score-based hybrid search (the shape of MongoDB 8.2's $scoreFusion):
     ``{input: {pipelines: {name: [...]}, normalization}, combination:
@@ -309,7 +283,6 @@ def score_fusion_stage(expression: Any, ctx: Context) -> StageFn:
         raise ValueError("$scoreFusion needs at least one input pipeline")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _batch_only("$scoreFusion", c)
         fused: Optional[DataFrame] = None
         names = list(pipelines)
         for name in names:
@@ -355,7 +328,7 @@ def score_fusion_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$facet")
+@register_stage("$facet", "batch")
 def facet_stage(expression: Any, ctx: Context) -> StageFn:
     """Each facet sub-pipeline runs over the same input; the output is ONE
     document with each facet's results as an array field.  Spark shape: one
@@ -363,7 +336,6 @@ def facet_stage(expression: Any, ctx: Context) -> StageFn:
     are 1-row — broadcast, no shuffle)."""
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _batch_only("$facet", c)
         out: Optional[DataFrame] = None
         for name, sub in expression.items():
             res = compile_pipeline(sub, c)(df)
@@ -507,14 +479,13 @@ _WINDOW_AGGS = {
 }
 
 
-@register_stage("$setWindowFields")
+@register_stage("$setWindowFields", "batch")
 def set_window_fields_stage(expression: Any, ctx: Context) -> StageFn:
     partition_by = expression.get("partitionBy")
     sort_by = expression.get("sortBy")
     output = expression["output"]
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _batch_only("$setWindowFields", c)
         ectx = ExprContext(schema=df.schema)
         base = (
             Window.partitionBy(compile_expr(partition_by, ectx))
@@ -759,14 +730,13 @@ def set_window_fields_stage(expression: Any, ctx: Context) -> StageFn:
 # ---------------------------------------------------------- $fill/$densify
 
 
-@register_stage("$fill")
+@register_stage("$fill", "batch")
 def fill_stage(expression: Any, ctx: Context) -> StageFn:
     partition_by = expression.get("partitionBy")
     sort_by = expression.get("sortBy")
     output = expression["output"]
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _batch_only("$fill", c)
         ectx = ExprContext(schema=df.schema)
         out = df
         needs_window = any("method" in spec for spec in output.values())
@@ -836,7 +806,7 @@ def fill_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$densify")
+@register_stage("$densify", "batch")
 def densify_stage(expression: Any, ctx: Context) -> StageFn:
     """Insert documents so `field` has no gaps of more than `step`:
     grid = sequence(lo, hi, step) per partition, minus values already
@@ -864,7 +834,6 @@ def densify_stage(expression: Any, ctx: Context) -> StageFn:
     )
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _batch_only("$densify", c)
         fcol = F.col(field)
         if bounds in ("full", "partition"):
             lo, hi = F.min(fcol), F.max(fcol)
@@ -927,7 +896,7 @@ def densify_stage(expression: Any, ctx: Context) -> StageFn:
 # ------------------------------------------------- $windowGroup (extension)
 
 
-@register_stage("$windowGroup")
+@register_stage("$windowGroup", "aggregate")
 def window_group_stage(expression: Any, ctx: Context) -> StageFn:
     """Event-time tumbling/sliding window aggregation (engine extension —
     the reference has no event time at all, SURVEY.md §1).  Spec:
@@ -966,7 +935,7 @@ def window_group_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$sessionWindow")
+@register_stage("$sessionWindow", "aggregate")
 def session_window_stage(expression: Any, ctx: Context) -> StageFn:
     """Event-time SESSION window aggregation (engine extension — the gap
     variant $windowGroup's fixed windows can't express).  Spec:
@@ -1013,7 +982,7 @@ def session_window_stage(expression: Any, ctx: Context) -> StageFn:
 # ---------------------------------------------------------- $graphLookup
 
 
-@register_stage("$graphLookup")
+@register_stage("$graphLookup", "batch")
 def graph_lookup_stage(expression: Any, ctx: Context) -> StageFn:
     """Recursive graph traversal over a collection (MongoDB $graphLookup;
     absent from the reference — SURVEY.md §2.2).  Distributed BFS: each
@@ -1033,7 +1002,6 @@ def graph_lookup_stage(expression: Any, ctx: Context) -> StageFn:
     restrict = expression.get("restrictSearchWithMatch")
 
     def fn(df: DataFrame, c: Context) -> StageFn:
-        _batch_only("$graphLookup", c)
         src = c.collection(from_coll)
         if restrict:
             src = src.filter(compile_match(restrict, ExprContext(schema=src.schema)))
@@ -1207,7 +1175,7 @@ def _series_round(x: float, granularity: str, up: bool) -> float:
     return max(c for c in candidates if c <= x + eps)
 
 
-@register_stage("$bucketAuto")
+@register_stage("$bucketAuto", "batch")
 def bucket_auto_stage(expression: Any, ctx: Context) -> StageFn:
     """Even-count bucketing (MongoDB $bucketAuto, absent from the
     reference): ntile(buckets) over the groupBy expression, one window
@@ -1234,7 +1202,6 @@ def bucket_auto_stage(expression: Any, ctx: Context) -> StageFn:
     granularity = expression.get("granularity")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _batch_only("$bucketAuto", c)
         ectx = ExprContext(schema=df.schema)
         gb = compile_expr(group_by, ectx)
         w = Window.orderBy(gb)
@@ -1322,7 +1289,7 @@ def bucket_auto_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$documents")
+@register_stage("$documents", "batch")
 def documents_stage(expression: Any, ctx: Context) -> StageFn:
     """Inline literal documents as the pipeline source (MongoDB 5.1
     $documents).  Replaces the incoming frame with a broadcast-sized

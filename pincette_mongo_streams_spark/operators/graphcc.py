@@ -110,7 +110,7 @@ def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFram
     )
 
 
-@register_stage("$connectedComponents")
+@register_stage("$connectedComponents", "batch")
 def connected_components_stage(expression: Any, ctx: Context) -> StageFn:
     """``{edges, src, dst, on, as, maxIterations}`` — label every input
     document with the connected-component id (the minimum node id of its
@@ -125,9 +125,6 @@ def connected_components_stage(expression: Any, ctx: Context) -> StageFn:
     max_iter = int(expression.get("maxIterations", 50))
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from .extended import _batch_only
-
-        _batch_only("$connectedComponents", c)
         e = c.collection(edges_coll)
         sctx = ExprContext(schema=e.schema)
         edge_df = e.select(
@@ -216,7 +213,7 @@ def page_rank(edges: DataFrame, damping: float, iterations: int) -> DataFrame:
                         F.col("__r").alias("__pr_rank"))
 
 
-@register_stage("$pageRank")
+@register_stage("$pageRank", "batch")
 def page_rank_stage(expression: Any, ctx: Context) -> StageFn:
     """``{edges, src, dst, on, as, damping?, iterations?}`` — label every
     input document with the PageRank of its ``on`` value in the directed
@@ -238,9 +235,6 @@ def page_rank_stage(expression: Any, ctx: Context) -> StageFn:
         raise ValueError("$pageRank needs at least one iteration")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from .extended import _batch_only
-
-        _batch_only("$pageRank", c)
         e = c.collection(edges_coll)
         sctx = ExprContext(schema=e.schema)
         edge_df = e.select(

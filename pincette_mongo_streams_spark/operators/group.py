@@ -348,7 +348,7 @@ def _simple_group_sql(
     return (f"SELECT {', '.join(sel)} FROM {{df}} GROUP BY `{key}`")
 
 
-@register_stage("$group")
+@register_stage("$group", "aggregate")
 def group_stage(expression: Any, ctx: Context) -> StageFn:
     id_expr = expression["_id"]
     accumulators = {k: v for k, v in expression.items() if k not in ("_id", "_collection")}
@@ -400,7 +400,7 @@ def group_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$bucket")
+@register_stage("$bucket", "aggregate")
 def bucket_stage(expression: Any, ctx: Context) -> StageFn:
     group_by = expression["groupBy"]
     boundaries = expression["boundaries"]
@@ -512,7 +512,7 @@ def bucket_stage(expression: Any, ctx: Context) -> StageFn:
     return group_stage(rewritten, ctx)
 
 
-@register_stage("$count")
+@register_stage("$count", "aggregate")
 def count_stage(expression: Any, ctx: Context) -> StageFn:
     if not isinstance(expression, str) or not expression:
         raise ValueError("$count takes a field name (Count.java:27-41)")

@@ -286,20 +286,6 @@ def _call(name, args, dot, env) -> Any:
     return fn([_ev(a, dot, env) for a in args], args, dot, env)
 
 
-def _type_of(v):
-    if v is None:
-        return "null"
-    if isinstance(v, bool):
-        return "boolean"
-    if isinstance(v, (int, float)):
-        return "number"
-    if isinstance(v, str):
-        return "string"
-    if isinstance(v, list):
-        return "array"
-    return "object"
-
-
 def _size(v):
     if v is None:
         return None

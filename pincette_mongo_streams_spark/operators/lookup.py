@@ -150,7 +150,7 @@ def _substitute_vars(node: Any, bindings: dict[str, Any]) -> Any:
     return node
 
 
-@register_stage("$lookup")
+@register_stage("$lookup", "plan")
 def lookup_stage(expression: Any, ctx: Context) -> StageFn:
     as_field = expression["as"]
     inner = bool(expression.get("inner", False))

@@ -170,7 +170,7 @@ def _apply_update_pipeline(
     return fields
 
 
-@register_stage("$merge")
+@register_stage("$merge", "per_batch")
 def merge_stage(expression: Any, ctx: Context) -> StageFn:
     if isinstance(expression, str):
         expression = {"into": expression}
@@ -290,7 +290,7 @@ def merge_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$out")
+@register_stage("$out", "per_batch")
 def out_stage(expression: Any, ctx: Context) -> StageFn:
     # sugar (Out.java:29-41)
     coll = expression if isinstance(expression, str) else expression["coll"]
@@ -299,7 +299,7 @@ def out_stage(expression: Any, ctx: Context) -> StageFn:
     )
 
 
-@register_stage("$delete")
+@register_stage("$delete", "per_batch")
 def delete_stage(expression: Any, ctx: Context) -> StageFn:
     from_coll = expression["from"]
     on = _on_fields(expression)

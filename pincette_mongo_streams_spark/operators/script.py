@@ -281,11 +281,11 @@ def _jq_udf(df: DataFrame, script: str, functions=None,
     return _script_udf(df, run_one)
 
 
-@register_stage("$jq")
+@register_stage("$jq", "per_batch")
 def jq_stage(expression: Any, ctx: Context) -> StageFn:
     return _script_stage("jq", expression, ctx)
 
 
-@register_stage("$jslt")
+@register_stage("$jslt", "per_batch")
 def jslt_stage(expression: Any, ctx: Context) -> StageFn:
     return _script_stage("jslt", expression, ctx)

@@ -55,7 +55,7 @@ def _rekey_on_id(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------- $match
 
 
-@register_stage("$match")
+@register_stage("$match", "plan")
 def match_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, _c: Context) -> DataFrame:
         return df.filter(compile_match(expression, _ectx(df)))
@@ -148,7 +148,7 @@ def _include_columns(
     return cols
 
 
-@register_stage("$project")
+@register_stage("$project", "plan")
 def project_stage(expression: Any, ctx: Context) -> StageFn:
     mode, entries = _parse_project(expression)
 
@@ -285,8 +285,8 @@ def _addfields_batchable(expression: dict) -> bool:
     return True
 
 
-@register_stage("$addFields")
-@register_stage("$set")
+@register_stage("$addFields", "plan")
+@register_stage("$set", "plan")
 def add_fields_stage(expression: Any, ctx: Context) -> StageFn:
     batchable = isinstance(expression, dict) and _addfields_batchable(expression)
 
@@ -314,7 +314,7 @@ def add_fields_stage(expression: Any, ctx: Context) -> StageFn:
 # ----------------------------------------------------------------- $unset
 
 
-@register_stage("$unset")
+@register_stage("$unset", "plan")
 def unset_stage(expression: Any, ctx: Context) -> StageFn:
     paths = expression if isinstance(expression, list) else [expression]
 
@@ -330,7 +330,7 @@ def unset_stage(expression: Any, ctx: Context) -> StageFn:
 # ------------------------------------------- $replaceWith / $replaceRoot
 
 
-@register_stage("$replaceWith")
+@register_stage("$replaceWith", "plan")
 def replace_with_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, _c: Context) -> DataFrame:
         compiled = compile_expr(expression, _ectx(df))
@@ -349,7 +349,7 @@ def replace_with_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$replaceRoot")
+@register_stage("$replaceRoot", "plan")
 def replace_root_stage(expression: Any, ctx: Context) -> StageFn:
     # sugar for $replaceWith (ReplaceRoot.java:21-26)
     return replace_with_stage(expression["newRoot"], ctx)
@@ -358,7 +358,7 @@ def replace_root_stage(expression: Any, ctx: Context) -> StageFn:
 # ---------------------------------------------------------------- $setKey
 
 
-@register_stage("$setKey")
+@register_stage("$setKey", "plan")
 def set_key_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, _c: Context) -> DataFrame:
         return df.withColumn(KEY_COL, compile_expr(expression, _ectx(df)).cast("string"))
@@ -369,7 +369,7 @@ def set_key_stage(expression: Any, ctx: Context) -> StageFn:
 # ---------------------------------------------------------------- $unwind
 
 
-@register_stage("$unwind")
+@register_stage("$unwind", "plan")
 def unwind_stage(expression: Any, ctx: Context) -> StageFn:
     if isinstance(expression, str):
         spec = {"path": expression}
@@ -458,7 +458,7 @@ def _redact_value(expr: Any, t: T.DataType, col: Column) -> Column:
     return col
 
 
-@register_stage("$redact")
+@register_stage("$redact", "plan")
 def redact_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, _c: Context) -> DataFrame:
         root_decision = compile_expr(expression, _redact_ctx(df.schema, None))
@@ -482,7 +482,7 @@ def redact_stage(expression: Any, ctx: Context) -> StageFn:
 # ------------------------------------------------------ $trace/$backTrace
 
 
-@register_stage("$trace")
+@register_stage("$trace", "plan")
 def trace_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, _c: Context) -> DataFrame:
         # The reference logs every document at INFO (Trace.java:25-40).  A
@@ -498,7 +498,7 @@ def trace_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$backTrace")
+@register_stage("$backTrace", "plan")
 def back_trace_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, _c: Context) -> DataFrame:
         return df  # backpressure introspection is engine-internal in Spark

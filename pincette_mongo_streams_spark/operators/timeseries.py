@@ -36,7 +36,7 @@ from ..expressions import ExprContext, compile_expr
 from ..pipeline import StageFn, register_stage
 
 
-@register_stage("$asOfJoin")
+@register_stage("$asOfJoin", "per_batch")
 def as_of_join_stage(expression: Any, ctx: Context) -> StageFn:
     """``{from, on, leftTime, rightTime, as, direction?, strict?,
     tolerance?, inner?}`` — ``on`` is a field name or list of names
@@ -61,9 +61,6 @@ def as_of_join_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, c: Context) -> DataFrame:
         from pyspark.sql import Window
 
-        from .extended import _batch_only
-
-        _batch_only("$asOfJoin", c)
         right = c.collection(from_coll)
         lt = compile_expr(left_time, ExprContext(schema=df.schema))
         rt = compile_expr(right_time, ExprContext(schema=right.schema))
@@ -124,7 +121,7 @@ def as_of_join_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$rangeJoin")
+@register_stage("$rangeJoin", "per_batch")
 def range_join_stage(expression: Any, ctx: Context) -> StageFn:
     """``{from, on?, leftValue, rightStart, rightEnd, as, binSize,
     preserveUnmatched?}`` — join every left document to the right

@@ -30,11 +30,10 @@ from pyspark.sql import functions as F
 
 from ..context import Context
 from ..paths import nested_col, split_path
-from ..pipeline import StageFn, register_stage
-from .extended import _batch_only
+from ..pipeline import StageFn, check_kind, register_stage
 
 
-@register_stage("$hint")
+@register_stage("$hint", "per_batch")
 def hint_stage(expression: Any, ctx: Context) -> StageFn:
     if not isinstance(expression, dict) or not expression:
         raise ValueError("$hint takes a non-empty option document")
@@ -53,6 +52,9 @@ def hint_stage(expression: Any, ctx: Context) -> StageFn:
             raise ValueError(
                 "$hint repartition object form needs 'by' fields"
             )
+    for option in ("coalesce", "cache"):
+        if expression.get(option):
+            check_kind(f"$hint {option}", "batch", ctx)
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
         out = df
@@ -68,21 +70,19 @@ def hint_stage(expression: Any, ctx: Context) -> StageFn:
                 out = out.repartition(int(rp))
         co = expression.get("coalesce")
         if co is not None:
-            _batch_only("$hint coalesce", c)
             out = out.coalesce(int(co))
         if expression.get("rebalance"):
             out = out.hint("rebalance")
         if expression.get("broadcast"):
             out = F.broadcast(out)
         if expression.get("cache"):
-            _batch_only("$hint cache", c)
             out = out.cache()
         return out
 
     return fn
 
 
-@register_stage("$explain")
+@register_stage("$explain", "batch")
 def explain_stage(expression: Any, ctx: Context) -> StageFn:
     """Replace the stream with ONE row holding the upstream plan:
     ``{mode?: "simple" | "extended" | "codegen" | "cost" | "formatted"}``
@@ -102,7 +102,6 @@ def explain_stage(expression: Any, ctx: Context) -> StageFn:
         raise ValueError(f"unknown $explain mode {mode!r}")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        _batch_only("$explain", c)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), mode
         )
@@ -113,7 +112,7 @@ def explain_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-@register_stage("$sql")
+@register_stage("$sql", "per_batch")
 def sql_stage(expression: Any, ctx: Context) -> StageFn:
     """Spark-SQL escape hatch: run a SQL statement over the pipeline's
     current frame — ``"SELECT ... FROM {this}"`` or ``{query, views?}``

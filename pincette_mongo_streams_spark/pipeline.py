@@ -23,12 +23,28 @@ from .features import active_features
 StageFn = Callable[[DataFrame, Context], DataFrame]
 StageCompiler = Callable[[Any, Context], StageFn]
 
+# Every stage declares one streaming kind; run_streaming splits a
+# pipeline by it and compile_stage checks it:
+#   plan       folds into the streaming plan
+#   aggregate  a plan stage that puts the query in update output mode
+#   per_batch  runs per micro-batch inside foreachBatch: the union of its
+#              per-batch outputs equals its output over the union of the
+#              inputs (row-local, a join against a static side, an effect)
+#   batch      no meaning on an infinite stream (Pipeline.java:31-32)
+#   corpus     the output claims to describe the whole input
+KINDS = ("plan", "aggregate", "per_batch", "batch", "corpus")
+
 _STAGES: dict[str, StageCompiler] = {}
+_KINDS: dict[str, str] = {}
 
 
-def register_stage(name: str) -> Callable[[StageCompiler], StageCompiler]:
+def register_stage(name: str, kind: str) -> Callable[[StageCompiler], StageCompiler]:
+    if kind not in KINDS:
+        raise ValueError(f"{name}: unknown stage kind {kind!r}, use {KINDS}")
+
     def deco(fn: StageCompiler) -> StageCompiler:
         _STAGES[name] = fn
+        _KINDS[name] = kind
         return fn
 
     return deco
@@ -38,12 +54,35 @@ def stage_names() -> list[str]:
     return sorted(_STAGES)
 
 
+def stage_kind(name: str) -> str:
+    """The declared kind; ``Context.stage_extensions`` run per batch."""
+    return _KINDS.get(name, "per_batch")
+
+
+def check_kind(name: str, kind: str, ctx: Context) -> None:
+    """Refuse a ``batch`` or ``corpus`` stage in a streaming plan or a
+    foreachBatch micro-batch, where it would silently compute a
+    within-batch answer."""
+    if not (ctx.streaming or ctx.micro_batch):
+        return
+    if kind == "batch":
+        raise ValueError(
+            f"{name} is batch-only (the reference excludes it from infinite "
+            "streams — Pipeline.java:31-32)"
+        )
+    if kind == "corpus":
+        raise ValueError(
+            f"{name} is corpus-wide and batch-only: a streaming "
+            "micro-batch would silently compute within-batch results"
+        )
+
+
 def compile_stage(name: str, expression: Any, ctx: Context) -> StageFn:
+    # built-ins win over extensions (Pipeline.java:275-276)
     compiler = _STAGES.get(name) or ctx.stage_extensions.get(name)
-    if name in _STAGES:  # built-ins win over extensions (Pipeline.java:275-276)
-        compiler = _STAGES[name]
     if compiler is None:
         raise ValueError(f"unknown pipeline stage {name!r}")
+    check_kind(name, stage_kind(name), ctx)
     return compiler(expression, ctx)
 
 

@@ -25,24 +25,3 @@ def has_broadcast(df: DataFrame) -> bool:
 def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
-
-def has_python_eval(df: DataFrame) -> bool:
-    """True when any Python-eval node is in the physical plan — the
-    SCALE.md invariant-1 check (only $http/$decodeMedia may trip it)."""
-    plan = executed_plan(df)
-    return any(
-        m in plan
-        for m in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                  "FlatMapGroupsInPandas")
-    )
-
-
-def exchange_count(df: DataFrame) -> int:
-    """Number of shuffle exchanges in the executed plan (broadcast
-    exchanges excluded) — the thing to minimize at 100 TB."""
-    plan = executed_plan(df)
-    return sum(
-        1
-        for line in plan.splitlines()
-        if "Exchange" in line and "BroadcastExchange" not in line
-    )

@@ -2,19 +2,20 @@
 
 The reference runs one infinite push/pull chain with MongoDB-backed state
 (SURVEY.md §3).  Here the same compiled pipeline runs over an unbounded
-DataFrame; state lives in Spark's state store:
+DataFrame; state lives in Spark's state store.  Each stage's declared
+streaming kind (``register_stage(name, kind)``, pipeline.py) decides
+where it runs:
 
-- ``$group``/``$bucket``/``$count`` -> update output mode.  The reference
-  emits the whole updated group doc per *state-changing input message*
-  (Group.java:176-186,423-430); update mode emits changed groups per
-  *micro-batch* — the documented granularity difference (SURVEY.md §2.4).
-- ``$deduplicate`` -> ``dropDuplicatesWithinWatermark`` when an event-time
-  column + watermark are configured, else ``dropDuplicates`` (state grows
-  unboundedly, exactly like the reference's collection layer without TTL).
-- effect stages ($send/$merge/$delete/...) run inside ``foreachBatch``
-  where each micro-batch is a batch DataFrame, so the SAME stage compilers
-  serve both modes — one code path, two runtimes (SURVEY.md §7 design
-  stance).
+- the leading ``plan``/``aggregate`` stages fold into the streaming
+  plan; an ``aggregate`` stage puts the query in update output mode,
+  which emits changed groups per *micro-batch* where the reference
+  emits per *state-changing input message* (Group.java:176-186,423-430
+  — the documented granularity difference, SURVEY.md §2.4);
+- the rest runs inside ``foreachBatch``, where each micro-batch is a
+  batch DataFrame, so the SAME stage compilers serve both modes — one
+  code path, two runtimes (SURVEY.md §7 design stance);
+- ``batch`` and ``corpus`` stages are rejected when the pipeline
+  compiles, before the query starts.
 """
 
 from __future__ import annotations
@@ -25,49 +26,9 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame
 
 from ..context import Context
-from ..pipeline import compile_pipeline
+from ..pipeline import compile_pipeline, stage_kind
 
-# stages that fold into the streaming plan directly (relational, stateful
-# via the state store)
-_PLAN_STAGES = {
-    "$match", "$project", "$addFields", "$set", "$unset", "$replaceRoot",
-    "$replaceWith", "$setKey", "$unwind", "$redact", "$group", "$bucket",
-    "$count", "$deduplicate", "$lookup", "$trace", "$backTrace", "$throttle",
-    "$windowGroup", "$sessionWindow", "$sortByCount", "$per",
-}
-
-_AGG_STAGES = ("$group", "$bucket", "$count", "$windowGroup",
-               "$sessionWindow", "$sortByCount", "$per")
-
-# stages with no meaning on an infinite stream (extended.py _batch_only);
-# rejected here too — otherwise the foreachBatch split would silently run
-# them per micro-batch with ctx.streaming=False
-_BATCH_ONLY_STAGES = {
-    "$sort", "$limit", "$skip", "$sample", "$facet", "$setWindowFields",
-    "$fill", "$densify", "$graphLookup", "$bucketAuto",
-}
-
-# corpus-wide operators: rejected up front AND guarded per micro-batch
-# by extended._corpus_only ($dsirScore joins this set only in its
-# default fit-on-input form — with `sourceFrom` both models are static
-# and it streams).  $profile joined in r9 (carried r7 verdict item):
-# its output CLAIMS to describe the whole input, so a one-batch profile
-# labeled a corpus profile is a silent wrong answer.  $bm25/$tfIdf/
-# $collocations deliberately stay per-batch (README streaming
-# semantics): their outputs are top-k/score rows whose within-batch
-# stats fit a windowed-retrieval reading, and they never claim
-# corpus-wide scope.
-_CORPUS_ONLY_STAGES = {"$spanDedup", "$semanticDedup", "$bpeTrain",
-                       "$profile", "$bleuCorpus", "$chrfCorpus",
-                       "$werCorpus", "$classificationEval",
-                       "$regressionEval", "$pairedBootstrap",
-                       "$bootstrapCI", "$terCorpus", "$ngramLmTrain",
-                       "$permutationTest",
-                       "$cohenKappa", "$fleissKappa",
-                       "$krippendorffAlpha", "$ksTest",
-                       "$chiSquareTest",
-                       "$corpusDivergence", "$distinctN", "$zipfFit",
-                       "$bradleyTerry"}
+_IN_PLAN = ("plan", "aggregate")
 
 
 def _resolve_state_store(state_store: str) -> tuple[str, str]:
@@ -105,13 +66,14 @@ _STATE_STORE_PROVIDERS = {
 }
 
 
-def _output_mode(pipeline: list[dict]) -> str:
-    names = {next(iter(s)) for s in pipeline}
+def _output_mode(plan_part: list[dict]) -> str:
+    names = {next(iter(s)) for s in plan_part}
     if "$sessionWindow" in names:
         # Spark rejects update mode for session-window aggregations:
         # sessions close on watermark and emit once (append)
         return "append"
-    return "update" if names & set(_AGG_STAGES) else "append"
+    return ("update" if any(stage_kind(n) == "aggregate" for n in names)
+            else "append")
 
 
 def run_streaming(
@@ -130,6 +92,13 @@ def run_streaming(
     """Run ``pipeline`` over a streaming ``source``; ``sink(batch_df,
     epoch)`` receives each output micro-batch (foreachBatch = exactly-once
     with idempotent sinks).  Returns the StreamingQuery.
+
+    The pipeline splits by the streaming kind each stage declares in
+    ``register_stage`` (the table in pipeline.py, listed in README.md):
+    the leading ``plan``/``aggregate`` stages fold into the streaming
+    plan, and the rest compiles once per query and runs per micro-batch
+    inside ``foreachBatch``.  A ``batch`` or ``corpus`` stage raises
+    while the pipeline compiles, before the query starts.
 
     ``suppress_unchanged`` reproduces the reference's emission-diff
     protocol (Group.java:176-186: identical group updates are not
@@ -177,31 +146,11 @@ def run_streaming(
     per-batch volumes the commit overhead dominates (measured r7,
     BENCH_AB_r07.md: the per-message bench runs 1.8x faster at 8
     partitions than 32 on 12.5k-event batches).  Same session-conf
-    discipline as ``state_store``: applied after validation, captured
-    in ``restore_state_store_conf``."""
-    for stage in pipeline:
-        name = next(iter(stage))
-        if name in _BATCH_ONLY_STAGES:
-            raise ValueError(
-                f"{name} is batch-only (the reference excludes it from "
-                "infinite streams — Pipeline.java:31-32)"
-            )
-        if name in _CORPUS_ONLY_STAGES or (
-            name == "$dsirScore"
-            and "sourceFrom" not in (stage[name] or {})
-        ):
-            # corpus-wide semantics: running per micro-batch inside
-            # foreachBatch would silently compute within-batch results
-            # (the stage compilers enforce this too via _corpus_only —
-            # this up-front check just fails at submit time, not first
-            # batch)
-            raise ValueError(
-                f"{name} is corpus-wide and batch-only: a streaming "
-                "micro-batch would silently compute within-batch results"
-            )
-    # set the state-store conf only after validation (a rejected pipeline
-    # must not leave the session mutated), remembering the prior values
-    # for the restore helper attached to the returned query
+    discipline as ``state_store``: put back if the pipeline is rejected,
+    captured in ``restore_state_store_conf``."""
+    # set the state-store conf, remembering the prior values for the
+    # restore helper attached to the returned query; a pipeline rejected
+    # below puts them back before raising
     prior_conf: dict[str, Optional[str]] = {}
     conf_sets: list[tuple[str, str]] = []
     if state_store is not None:
@@ -234,7 +183,9 @@ def run_streaming(
     # writer.start() (watermark setup, plan compile, suppress-state
     # reload, the start itself) can raise — without this guard the
     # mutated session conf would leak, since the restore closure
-    # only ever attaches to a successfully returned query
+    # only ever attaches to a successfully returned query; a rejected
+    # pipeline also leaves the caller's Context flags as they were
+    prior_flags = (ctx.streaming, ctx.watermark)
     try:
         ctx.streaming = True
         ctx.watermark = watermark
@@ -259,7 +210,7 @@ def run_streaming(
                 raise ValueError("per_message emission needs a $group stage")
             pre = pipeline[:gidx]
             for stage in pre:
-                if next(iter(stage)) not in _PLAN_STAGES:
+                if stage_kind(next(iter(stage))) not in _IN_PLAN:
                     raise ValueError(
                         f"{next(iter(stage))} cannot precede a per-message "
                         "$group (plan stages only)"
@@ -279,15 +230,22 @@ def run_streaming(
         elif emission != "per_batch":
             raise ValueError(f"unknown emission mode {emission!r}")
         else:
-            split = len(pipeline)
-            for i, stage in enumerate(pipeline):
-                if next(iter(stage)) not in _PLAN_STAGES:
-                    split = i
-                    break
+            split = next((i for i, s in enumerate(pipeline)
+                          if stage_kind(next(iter(s))) not in _IN_PLAN),
+                         len(pipeline))
             plan_part, batch_part = pipeline[:split], pipeline[split:]
             transformed = (
                 compile_pipeline(plan_part, ctx)(source) if plan_part else source
             )
+        # inside foreachBatch everything is batch, but stages with
+        # cross-batch accumulators (the minute probe) and collection writes
+        # see the stream context.  A copy, so a failing batch leaves the
+        # caller's flags alone; collections and probe_state stay shared,
+        # so targets carry across batches and to the caller
+        batch_ctx = dataclasses.replace(ctx, streaming=False,
+                                        micro_batch=True)
+        run_batch = (compile_pipeline(batch_part, batch_ctx) if batch_part
+                     else lambda df: df)
         last_emitted: list = [None]  # distributed last-emission DataFrame
         deltas_since_compact: list = [0]
         state_dir = (f"{checkpoint}/suppress_state"
@@ -311,14 +269,7 @@ def run_streaming(
                 last_emitted[0] = None  # first start: no persisted state
 
         def process(batch_df: DataFrame, epoch: int) -> None:
-            # inside foreachBatch everything is batch, but stages with
-            # cross-batch accumulators ($probe rollover) and collection
-            # writes see the stream context.  A copy, so a failing batch
-            # leaves the caller's flags alone; collections and probe_state
-            # stay shared, so targets carry across batches and to the caller
-            batch_ctx = dataclasses.replace(ctx, streaming=False,
-                                            micro_batch=True)
-            out = compile_pipeline(batch_part, batch_ctx)(batch_df) if batch_part else batch_df
+            out = run_batch(batch_df)
             if suppress_unchanged:
                 cols = out.columns
                 if "_id" not in cols:
@@ -383,6 +334,7 @@ def run_streaming(
         query = writer.start()
     except BaseException:
         _restore()
+        ctx.streaming, ctx.watermark = prior_flags
         raise
 
     query.restore_state_store_conf = _restore

@@ -36,3 +36,19 @@ def test_expression_count_claim_is_current():
     assert int(m.group(1)) == len(OPERATORS), (
         f"README claims {m.group(1)} expression operators, registry "
         f"has {len(OPERATORS)}")
+
+
+def test_streaming_kind_lists_match_registry():
+    """README's per-kind lists are the registry's declared kinds."""
+    from pincette_mongo_streams_spark.pipeline import KINDS, stage_kind
+
+    text = open(README).read()
+    for kind in KINDS:
+        m = re.search(rf"^- `{kind}` \((\d+)\):((?:.*\n)(?:  .*\n)*)",
+                      text, re.M)
+        assert m, f"README lists no `{kind}` stages"
+        listed = re.findall(r"\$[a-zA-Z0-9]+", m.group(2))
+        want = [s for s in stage_names() if stage_kind(s) == kind]
+        assert sorted(listed) == want and int(m.group(1)) == len(want), (
+            f"README `{kind}` list drifted from the registry: "
+            f"{sorted(set(listed) ^ set(want))}")

@@ -1137,13 +1137,9 @@ def test_corpus_only_stages_rejected_up_front(spark, tmpdir):
     # the per-micro-batch guard itself (defense in depth when a stage
     # compiler is invoked inside foreachBatch directly)
     from pincette_mongo_streams_spark import compile_pipeline
-    from pincette_mongo_streams_spark.operators.extended import \
-        _corpus_only
 
     mb = Context(spark=spark, collections={"tgt": tgt})
     mb.micro_batch = True
-    with pytest.raises(ValueError, match="corpus-wide"):
-        _corpus_only("$spanDedup", mb)
     df = spark.createDataFrame([(1, "t")], "doc_id long, text string")
     with pytest.raises(ValueError, match="corpus-wide"):
         compile_pipeline(
@@ -1533,3 +1529,19 @@ def test_failing_sink_leaves_caller_context_flags(spark, tmpdir):
         q.awaitTermination(120)
     assert ctx.streaming is True and ctx.micro_batch is False
     assert "a" in {r["_id"] for r in ctx.collections["tgt"].collect()}
+
+
+def test_batch_part_compiles_once_per_query(spark, tmpdir):
+    """The foreachBatch part of a pipeline compiles once when the query
+    starts, not again for every micro-batch."""
+    calls = []
+
+    def counted(expression, ctx):
+        calls.append(ctx.micro_batch)
+        return lambda df, c: df
+
+    ctx = Context(spark=spark, stage_extensions={"$counted": counted})
+    out = _run(spark, tmpdir, "v long", [[{"v": 1}], [{"v": 2}], [{"v": 3}]],
+               [{"$match": {"v": {"$gt": 0}}}, {"$counted": {}}], ctx=ctx)
+    assert [sorted(r["v"] for r in rows) for rows in out] == [[1], [2], [3]]
+    assert calls == [True]
