@@ -16,6 +16,7 @@ Invariants pinned besides value-equality:
 import math
 import random
 
+import numpy as np
 import pytest
 
 from pincette_mongo_streams_spark import Context, compile_pipeline
@@ -502,32 +503,40 @@ def _ref_ter(c, r, max_words=250, mss=10, msd=50):
     """Independent implementation of the PINNED $ter semantics
     (maximal-span candidates, align-with-occurrence reinsertion,
     greedy smallest-distance with first-found ties) using a naive
-    full-matrix Levenshtein — no banding, no early exits beyond the
-    documented d == 0 break."""
+    full-matrix Levenshtein — no banding and no early exits.  Each
+    round scores all of its candidates in one numpy pass and takes the
+    first one at the smallest distance, which is what a scan stopping
+    at the first d == 0 picks too."""
     import re as _re
 
     ws = _re.compile(r"[ \t\n\r\f\x0b]+").split
     hyp = [w for w in ws(c) if w][:max_words]
     ref = [w for w in ws(r) if w][:max_words]
+    ids: dict = {}
+    ref_ids = np.array([ids.setdefault(w, len(ids)) for w in ref],
+                       dtype=np.int64)
+    cols = np.arange(len(ref) + 1)
 
-    def lev(a, b):
-        d = [[0] * (len(b) + 1) for _ in range(len(a) + 1)]
-        for i in range(len(a) + 1):
-            d[i][0] = i
-        for j in range(len(b) + 1):
-            d[0][j] = j
-        for i in range(1, len(a) + 1):
-            for j in range(1, len(b) + 1):
-                d[i][j] = min(d[i - 1][j] + 1, d[i][j - 1] + 1,
-                              d[i - 1][j - 1] + (a[i - 1] != b[j - 1]))
-        return d[-1][-1]
+    def lev(cands):
+        # one full matrix per candidate, filled a row at a time for all
+        # candidates together; the left-neighbour term of a row is a
+        # running minimum of (cell - column) plus the column
+        a = np.array([[ids.setdefault(w, len(ids)) for w in x]
+                      for x in cands], dtype=np.int64).reshape(len(cands), -1)
+        prev = np.broadcast_to(cols, (len(cands), len(ref) + 1))
+        for i in range(a.shape[1]):
+            row = np.empty_like(prev)
+            row[:, 0] = i + 1
+            row[:, 1:] = np.minimum(prev[:, 1:] + 1,
+                                    prev[:, :-1] + (a[:, i, None] != ref_ids))
+            prev = np.minimum.accumulate(row - cols, axis=1) + cols
+        return prev[:, -1]
 
-    base = lev(hyp, ref)
+    base = int(lev([hyp])[0])
     shifts = 0
     if ref:
         while base > 0:
-            best = None
-            done = False
+            cands = []
             for i in range(len(hyp)):
                 for k in (k for k, w in enumerate(ref) if w == hyp[i]):
                     if abs(i - k) > msd:
@@ -540,19 +549,15 @@ def _ref_ter(c, r, max_words=250, mss=10, msd=50):
                     at = min(k, len(rest))
                     if at == i:
                         continue
-                    cand = rest[:at] + hyp[i:i + l] + rest[at:]
-                    d = lev(cand, ref)
-                    if d <= base - 1 and (best is None or d < best[0]):
-                        best = (d, cand)
-                if best is not None and best[0] == 0:
-                    done = True
-                    break
-            if best is None:
+                    cands.append(rest[:at] + hyp[i:i + l] + rest[at:])
+            if not cands:
+                break
+            d = lev(cands)
+            best = int(np.argmin(d))  # the first candidate at the minimum
+            if d[best] > base - 1:
                 break
             shifts += 1
-            base, hyp = best
-            if done and base == 0:
-                break
+            base, hyp = int(d[best]), cands[best]
     edits = shifts + base
     if ref:
         t = edits / len(ref)
