@@ -8,13 +8,12 @@ Split out of functions/datapipe.py (r10); the import surface stays
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Optional
+from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..context import Context
 from ..expressions import ExprContext, compile_expr

@@ -10,13 +10,10 @@ from __future__ import annotations
 
 import re as _re
 
-from typing import Any, Iterator, Optional
-
-import pandas as pd
+from typing import Any, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..context import Context, pin
 from ..expressions import ExprContext, compile_expr

@@ -8,7 +8,8 @@ Split out of functions/datapipe.py (r10); the import surface stays
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Optional
+import re
+from typing import Any, Optional
 
 import pandas as pd
 
@@ -1298,6 +1299,266 @@ def meteor_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
+# ------------------------------------------------ corpus metrics, once each
+#
+# BLEU, chrF, WER and TER are each defined ONCE, as a small metric class:
+# its options (defaults in ``options``, checked in ``__init__``), the
+# per-segment sufficient statistics (``stats``), the score computed from
+# those statistics (``score``) and the extra corpus outputs
+# (``report``).  Every corpus metric here is a function of SUMS of
+# per-segment statistics, so each stage is one use of the same record:
+# ``$xCorpus`` returns ``score(Σ stats)``, a bootstrap replicate
+# ``score(Σ w·stats)`` (Koehn 2004's corpus-statistic procedure), and the
+# sentence forms ``score(stats)`` per row.
+
+
+def _stat(i: int, field: str) -> str:
+    """Column holding candidate system ``i``'s per-segment ``field``."""
+    return f"__ev{i}_{field}"
+
+
+def _grams_of(n: int):
+    """One-parameter word-n-gram builder — not a default-arg lambda:
+    F.transform treats a 2-parameter callable as the (element, index)
+    form."""
+    return lambda w: _eval_grams(w, n)
+
+
+def _char_grams(s: Column, n: int) -> Column:
+    """Character n-gram windows.  substring/length are CODEPOINT-correct
+    for every n (a lookahead-regex split would cut UTF-16 surrogate
+    pairs — emoji — into broken halves at n=1, caught by the randomized
+    differential); the when-guard also covers the empty string, where
+    the otherwise-branch avoids a phantom "" gram."""
+    ln = F.length(s)
+    grams = F.transform(F.sequence(F.lit(1), ln - (n - 1)),
+                        lambda i: F.substring(s, i, F.lit(n)))
+    return F.when(ln >= n, grams) \
+        .otherwise(F.array().cast("array<string>"))
+
+
+def _closest_ref_len(lens: Column, c_len: Column) -> Column:
+    """Effective reference length (Papineni 2002 §2.3 "best match
+    length"): the reference length in ``lens`` closest to the
+    candidate's ``c_len``, ties -> the shorter reference (the
+    sacrebleu/NLTK convention)."""
+    return F.aggregate(
+        lens,
+        F.struct(F.lit(None).cast("long").alias("d"),
+                 F.lit(None).cast("long").alias("l")),
+        lambda acc, ln: F.when(
+            acc["l"].isNull()
+            | (F.abs(ln - c_len) < acc["d"])
+            | ((F.abs(ln - c_len) == acc["d"]) & (ln < acc["l"])),
+            F.struct(F.abs(ln - c_len).cast("long").alias("d"),
+                     ln.alias("l")),
+        ).otherwise(acc))["l"]
+
+
+def _reference(who: str, expression: dict, multi_ref: bool):
+    """``(reference, references)`` expressions of a metric spec —
+    exactly one of them, or ``reference`` alone when the metric's
+    statistics are single-reference."""
+    ref_e = expression.get("reference")
+    refs_e = expression.get("references")
+    if not multi_ref:
+        if ref_e is None or refs_e is not None:
+            raise ValueError(
+                f"{who} needs reference (references is not supported: "
+                "chrF statistics are never pooled across references)")
+    elif (ref_e is None) == (refs_e is None):
+        raise ValueError(
+            f"{who} needs exactly one of reference | references")
+    return ref_e, refs_e
+
+
+class _CorpusMetric:
+    """One corpus metric.  Subclasses set ``name`` (the score column),
+    ``options`` (metric option -> default), ``multi_ref`` (the
+    statistics take ``references``) and ``lower_is_better``, and
+    define:
+
+    - ``stats(stage, sctx, cands, ref_e, refs_e) -> (stage, ok,
+      fields)``: adds the per-segment statistic columns
+      ``_stat(i, field)`` for each candidate expression ``cands[i]``
+      against the one reference side (built once, shared by every
+      candidate — the paired bootstrap scores two systems); ``ok`` is
+      the scorable-segment predicate, never read from a Python UDF
+      column (see _EditRate.stats);
+    - ``score(get) -> Column``: the score from the statistics,
+      ``get(field) -> Column`` (per-row values or sums alike);
+    - ``report(get) -> [Column]``: the corpus outputs after the score
+      (``get("n_segments")`` is the scored segment count)."""
+
+    name: str
+    options: dict
+    multi_ref = True
+    lower_is_better = False
+
+    def __init__(self, stage: str, expression: dict):
+        self.opts = {k: expression.get(k, d) for k, d in self.options.items()}
+
+
+class _Bleu(_CorpusMetric):
+    """BLEU statistics per segment: candidate length ``c_len``,
+    effective reference length ``r_len`` and, per order n, the clipped
+    matches ``m<n>`` and candidate gram count ``t<n>``."""
+
+    name = "bleu"
+    options = {"maxN": 4, "maxWords": 2000, "smooth": None,
+               "tokenizer": None}
+
+    def __init__(self, stage: str, expression: dict):
+        super().__init__(stage, expression)
+        self.max_n = int(self.opts["maxN"])
+        self.max_words = int(self.opts["maxWords"])
+        self.smooth = self.opts["smooth"]
+        # r11: tokenizer "13a" (sacrebleu's default) pre-tokenizes both
+        # sides with the mteval-v13a punctuation rules before the
+        # whitespace word split; "none" (default) keeps raw whitespace
+        # words — backward compatible
+        self.tok = _tok_fn(_check_tokenizer(stage, self.opts["tokenizer"]))
+        if not 1 <= self.max_n <= 8:
+            raise ValueError(f"{stage} maxN must be in 1..8")
+        if self.max_words < 1:
+            raise ValueError(f"{stage} maxWords must be >= 1")
+        if self.smooth not in (None, "add1"):
+            raise ValueError(f"{stage} smooth must be 'add1' or absent, "
+                             f"got {self.smooth!r}")
+
+    def stats(self, stage, sctx, cands, ref_e, refs_e):
+        orders = range(1, self.max_n + 1)
+
+        def words(t: Column) -> Column:
+            return _eval_words(self.tok(t), self.max_words)
+
+        cs = [compile_expr(e, sctx) for e in cands]
+        # r14 (guide §1.2, the §2-bootstrap class): dependency-layered
+        # withColumns — one analyzer pass per layer and no stacked
+        # Project copies of the gram arrays at runtime; CollapseProject
+        # gives the same optimized plan as one column at a time.
+        layer1 = {_stat(i, "wc"): words(c) for i, c in enumerate(cs)}
+        if refs_e is not None:
+            refs = compile_expr(refs_e, sctx)
+            layer1["__ev_wrs"] = F.transform(
+                F.filter(refs, lambda r: r.isNotNull()), words)
+            wrs = F.col("__ev_wrs")
+            ok = refs.isNotNull() & (F.size(wrs) > 0)
+            layer2 = {f"__ev_grs{n}": F.transform(wrs, _grams_of(n))
+                      for n in orders}
+        else:
+            ref = compile_expr(ref_e, sctx)
+            layer1["__ev_wr"] = words(ref)
+            ok = ref.isNotNull()
+            layer2 = {f"__ev_gr{n}": _eval_grams(F.col("__ev_wr"), n)
+                      for n in orders}
+        stage = stage.withColumns(layer1)
+        for i in range(len(cs)):
+            layer2.update({_stat(i, f"gc{n}"): _eval_grams(
+                F.col(_stat(i, "wc")), n) for n in orders})
+        stage = stage.withColumns(layer2)
+        layer3 = {}
+        for i, c in enumerate(cs):
+            ok = ok & c.isNotNull()
+            c_len = F.size(F.col(_stat(i, "wc"))).cast("long")
+            for n in orders:
+                gc = F.col(_stat(i, f"gc{n}"))
+                # one clipped-match aggregate per order, materialized as
+                # a temp column (never inlined — $ngramOverlap's CSE
+                # note)
+                layer3[_stat(i, f"m{n}")] = (
+                    _eval_clipped_multi(gc, F.col(f"__ev_grs{n}"))
+                    if refs_e is not None
+                    else _eval_clipped(gc, F.col(f"__ev_gr{n}")))
+                layer3[_stat(i, f"t{n}")] = F.size(gc).cast("long")
+            layer3[_stat(i, "c_len")] = c_len
+            layer3[_stat(i, "r_len")] = (
+                _closest_ref_len(F.transform(
+                    wrs, lambda w: F.size(w).cast("long")), c_len)
+                if refs_e is not None
+                else F.size(F.col("__ev_wr")).cast("long"))
+        fields = (["c_len", "r_len"] + [f"m{n}" for n in orders]
+                  + [f"t{n}" for n in orders])
+        return stage.withColumns(layer3), ok, fields
+
+    def _precision(self, get, n: int):
+        """(p_n, zeroes-the-score) for order n; ``smooth: "add1"``
+        adds one to both sides of the n >= 2 precisions."""
+        m = get(f"m{n}").cast("double")
+        t = get(f"t{n}").cast("double")
+        if self.smooth == "add1" and n >= 2:
+            return (m + 1.0) / (t + 1.0), t == 0.0
+        return m / t, (t == 0.0) | (m == 0.0)
+
+    def _bp(self, get) -> Column:
+        c = get("c_len").cast("double")
+        r = get("r_len").cast("double")
+        return F.when(c >= r, F.lit(1.0)).otherwise(F.exp(1.0 - r / c))
+
+    def score(self, get) -> Column:
+        # zero-precision guard: any order with no candidate grams, or an
+        # unsmoothed order with zero matches, zeroes the whole score
+        zero = F.lit(False)
+        log_sum = F.lit(0.0)
+        for n in range(1, self.max_n + 1):
+            p, z = self._precision(get, n)
+            zero = zero | z
+            log_sum = log_sum + F.log(p) / self.max_n
+        return F.when(zero, F.lit(0.0)) \
+            .otherwise(self._bp(get) * F.exp(log_sum))
+
+    def report(self, get) -> list:
+        return [
+            F.when(get("n_segments") == 0, F.lit(0.0))
+            .otherwise(self._bp(get)).alias("bp"),
+            get("c_len").alias("c_len"), get("r_len").alias("r_len"),
+            get("n_segments").alias("n_segments"),
+            *[F.when(get(f"t{n}").cast("double") == 0.0, F.lit(0.0))
+              .otherwise(self._precision(get, n)[0]).alias(f"p{n}")
+              for n in range(1, self.max_n + 1)]]
+
+
+def _corpus_stage(metric: type, stage_name: str, expression: dict) -> StageFn:
+    """``$xCorpus``: ONE row ``score(Σ stats)`` plus the metric's report
+    columns.  Segments failing the metric's ``ok`` predicate are
+    EXCLUDED from every sum and from ``n_segments``.
+
+    100 TB shape: the per-segment statistics are the sentence form's
+    row-local programs; the reduction is ONE global aggregate whose
+    partial aggregation collapses every task to a single row of
+    longs."""
+    m = metric(stage_name, expression)
+    cand_e = expression["candidate"]
+    ref_e, refs_e = _reference(stage_name, expression, m.multi_ref)
+
+    def fn(df: DataFrame, c: Context) -> DataFrame:
+        # r13: heavy per-row column program — fan a single-scan-task
+        # corpus out across cores first (dp_dedup._spread's row-group
+        # gate makes this a no-op for already-wide real-scale inputs)
+        df = _spread(df)
+        sctx = ExprContext(schema=df.schema)
+        stage, ok, fields = m.stats(df, sctx, [cand_e], ref_e, refs_e)
+        zero_l = F.lit(0).cast("long")
+        row = stage.filter(ok).agg(
+            F.count(F.lit(1)).alias("n_segments"),
+            *[F.coalesce(F.sum(_stat(0, f)), zero_l).alias(f)
+              for f in fields])
+        return row.select(m.score(F.col).alias(m.name), *m.report(F.col))
+
+    return fn
+
+
+def _sentence_score(m: _CorpusMetric, df: DataFrame, sctx: ExprContext,
+                    cand_e: Any, ref_e: Any, refs_e: Any,
+                    as_field: str) -> DataFrame:
+    """A sentence form: ``score(stats)`` per row, null where the row is
+    not scorable."""
+    stage, ok, _ = m.stats(df, sctx, [cand_e], ref_e, refs_e)
+    temps = [c for c in stage.columns if c not in df.columns]
+    score = m.score(lambda f: F.col(_stat(0, f)))
+    return stage.withColumn(as_field, F.when(ok, score)).drop(*temps)
+
+
 @register_stage("$bleu", "per_batch")
 def bleu_stage(expression: Any, ctx: Context) -> StageFn:
     """Sentence-level BLEU (Papineni et al. 2002): ``{candidate,
@@ -1333,122 +1594,18 @@ def bleu_stage(expression: Any, ctx: Context) -> StageFn:
     (never inlined — see $ngramOverlap's CSE note), zero shuffle —
     multi-reference adds one nested transform per order, still fully
     JVM-side."""
+    m = _Bleu("$bleu", expression)
     cand_e = expression["candidate"]
-    ref_e = expression.get("reference")
-    refs_e = expression.get("references")
-    if (ref_e is None) == (refs_e is None):
-        raise ValueError(
-            "$bleu needs exactly one of reference | references")
-    max_n = int(expression.get("maxN", 4))
-    max_words = int(expression.get("maxWords", 2000))
-    smooth = expression.get("smooth")
+    ref_e, refs_e = _reference("$bleu", expression, True)
     as_field = expression.get("as", "bleu")
-    # r11: tokenizer "13a" (sacrebleu's default) pre-tokenizes both
-    # sides with the mteval-v13a punctuation rules before the
-    # whitespace word split; "none" (default) keeps raw whitespace
-    # words — backward compatible
-    tokenizer = _check_tokenizer("$bleu", expression.get("tokenizer"))
-    if not 1 <= max_n <= 8:
-        raise ValueError("$bleu maxN must be in 1..8")
-    if max_words < 1:
-        raise ValueError("$bleu maxWords must be >= 1")
-    if smooth not in (None, "add1"):
-        raise ValueError(f"$bleu smooth must be 'add1' or absent, "
-                         f"got {smooth!r}")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
         # r13: heavy per-row column program — fan a single-scan-task
         # corpus out across cores first (dp_dedup._spread's row-group
         # gate makes this a no-op for already-wide real-scale inputs)
         df = _spread(df)
-        sctx = ExprContext(schema=df.schema)
-        cand = compile_expr(cand_e, sctx)
-        cand = _tok_fn(tokenizer)(cand)
-        # r14 (guide §1.2, the §2-bootstrap class): dependency-layered
-        # withColumns — one analyzer pass per layer and no stacked
-        # Project copies of the gram arrays at runtime; identical
-        # columns and expressions.
-        tok = _tok_fn(tokenizer)
-        layer1 = {"__bleu_wc": _eval_words(cand, max_words)}
-        wc = F.col("__bleu_wc")
-        if refs_e is not None:
-            refs = compile_expr(refs_e, sctx)
-            layer1["__bleu_wrs"] = F.transform(
-                F.filter(refs, lambda r: r.isNotNull()),
-                lambda r: _eval_words(tok(r), max_words))
-            wrs = F.col("__bleu_wrs")
-            null_in = cand.isNull() | refs.isNull() | (F.size(wrs) == 0)
-        else:
-            ref = compile_expr(ref_e, sctx)
-            layer1["__bleu_wr"] = _eval_words(tok(ref), max_words)
-            null_in = cand.isNull() | ref.isNull()
-        wr = F.col("__bleu_wr")
-        stage = df.withColumns(layer1)
-        temps = list(layer1)
-        layer2: dict = {}
-
-        def _grams_of(_n: int):
-            # not a default-arg lambda: F.transform treats a 2-param
-            # callable as the (element, index) form
-            return lambda w: _eval_grams(w, _n)
-
-        for n in range(1, max_n + 1):
-            layer2[f"__bleu_gc{n}"] = _eval_grams(wc, n)
-            if refs_e is not None:
-                layer2[f"__bleu_grs{n}"] = F.transform(wrs, _grams_of(n))
-            else:
-                layer2[f"__bleu_gr{n}"] = _eval_grams(wr, n)
-        stage = stage.withColumns(layer2)
-        temps += list(layer2)
-        layer3 = {}
-        for n in range(1, max_n + 1):
-            if refs_e is not None:
-                layer3[f"__bleu_m{n}"] = _eval_clipped_multi(
-                    F.col(f"__bleu_gc{n}"), F.col(f"__bleu_grs{n}"))
-            else:
-                layer3[f"__bleu_m{n}"] = _eval_clipped(
-                    F.col(f"__bleu_gc{n}"), F.col(f"__bleu_gr{n}"))
-        stage = stage.withColumns(layer3)
-        temps += list(layer3)
-        # zero-precision guard: any order with no candidate grams, or an
-        # unsmoothed order with zero matches, zeroes the whole score
-        zero = F.lit(False)
-        log_sum = F.lit(0.0)
-        for n in range(1, max_n + 1):
-            cnt = F.size(F.col(f"__bleu_gc{n}")).cast("double")
-            m = F.col(f"__bleu_m{n}").cast("double")
-            if smooth == "add1" and n >= 2:
-                p = (m + 1.0) / (cnt + 1.0)
-                zero = zero | (cnt == 0.0)
-            else:
-                p = m / cnt
-                zero = zero | (cnt == 0.0) | (m == 0.0)
-            log_sum = log_sum + F.log(p) / max_n
-        c_len = F.size(wc).cast("double")
-        if refs_e is not None:
-            # effective reference length: closest to the candidate's,
-            # ties -> shorter (Papineni 2002 §2.3 "best match length")
-            c_len_l = F.size(wc).cast("long")
-            best = F.aggregate(
-                F.transform(wrs, lambda w: F.size(w).cast("long")),
-                F.struct(F.lit(None).cast("long").alias("d"),
-                         F.lit(None).cast("long").alias("l")),
-                lambda acc, ln: F.when(
-                    acc["l"].isNull()
-                    | (F.abs(ln - c_len_l) < acc["d"])
-                    | ((F.abs(ln - c_len_l) == acc["d"])
-                       & (ln < acc["l"])),
-                    F.struct(F.abs(ln - c_len_l).cast("long").alias("d"),
-                             ln.alias("l")),
-                ).otherwise(acc))
-            r_len = best["l"].cast("double")
-        else:
-            r_len = F.size(wr).cast("double")
-        bp = F.when(c_len >= r_len, F.lit(1.0)) \
-            .otherwise(F.exp(1.0 - r_len / c_len))
-        score = F.when(zero, F.lit(0.0)).otherwise(bp * F.exp(log_sum))
-        out = F.when(null_in, F.lit(None).cast("double")).otherwise(score)
-        return stage.withColumn(as_field, out).drop(*temps)
+        return _sentence_score(m, df, ExprContext(schema=df.schema),
+                               cand_e, ref_e, refs_e, as_field)
 
     return fn
 
@@ -1470,135 +1627,195 @@ def bleu_corpus_stage(expression: Any, ctx: Context) -> StageFn:
     (and from n_segments), matching how eval harnesses drop unscorable
     pairs.
 
-    CORPUS-ONLY: this is a corpus-wide aggregate — inside a
-    foreachBatch re-entry it would silently score one micro-batch and
-    label it the corpus score, so it is gated exactly like $profile.
-
     100 TB shape: the per-segment clipped counts are the same
     row-local, zero-shuffle HOF programs as $bleu; the corpus reduction
     is ONE global aggregate whose partial aggregation collapses every
     task to a single row of 2·maxN+3 longs — nothing else moves."""
-    cand_e = expression["candidate"]
-    ref_e = expression.get("reference")
-    refs_e = expression.get("references")
-    if (ref_e is None) == (refs_e is None):
-        raise ValueError(
-            "$bleuCorpus needs exactly one of reference | references")
-    max_n = int(expression.get("maxN", 4))
+    return _corpus_stage(_Bleu, "$bleuCorpus", expression)
+
+
+_CHRFPP_PUNCT = r"[\x21-\x2f\x3a-\x40\x5b-\x60\x7b-\x7e]"
+
+
+def _chrfpp_tokens(t: Column, max_words: int) -> Column:
+    """chrF++ word tokenization (Popović 2017, chrF++.py
+    ``separate_punctuation``, which sacrebleu adapts for its
+    ``word_order`` statistics): whitespace words, then ONE level of
+    edge-punctuation splitting — a word longer than one char whose LAST
+    char is punctuation splits into (head, punct); else whose FIRST
+    char is punctuation splits into (punct, tail); interior punctuation
+    stays attached and the split never recurses ("(word)" ->
+    ["(word", ")"], exactly the reference script's quirk).  Punctuation
+    is ASCII ``string.punctuation``, written as hex ranges for
+    Java/RE2/Python three-way parity."""
+    words = F.filter(F.split(F.trim(t), r"\s+"), lambda x: x != F.lit(""))
+
+    def split_word(w: Column) -> Column:
+        ln = F.length(w)
+        first = F.substring(w, 1, 1)
+        last = F.substring(w, -1, 1)
+        return (
+            F.when((ln > 1) & last.rlike(_CHRFPP_PUNCT),
+                   F.array(F.substring(w, F.lit(1), ln - 1), last))
+            .when((ln > 1) & first.rlike(_CHRFPP_PUNCT),
+                  F.array(first, F.substring(w, F.lit(2), ln - 1)))
+            .otherwise(F.array(w)))
+
+    return F.slice(F.flatten(F.transform(words, split_word)), 1, max_words)
+
+
+def _check_word_order(stage: str, expression: dict) -> tuple[int, int]:
+    """Validate the chrF++ options: ``wordOrder`` (default 0 = plain
+    chrF; 2 = chrF++ as reported by MT papers) and the word-side cost
+    cap ``maxWords`` (default 2000, like the BLEU family)."""
+    word_order = int(expression.get("wordOrder", 0))
     max_words = int(expression.get("maxWords", 2000))
-    smooth = expression.get("smooth")
-    # r11: sacrebleu's default 13a tokenization, like $bleu
-    tokenizer = _check_tokenizer("$bleuCorpus", expression.get("tokenizer"))
-    if not 1 <= max_n <= 8:
-        raise ValueError("$bleuCorpus maxN must be in 1..8")
+    if not 0 <= word_order <= 4:
+        raise ValueError(f"{stage} wordOrder must be in 0..4")
     if max_words < 1:
-        raise ValueError("$bleuCorpus maxWords must be >= 1")
-    if smooth not in (None, "add1"):
-        raise ValueError(f"$bleuCorpus smooth must be 'add1' or absent, "
-                         f"got {smooth!r}")
+        raise ValueError(f"{stage} maxWords must be >= 1")
+    return word_order, max_words
 
-    def fn(df: DataFrame, c: Context) -> DataFrame:
-        # r13: heavy per-row column program — fan a single-scan-task
-        # corpus out across cores first (dp_dedup._spread's row-group
-        # gate makes this a no-op for already-wide real-scale inputs)
-        df = _spread(df)
-        sctx = ExprContext(schema=df.schema)
-        cand = compile_expr(cand_e, sctx)
-        tok = _tok_fn(tokenizer)
-        stage = df.withColumn("__blc_wc",
-                              _eval_words(tok(cand), max_words))
-        wc = F.col("__blc_wc")
-        if refs_e is not None:
-            refs = compile_expr(refs_e, sctx)
-            stage = stage.withColumn(
-                "__blc_wrs",
-                F.transform(F.filter(refs, lambda r: r.isNotNull()),
-                            lambda r: _eval_words(tok(r), max_words)))
-            wrs = F.col("__blc_wrs")
-            scorable = cand.isNotNull() & refs.isNotNull() \
-                & (F.size(wrs) > 0)
-        else:
-            ref = compile_expr(ref_e, sctx)
-            stage = stage.withColumn("__blc_wr",
-                                     _eval_words(tok(ref), max_words))
-            scorable = cand.isNotNull() & ref.isNotNull()
-        wr = F.col("__blc_wr")
-        stage = stage.filter(scorable)
-        for n in range(1, max_n + 1):
-            gc_n, m_n = f"__blc_gc{n}", f"__blc_m{n}"
-            stage = stage.withColumn(gc_n, _eval_grams(wc, n))
-            if refs_e is not None:
-                grs_n = f"__blc_grs{n}"
-                stage = stage.withColumn(
-                    grs_n, F.transform(wrs, lambda w: _eval_grams(w, n)))
-                stage = stage.withColumn(
-                    m_n, _eval_clipped_multi(F.col(gc_n), F.col(grs_n)))
-            else:
-                gr_n = f"__blc_gr{n}"
-                stage = stage.withColumn(gr_n, _eval_grams(wr, n))
-                stage = stage.withColumn(
-                    m_n, _eval_clipped(F.col(gc_n), F.col(gr_n)))
-        c_len_l = F.size(wc).cast("long")
-        if refs_e is not None:
-            # per-segment effective reference length (Papineni §2.3)
-            best = F.aggregate(
-                F.transform(wrs, lambda w: F.size(w).cast("long")),
-                F.struct(F.lit(None).cast("long").alias("d"),
-                         F.lit(None).cast("long").alias("l")),
-                lambda acc, ln: F.when(
-                    acc["l"].isNull()
-                    | (F.abs(ln - c_len_l) < acc["d"])
-                    | ((F.abs(ln - c_len_l) == acc["d"])
-                       & (ln < acc["l"])),
-                    F.struct(F.abs(ln - c_len_l).cast("long").alias("d"),
-                             ln.alias("l")),
-                ).otherwise(acc))
-            r_len_seg = best["l"]
-        else:
-            r_len_seg = F.size(wr).cast("long")
-        zero_l = F.lit(0).cast("long")
-        aggs = [
-            F.count(F.lit(1)).alias("n_segments"),
-            F.coalesce(F.sum(c_len_l), zero_l).alias("c_len"),
-            F.coalesce(F.sum(r_len_seg), zero_l).alias("r_len"),
-        ]
-        for n in range(1, max_n + 1):
-            aggs += [
-                F.coalesce(F.sum(F.col(f"__blc_m{n}")), zero_l)
-                .alias(f"m{n}"),
-                F.coalesce(
-                    F.sum(F.size(F.col(f"__blc_gc{n}")).cast("long")),
-                    zero_l).alias(f"t{n}"),
-            ]
-        row = stage.agg(*aggs)
-        zero = F.lit(False)
-        log_sum = F.lit(0.0)
-        precs = []
-        for n in range(1, max_n + 1):
-            m = F.col(f"m{n}").cast("double")
-            t = F.col(f"t{n}").cast("double")
-            if smooth == "add1" and n >= 2:
-                p = (m + 1.0) / (t + 1.0)
-                zero = zero | (t == 0.0)
-            else:
-                p = m / t
-                zero = zero | (t == 0.0) | (m == 0.0)
-            precs.append(
-                F.when(t == 0.0, F.lit(0.0)).otherwise(p).alias(f"p{n}"))
-            log_sum = log_sum + F.log(p) / max_n
-        c_tot = F.col("c_len").cast("double")
-        r_tot = F.col("r_len").cast("double")
-        bp = F.when(F.col("n_segments") == 0, F.lit(0.0)) \
-            .when(c_tot >= r_tot, F.lit(1.0)) \
-            .otherwise(F.exp(1.0 - r_tot / c_tot))
-        score = F.when((F.col("n_segments") == 0) | zero, F.lit(0.0)) \
-            .otherwise(bp * F.exp(log_sum))
-        return row.select(
-            score.alias("bleu"), bp.alias("bp"),
-            F.col("c_len"), F.col("r_len"), F.col("n_segments"),
-            *precs)
 
-    return fn
+class _Chrf(_CorpusMetric):
+    """chrF statistics per segment and order: clipped matches
+    ``<k>m<n>``, candidate and reference gram counts ``<k>tc<n>`` /
+    ``<k>tr<n>``, where kind ``k`` is "" for the character orders and
+    "w" for chrF++'s word orders (one statistics pool)."""
+
+    name = "chrf"
+    options = {"maxN": 6, "beta": 2.0, "maxChars": 2000,
+               "formula": "popovic", "wordOrder": 0, "maxWords": 2000}
+    # chrF statistics are never pooled across references (see $chrf's
+    # sacrebleu note); $chrf's multi-reference form takes the max score
+    multi_ref = False
+
+    def __init__(self, stage: str, expression: dict):
+        super().__init__(stage, expression)
+        self.max_n = int(self.opts["maxN"])
+        beta = float(self.opts["beta"])
+        self.max_chars = int(self.opts["maxChars"])
+        # r11: formula "sacrebleu" averages the PER-ORDER F-scores over
+        # orders where BOTH sides have grams (sacrebleu's
+        # _compute_f_score, modulo its x100 scaling); "popovic"
+        # (default) keeps the paper's avg-P/avg-R single-F combination
+        self.formula = self.opts["formula"]
+        if self.formula not in ("popovic", "sacrebleu"):
+            raise ValueError(f"{stage} formula must be popovic|sacrebleu, "
+                             f"got {self.formula!r}")
+        # r12: chrF++ — wordOrder word n-gram orders join the char
+        # orders in the SAME P/R (popovic) or per-order-F (sacrebleu)
+        # average, exactly how chrF++.py and sacrebleu pool the
+        # statistics lists
+        self.word_order, self.wmax_words = _check_word_order(stage, self.opts)
+        if not 1 <= self.max_n <= 10:
+            raise ValueError(f"{stage} maxN must be in 1..10")
+        if beta <= 0:
+            raise ValueError(f"{stage} beta must be > 0")
+        if self.max_chars < 1:
+            raise ValueError(f"{stage} maxChars must be >= 1")
+        self.b2 = beta * beta
+        self.kinds = [""] + (["w"] if self.word_order else [])
+        self.orders = [("", n) for n in range(1, self.max_n + 1)]
+        self.orders += [("w", n) for n in range(1, self.word_order + 1)]
+
+    def unit(self, k: str):
+        """Text -> the units order kind ``k`` counts grams over: the
+        whitespace-stripped, maxChars-capped string for the char
+        orders; chrF++ tokens of the ORIGINAL text for the word
+        orders."""
+        if k:
+            return lambda t: _chrfpp_tokens(t, self.wmax_words)
+        return lambda t: F.substring(
+            F.regexp_replace(t, r"\s+", ""), 1, self.max_chars)
+
+    def grams(self, k: str, n: int):
+        """Units -> the order-n grams of kind ``k`` (one parameter, so
+        F.transform applies it per element)."""
+        if k:
+            return _grams_of(n)
+        return lambda s: _char_grams(s, n)
+
+    def stats(self, stage, sctx, cands, ref_e, refs_e):
+        ref = compile_expr(ref_e, sctx)
+        cs = [compile_expr(e, sctx) for e in cands]
+        # r14 (guide §1.2, the §2-bootstrap class): dependency-layered
+        # withColumns — one analyzer pass per layer over the large
+        # clipped-fold trees instead of ~20 (measured 4.0 s of plan
+        # build at bench config); identical columns and expressions.
+        layer1 = {}
+        for k in self.kinds:
+            layer1[f"__ev_{k}ru"] = self.unit(k)(ref)
+            for i, c in enumerate(cs):
+                layer1[_stat(i, f"{k}u")] = self.unit(k)(c)
+        stage = stage.withColumns(layer1)
+        layer2 = {}
+        for k, n in self.orders:
+            layer2[f"__ev_{k}gr{n}"] = self.grams(k, n)(
+                F.col(f"__ev_{k}ru"))
+            for i in range(len(cs)):
+                layer2[_stat(i, f"{k}gc{n}")] = self.grams(k, n)(
+                    F.col(_stat(i, f"{k}u")))
+        stage = stage.withColumns(layer2)
+        layer3 = {}
+        ok = ref.isNotNull()
+        for i, c in enumerate(cs):
+            ok = ok & c.isNotNull()
+            for k, n in self.orders:
+                gc = F.col(_stat(i, f"{k}gc{n}"))
+                gr = F.col(f"__ev_{k}gr{n}")
+                layer3[_stat(i, f"{k}m{n}")] = _eval_clipped(gc, gr)
+                layer3[_stat(i, f"{k}tc{n}")] = F.size(gc).cast("long")
+                layer3[_stat(i, f"{k}tr{n}")] = F.size(gr).cast("long")
+        fields = [f"{k}{s}{n}" for k, n in self.orders
+                  for s in ("m", "tc", "tr")]
+        return stage.withColumns(layer3), ok, fields
+
+    def _pr(self, get, k: str, n: int):
+        """(m, tc, tr, p, r) of order (k, n); p/r are 0.0 on an empty
+        side."""
+        m = get(f"{k}m{n}").cast("double")
+        tc = get(f"{k}tc{n}").cast("double")
+        tr = get(f"{k}tr{n}").cast("double")
+        return (m, tc, tr,
+                F.when(tc > 0, m / tc).otherwise(F.lit(0.0)),
+                F.when(tr > 0, m / tr).otherwise(F.lit(0.0)))
+
+    def score(self, get) -> Column:
+        b2 = self.b2
+        n_eff = F.lit(0)
+        if self.formula == "sacrebleu":
+            f_sum = F.lit(0.0)
+            for k, n in self.orders:
+                m, tc, tr, _p, _r = self._pr(get, k, n)
+                eff = (tc > 0) & (tr > 0)
+                p, r = m / tc, m / tr
+                f_n = F.when(b2 * p + r > 0.0,
+                             (1 + b2) * p * r / (b2 * p + r)) \
+                    .otherwise(F.lit(0.0))
+                f_sum = f_sum + F.when(eff, f_n).otherwise(F.lit(0.0))
+                n_eff = n_eff + eff.cast("int")
+            return F.when(n_eff == 0, F.lit(0.0)).otherwise(f_sum / n_eff)
+        p_sum = F.lit(0.0)
+        r_sum = F.lit(0.0)
+        for k, n in self.orders:
+            _m, tc, tr, p, r = self._pr(get, k, n)
+            eff = (tc > 0) | (tr > 0)
+            p_sum = p_sum + F.when(eff, p).otherwise(F.lit(0.0))
+            r_sum = r_sum + F.when(eff, r).otherwise(F.lit(0.0))
+            n_eff = n_eff + eff.cast("int")
+        pavg = p_sum / n_eff
+        ravg = r_sum / n_eff
+        return F.when(n_eff == 0, F.lit(0.0)) \
+            .when(pavg + ravg == 0.0, F.lit(0.0)) \
+            .otherwise((1 + b2) * pavg * ravg / (b2 * pavg + ravg))
+
+    def report(self, get) -> list:
+        out = [get("n_segments").alias("n_segments")]
+        for k, n in self.orders:
+            *_mt, p, r = self._pr(get, k, n)
+            out += [p.alias(f"{k}p{n}"), r.alias(f"{k}r{n}")]
+        return out
 
 
 @register_stage("$chrf", "per_batch")
@@ -1659,83 +1876,13 @@ def chrf_stage(expression: Any, ctx: Context) -> StageFn:
     columns), row-local, zero shuffle — identical plan shape to
     $bleu; the multi-reference form adds one nested transform per
     order plus a per-reference score fold, still fully JVM-side."""
+    m = _Chrf("$chrf", expression)
     cand_e = expression["candidate"]
-    ref_e = expression.get("reference")
-    refs_e = expression.get("references")
-    if (ref_e is None) == (refs_e is None):
-        raise ValueError(
-            "$chrf needs exactly one of reference | references")
-    max_n = int(expression.get("maxN", 6))
-    beta = float(expression.get("beta", 2.0))
-    max_chars = int(expression.get("maxChars", 2000))
+    ref_e, refs_e = _reference("$chrf", expression, True)
     as_field = expression.get("as", "chrf")
-    # r11: formula "sacrebleu" removes the documented deviation — it
-    # averages the PER-ORDER F-scores over orders where BOTH sides
-    # have grams (sacrebleu's _compute_f_score, modulo its x100
-    # scaling); "popovic" (default) keeps the paper's avg-P/avg-R
-    # single-F combination, backward compatible
-    formula = expression.get("formula", "popovic")
-    if formula not in ("popovic", "sacrebleu"):
-        raise ValueError(
-            f"$chrf formula must be popovic|sacrebleu, got {formula!r}")
-    # r12: chrF++ — wordOrder word n-gram orders join the char orders
-    # in the SAME P/R (popovic) or per-order-F (sacrebleu) average,
-    # exactly how chrF++.py and sacrebleu pool the statistics lists
-    word_order, wmax_words = _check_word_order("$chrf", expression)
-    if not 1 <= max_n <= 10:
-        raise ValueError("$chrf maxN must be in 1..10")
-    if beta <= 0:
-        raise ValueError("$chrf beta must be > 0")
-    if max_chars < 1:
-        raise ValueError("$chrf maxChars must be >= 1")
-    b2 = beta * beta
 
-    def char_grams(s: Column, n: int) -> Column:
-        # substring/length are CODEPOINT-correct for every n (a
-        # lookahead-regex split would cut UTF-16 surrogate pairs —
-        # emoji — into broken halves at n=1, caught by the randomized
-        # differential); the when-guard also covers the empty string,
-        # where the otherwise-branch avoids a phantom "" gram
-        ln = F.length(s)
-        grams = F.transform(F.sequence(F.lit(1), ln - (n - 1)),
-                            lambda i: F.substring(s, i, F.lit(n)))
-        return F.when(ln >= n, grams) \
-            .otherwise(F.array().cast("array<string>"))
-
-    def one_score(cn_rn_m: list) -> Column:
-        """Combine per-order (cand-count, ref-count, clipped) triples
-        into one chrF score — shared by the scalar and per-reference
-        paths."""
-        if formula == "sacrebleu":
-            f_sum = F.lit(0.0)
-            n_eff = F.lit(0)
-            for cn, rn, m in cn_rn_m:
-                eff = (cn > 0) & (rn > 0)
-                p = m / cn
-                r = m / rn
-                f_n = F.when(b2 * p + r > 0.0,
-                             (1 + b2) * p * r / (b2 * p + r)) \
-                    .otherwise(F.lit(0.0))
-                f_sum = f_sum + F.when(eff, f_n).otherwise(F.lit(0.0))
-                n_eff = n_eff + eff.cast("int")
-            return F.when(n_eff == 0, F.lit(0.0)) \
-                .otherwise(f_sum / n_eff)
-        p_sum = F.lit(0.0)
-        r_sum = F.lit(0.0)
-        n_eff = F.lit(0)
-        for cn, rn, m in cn_rn_m:
-            eff = (cn > 0) | (rn > 0)
-            p_sum = p_sum + F.when(eff & (cn > 0), m / cn) \
-                .otherwise(F.lit(0.0))
-            r_sum = r_sum + F.when(eff & (rn > 0), m / rn) \
-                .otherwise(F.lit(0.0))
-            n_eff = n_eff + eff.cast("int")
-        p = p_sum / n_eff
-        r = r_sum / n_eff
-        return F.when(
-            n_eff == 0, F.lit(0.0),
-        ).when(p + r == 0.0, F.lit(0.0)) \
-            .otherwise((1 + b2) * p * r / (b2 * p + r))
+    def _clip_against(gc_name: str):
+        return lambda g: _eval_clipped(F.col(gc_name), g)
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
         # r13: heavy per-row column program — fan a single-scan-task
@@ -1743,182 +1890,54 @@ def chrf_stage(expression: Any, ctx: Context) -> StageFn:
         # gate makes this a no-op for already-wide real-scale inputs)
         df = _spread(df)
         sctx = ExprContext(schema=df.schema)
+        if refs_e is None:
+            return _sentence_score(m, df, sctx, cand_e, ref_e, None,
+                                   as_field)
         cand = compile_expr(cand_e, sctx)
-        strip = lambda t: F.substring(  # noqa: E731
-            F.regexp_replace(t, r"\s+", ""), 1, max_chars)
-        # r14 (guide §1.2, the §2-bootstrap class): dependency-layered
-        # withColumns — one analyzer pass per layer over the large
-        # clipped-fold trees; identical columns and expressions.
-        layer1 = {"__chrf_sc": strip(cand)}
-        sc = F.col("__chrf_sc")
-        if refs_e is not None:
-            refs = compile_expr(refs_e, sctx)
-            layer1["__chrf_srs"] = F.transform(
-                F.filter(refs, lambda r: r.isNotNull()), strip)
-            srs = F.col("__chrf_srs")
-            if word_order > 0:
-                # word tokens come from the ORIGINAL (unstripped) texts;
-                # the token arrays align index-wise with __chrf_srs
-                # because both run the same null filter
-                layer1["__chrf_wc"] = _chrfpp_tokens(cand, wmax_words)
-                layer1["__chrf_wrs"] = F.transform(
-                    F.filter(refs, lambda r: r.isNotNull()),
-                    lambda r: _chrfpp_tokens(r, wmax_words))
-            stage = df.withColumns(layer1)
-            temps = list(layer1)
+        refs = compile_expr(refs_e, sctx)
+        # per-reference units, grams and clips materialize as array
+        # temp columns (array<array<string>> / array<long>) — the
+        # HOF-CSE rule applied to the multi-ref axis; every kind's unit
+        # array aligns index-wise because each runs the same null
+        # filter over the references
+        layer1 = {}
+        for k in m.kinds:
+            layer1[f"__chrf_{k}c"] = m.unit(k)(cand)
+            layer1[f"__chrf_{k}rs"] = F.transform(
+                F.filter(refs, lambda r: r.isNotNull()), m.unit(k))
+        stage = df.withColumns(layer1)
+        layer2 = {}
+        for k, n in m.orders:
+            layer2[f"__chrf_{k}gc{n}"] = m.grams(k, n)(F.col(f"__chrf_{k}c"))
+            layer2[f"__chrf_{k}grs{n}"] = F.transform(
+                F.col(f"__chrf_{k}rs"), m.grams(k, n))
+        stage = stage.withColumns(layer2)
+        stage = stage.withColumns({
+            f"__chrf_{k}ms{n}": F.transform(
+                F.col(f"__chrf_{k}grs{n}"), _clip_against(f"__chrf_{k}gc{n}"))
+            for k, n in m.orders})
 
-            def _char_grams_of(_n: int):
-                # not default-arg lambdas: F.transform treats a 2-param
-                # callable as the (element, index) form
-                return lambda s: char_grams(s, _n)
+        def ref_score(i: Column) -> Column:
+            st = {}
+            for k, n in m.orders:
+                st[f"{k}m{n}"] = F.element_at(F.col(f"__chrf_{k}ms{n}"), i)
+                st[f"{k}tc{n}"] = F.size(F.col(f"__chrf_{k}gc{n}"))
+                st[f"{k}tr{n}"] = F.size(
+                    F.element_at(F.col(f"__chrf_{k}grs{n}"), i))
+            return m.score(st.__getitem__)
 
-            def _grams_of(_n: int):
-                return lambda w: _eval_grams(w, _n)
-
-            def _clip_against(gc_name: str):
-                return lambda g: _eval_clipped(F.col(gc_name), g)
-
-            layer2 = {}
-            for n in range(1, max_n + 1):
-                layer2[f"__chrf_gc{n}"] = char_grams(sc, n)
-                # per-reference grams and clips materialize as array
-                # temp columns (array<array<string>> / array<long>) —
-                # the HOF-CSE rule applied to the multi-ref axis
-                layer2[f"__chrf_grs{n}"] = F.transform(
-                    srs, _char_grams_of(n))
-            for n in range(1, word_order + 1):
-                layer2[f"__chrf_wgc{n}"] = _eval_grams(
-                    F.col("__chrf_wc"), n)
-                layer2[f"__chrf_wgrs{n}"] = F.transform(
-                    F.col("__chrf_wrs"), _grams_of(n))
-            stage = stage.withColumns(layer2)
-            temps += list(layer2)
-            layer3 = {}
-            for n in range(1, max_n + 1):
-                layer3[f"__chrf_ms{n}"] = F.transform(
-                    F.col(f"__chrf_grs{n}"),
-                    _clip_against(f"__chrf_gc{n}"))
-            for n in range(1, word_order + 1):
-                layer3[f"__chrf_wms{n}"] = F.transform(
-                    F.col(f"__chrf_wgrs{n}"),
-                    _clip_against(f"__chrf_wgc{n}"))
-            stage = stage.withColumns(layer3)
-            temps += list(layer3)
-
-            def ref_score(i: Column) -> Column:
-                triples = []
-                for n in range(1, max_n + 1):
-                    cn = F.size(F.col(f"__chrf_gc{n}")).cast("double")
-                    rn = F.size(
-                        F.element_at(F.col(f"__chrf_grs{n}"), i)
-                    ).cast("double")
-                    m = F.element_at(
-                        F.col(f"__chrf_ms{n}"), i).cast("double")
-                    triples.append((cn, rn, m))
-                for n in range(1, word_order + 1):
-                    cn = F.size(F.col(f"__chrf_wgc{n}")).cast("double")
-                    rn = F.size(
-                        F.element_at(F.col(f"__chrf_wgrs{n}"), i)
-                    ).cast("double")
-                    m = F.element_at(
-                        F.col(f"__chrf_wms{n}"), i).cast("double")
-                    triples.append((cn, rn, m))
-                return one_score(triples)
-
-            # best-matching reference wins (sacrebleu multi-ref: max)
-            score = F.array_max(
-                F.transform(F.sequence(F.lit(1), F.size(srs)),
-                            ref_score))
-            null_in = cand.isNull() | refs.isNull() | (F.size(srs) == 0)
-        else:
-            ref = compile_expr(ref_e, sctx)
-            layer1["__chrf_sr"] = strip(ref)
-            sr = F.col("__chrf_sr")
-            if word_order > 0:
-                layer1["__chrf_wc"] = _chrfpp_tokens(cand, wmax_words)
-                layer1["__chrf_wr"] = _chrfpp_tokens(ref, wmax_words)
-            stage = df.withColumns(layer1)
-            temps = list(layer1)
-            layer2 = {}
-            for n in range(1, max_n + 1):
-                layer2[f"__chrf_gc{n}"] = char_grams(sc, n)
-                layer2[f"__chrf_gr{n}"] = char_grams(sr, n)
-            for n in range(1, word_order + 1):
-                layer2[f"__chrf_wgc{n}"] = _eval_grams(
-                    F.col("__chrf_wc"), n)
-                layer2[f"__chrf_wgr{n}"] = _eval_grams(
-                    F.col("__chrf_wr"), n)
-            stage = stage.withColumns(layer2)
-            temps += list(layer2)
-            layer3 = {}
-            for n in range(1, max_n + 1):
-                layer3[f"__chrf_m{n}"] = _eval_clipped(
-                    F.col(f"__chrf_gc{n}"), F.col(f"__chrf_gr{n}"))
-            for n in range(1, word_order + 1):
-                layer3[f"__chrf_wm{n}"] = _eval_clipped(
-                    F.col(f"__chrf_wgc{n}"), F.col(f"__chrf_wgr{n}"))
-            stage = stage.withColumns(layer3)
-            temps += list(layer3)
-            triples = [
-                (F.size(F.col(f"__chrf_gc{n}")).cast("double"),
-                 F.size(F.col(f"__chrf_gr{n}")).cast("double"),
-                 F.col(f"__chrf_m{n}").cast("double"))
-                for n in range(1, max_n + 1)]
-            triples += [
-                (F.size(F.col(f"__chrf_wgc{n}")).cast("double"),
-                 F.size(F.col(f"__chrf_wgr{n}")).cast("double"),
-                 F.col(f"__chrf_wm{n}").cast("double"))
-                for n in range(1, word_order + 1)]
-            score = one_score(triples)
-            null_in = cand.isNull() | ref.isNull()
-        out = F.when(null_in, F.lit(None).cast("double")) \
-            .otherwise(score)
-        return stage.withColumn(as_field, out).drop(*temps)
+        # best-matching reference wins (sacrebleu multi-ref: max)
+        srs = F.col("__chrf_rs")
+        score = F.array_max(
+            F.transform(F.sequence(F.lit(1), F.size(srs)), ref_score))
+        null_in = cand.isNull() | refs.isNull() | (F.size(srs) == 0)
+        temps = [c for c in stage.columns if c not in df.columns]
+        return stage.withColumn(
+            as_field,
+            F.when(null_in, F.lit(None).cast("double")).otherwise(score),
+        ).drop(*temps)
 
     return fn
-
-
-_CHRFPP_PUNCT = r"[\x21-\x2f\x3a-\x40\x5b-\x60\x7b-\x7e]"
-
-
-def _chrfpp_tokens(t: Column, max_words: int) -> Column:
-    """chrF++ word tokenization (Popović 2017, chrF++.py
-    ``separate_punctuation``, which sacrebleu adapts for its
-    ``word_order`` statistics): whitespace words, then ONE level of
-    edge-punctuation splitting — a word longer than one char whose LAST
-    char is punctuation splits into (head, punct); else whose FIRST
-    char is punctuation splits into (punct, tail); interior punctuation
-    stays attached and the split never recurses ("(word)" ->
-    ["(word", ")"], exactly the reference script's quirk).  Punctuation
-    is ASCII ``string.punctuation``, written as hex ranges for
-    Java/RE2/Python three-way parity."""
-    words = F.filter(F.split(F.trim(t), r"\s+"), lambda x: x != F.lit(""))
-
-    def split_word(w: Column) -> Column:
-        ln = F.length(w)
-        first = F.substring(w, 1, 1)
-        last = F.substring(w, -1, 1)
-        return (
-            F.when((ln > 1) & last.rlike(_CHRFPP_PUNCT),
-                   F.array(F.substring(w, F.lit(1), ln - 1), last))
-            .when((ln > 1) & first.rlike(_CHRFPP_PUNCT),
-                  F.array(first, F.substring(w, F.lit(2), ln - 1)))
-            .otherwise(F.array(w)))
-
-    return F.slice(F.flatten(F.transform(words, split_word)), 1, max_words)
-
-
-def _check_word_order(stage: str, expression: dict) -> tuple[int, int]:
-    """Validate the chrF++ options: ``wordOrder`` (default 0 = plain
-    chrF; 2 = chrF++ as reported by MT papers) and the word-side cost
-    cap ``maxWords`` (default 2000, like the BLEU family)."""
-    word_order = int(expression.get("wordOrder", 0))
-    max_words = int(expression.get("maxWords", 2000))
-    if not 0 <= word_order <= 4:
-        raise ValueError(f"{stage} wordOrder must be in 0..4")
-    if max_words < 1:
-        raise ValueError(f"{stage} maxWords must be >= 1")
-    return word_order, max_words
 
 
 _QA_PUNCT = r"""[!"#$%&'()*+,\-./:;<=>?@\[\\\]^_`{|}~]"""
@@ -2015,8 +2034,8 @@ def qa_eval_stage(expression: Any, ctx: Context) -> StageFn:
 @register_stage("$chrfCorpus", "corpus")
 def chrf_corpus_stage(expression: Any, ctx: Context) -> StageFn:
     """CORPUS-level chrF: ``{candidate, reference, maxN?, beta?,
-    maxChars?}`` -> ONE row ``(chrf, n_segments, p1..p<maxN>,
-    r1..r<maxN>)``.  The AGGREGATION SHAPE matches sacrebleu's
+    maxChars?}`` -> ONE row ``(chrf, n_segments, p1, r1, ..,
+    p<maxN>, r<maxN>)``.  The AGGREGATION SHAPE matches sacrebleu's
     corpus_chrf — sum the per-segment n-gram statistics corpus-wide,
     THEN score (the mean of sentence chrF is a different, noisier
     statistic) — but the final SCORING FORMULA follows the Popović
@@ -2026,39 +2045,169 @@ def chrf_corpus_stage(expression: Any, ctx: Context) -> StageFn:
     sacrebleu's corpus_chrf exactly.  Per order, corpus
     precision/recall = summed clipped matches / summed candidate
     (resp. reference) gram counts; F_beta with beta = 2 default.
-    Segments with a null side are EXCLUDED.  Corpus-only gated like
-    $bleuCorpus/$profile.
+    ``formula: "sacrebleu"`` = per-order F over the POOLED counts,
+    averaged over orders where both pooled sides have grams — exactly
+    sacrebleu's corpus chrF, modulo the x100 scaling.  ``wordOrder``
+    (chrF++) pools the word-gram statistics corpus-wide like the char
+    orders and adds ``wp<n>``/``wr<n>`` columns (only then, so the
+    default schema is unchanged).  Segments with a null side are
+    EXCLUDED.
 
     100 TB shape: per-segment clips are $chrf's row-local zero-shuffle
     HOF programs; the reduction is ONE global partial-aggregated sum to
     a single 3·maxN+1-long row."""
+    return _corpus_stage(_Chrf, "$chrfCorpus", expression)
+
+
+_WER_TYPE = "struct<distance:bigint,wer:double,n_hyp:bigint,n_ref:bigint>"
+_TER_TYPE = ("struct<edits:bigint,ter:double,shifts:bigint,"
+             "n_hyp:bigint,n_ref:bigint>")
+
+
+def _struct_fields(struct_type: str) -> list:
+    """Field names of a ``struct<name:type,...>`` type string."""
+    return re.findall(r"(\w+):", struct_type)
+
+
+def _edit_rate_udf(udf_type: str, max_words: int, edits, multi: bool):
+    """The edit-rate family's ONE Arrow boundary ($wer, $ter and their
+    corpus and bootstrap forms): a Pandas UDF over (candidate,
+    reference) — or (candidate, references) when ``multi`` — returning
+    ``udf_type``: ``(num, rate, *extra, n_hyp, n_ref)`` where
+    ``edits(wc, wr) -> (num, *extra)`` scores two capped word lists and
+    ``rate = num / n_ref``.  An empty reference gives rate 0.0 when the
+    hypothesis is also empty, else a null rate with ``num`` still
+    reported.
+
+    Multi-reference: the BEST reference wins — smallest rate, ties by
+    smallest ``num`` then smallest reference length (the NIST
+    multi-reference convention: error-count of the best-matching
+    reference).  A reference with undefined rate (empty reference,
+    non-empty hypothesis) sorts after every defined one, so it is
+    chosen only when ALL references are undefined.  A null hypothesis
+    or no usable reference gives an all-null row.
+
+    Everything the UDF runs is defined INSIDE this function (and
+    ``edits`` inside its own factory) so cloudpickle serializes it by
+    value — executors never need this package importable (the engine's
+    standing driver-side-only deployment property; a module-level
+    helper would pickle by reference and break sys.path-based runs)."""
+    cols = _struct_fields(udf_type)
+    null_row = (None,) * len(cols)
+    ws_split = re.compile(r"[ \t\n\r\f\x0b]+").split  # Java \s
+
+    def score_one(ct, rt):
+        wc = [w for w in ws_split(ct) if w][:max_words]
+        wr = [w for w in ws_split(rt) if w][:max_words]
+        num, *extra = edits(wc, wr)
+        if wr:
+            rate = num / len(wr)
+        else:
+            rate = 0.0 if not wc else None
+        return (num, rate, *extra, len(wc), len(wr))
+
+    def score_multi(ct, refs):
+        if ct is None:
+            return None
+        best = None
+        for rt in refs:
+            if rt is None:
+                continue
+            v = score_one(ct, rt)
+            key = (v[1] if v[1] is not None else float("inf"), v[0], v[-1])
+            if best is None or key < best[0]:
+                best = (key, v)
+        return None if best is None else best[1]
+
+    @F.pandas_udf(udf_type)
+    def _score(s: pd.Series, t: pd.Series) -> pd.DataFrame:
+        if multi:
+            vals = [None if rs is None else score_multi(ct, list(rs))
+                    for ct, rs in zip(s, t)]
+        else:
+            vals = [None if ct is None or rt is None
+                    else score_one(ct, rt)
+                    for ct, rt in zip(s, t)]
+        return pd.DataFrame(
+            [null_row if v is None else v for v in vals], columns=cols)
+
+    return _score
+
+
+class _EditRate(_CorpusMetric):
+    """Edit-rate statistics per segment: the edit count (``fields[0]``),
+    any extra counts, and the hypothesis/reference lengths, summed over
+    the corpus; the score is Σnum / Σn_ref (lower is better).
+    Subclasses set ``udf_type`` and ``edits()``, the factory of the
+    per-segment ``edits(wc, wr) -> (num, *extra)``."""
+
+    lower_is_better = True
+    udf_type: str
+
+    def __init__(self, stage: str, expression: dict):
+        super().__init__(stage, expression)
+        self.max_words = int(self.opts["maxWords"])
+        self.case_sensitive = bool(self.opts["caseSensitive"])
+        if self.max_words < 1:
+            raise ValueError(f"{stage} maxWords must be >= 1")
+        self.fields = [f for f in _struct_fields(self.udf_type)
+                       if f != self.name]
+
+    def raw(self, cand: Column, ref: Column, multi: bool) -> Column:
+        """The UDF struct for one candidate against ``ref`` (an array
+        of references when ``multi``); ``caseSensitive: false``
+        lowercases both sides first, JVM-side."""
+        if not self.case_sensitive:
+            cand = F.lower(cand)
+            ref = F.transform(ref, F.lower) if multi else F.lower(ref)
+        return _edit_rate_udf(self.udf_type, self.max_words,
+                              self.edits(), multi)(cand, ref)
+
+    def stats(self, stage, sctx, cands, ref_e, refs_e):
+        multi = refs_e is not None
+        ref = compile_expr(refs_e if multi else ref_e, sctx)
+        cs = [compile_expr(e, sctx) for e in cands]
+        stage = stage.withColumns({
+            _stat(i, "raw"): self.raw(c, ref, multi)
+            for i, c in enumerate(cs)})
+        stage = stage.withColumns({
+            _stat(i, f): F.col(_stat(i, "raw"))[f]
+            for i in range(len(cs)) for f in self.fields})
+        # r13: ``ok`` is read from the INPUTS, never as a not-null
+        # filter over the UDF column — pushdown moved such a filter
+        # below the fan-out exchange and ExtractPythonUDFs then
+        # materialized a SECOND, single-task ArrowEvalPython at the scan
+        # (the whole per-segment DP ran twice, once serial: 336 s vs
+        # 283 s for TER at sf0.1).  The UDF returns an all-null row on
+        # exactly these segments.
+        ok = ref.isNotNull()
+        if multi:
+            ok = ok & F.exists(ref, lambda r: r.isNotNull())
+        for c in cs:
+            ok = ok & c.isNotNull()
+        return stage, ok, self.fields
+
+    def score(self, get) -> Column:
+        num = self.fields[0]
+        return F.when(get("n_ref") > 0,
+                      get(num).cast("double") / get("n_ref").cast("double")) \
+            .when(get(num) == 0, F.lit(0.0)) \
+            .otherwise(F.lit(None).cast("double"))
+
+    def report(self, get) -> list:
+        return [get(f).alias(f) for f in self.fields] \
+            + [get("n_segments").alias("n_segments")]
+
+
+def _edit_rate_stage(metric: type, stage_name: str,
+                     expression: dict) -> StageFn:
+    """The $wer/$ter sentence form: the UDF struct per row, a NULL
+    STRUCT (not a struct of nulls) for a null hypothesis or no usable
+    reference."""
+    m = metric(stage_name, expression)
     cand_e = expression["candidate"]
-    ref_e = expression["reference"]
-    max_n = int(expression.get("maxN", 6))
-    beta = float(expression.get("beta", 2.0))
-    max_chars = int(expression.get("maxChars", 2000))
-    # r11: formula "sacrebleu" = per-order F over POOLED counts,
-    # averaged over orders where both pooled sides have grams —
-    # exactly sacrebleu's corpus chrF (its statistics pool across
-    # segments before one _compute_f_score), modulo the x100 scaling
-    formula = expression.get("formula", "popovic")
-    if formula not in ("popovic", "sacrebleu"):
-        raise ValueError(
-            f"$chrfCorpus formula must be popovic|sacrebleu, "
-            f"got {formula!r}")
-    # r12 chrF++: word n-gram orders pool corpus-wide exactly like the
-    # char orders (sacrebleu's corpus chrF2++ sums word-gram statistics
-    # across segments before one _compute_f_score); adds wp{n}/wr{n}
-    # output columns only when wordOrder > 0, so the default schema is
-    # unchanged
-    word_order, wmax_words = _check_word_order("$chrfCorpus", expression)
-    if not 1 <= max_n <= 10:
-        raise ValueError("$chrfCorpus maxN must be in 1..10")
-    if beta <= 0:
-        raise ValueError("$chrfCorpus beta must be > 0")
-    if max_chars < 1:
-        raise ValueError("$chrfCorpus maxChars must be >= 1")
-    b2 = beta * beta
+    ref_e, refs_e = _reference(stage_name, expression, True)
+    as_field = expression.get("as", m.name)
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
         # r13: heavy per-row column program — fan a single-scan-task
@@ -2066,124 +2215,25 @@ def chrf_corpus_stage(expression: Any, ctx: Context) -> StageFn:
         # gate makes this a no-op for already-wide real-scale inputs)
         df = _spread(df)
         sctx = ExprContext(schema=df.schema)
-        cand = compile_expr(cand_e, sctx)
-        ref = compile_expr(ref_e, sctx)
-        strip = lambda t: F.substring(  # noqa: E731
-            F.regexp_replace(t, r"\s+", ""), 1, max_chars)
-
-        def char_grams(s: Column, n: int) -> Column:
-            ln = F.length(s)
-            grams = F.transform(F.sequence(F.lit(1), ln - (n - 1)),
-                                lambda i: F.substring(s, i, F.lit(n)))
-            return F.when(ln >= n, grams) \
-                .otherwise(F.array().cast("array<string>"))
-
-        # r14 (guide §1.2, the §2-bootstrap class): dependency-layered
-        # withColumns — one analyzer pass per layer over the large
-        # clipped-fold trees instead of ~20 (measured 4.0 s of plan
-        # build at bench config); identical columns and expressions.
-        layer1 = {"__chc_sc": strip(cand), "__chc_sr": strip(ref)}
-        if word_order > 0:
-            layer1["__chc_wc"] = _chrfpp_tokens(cand, wmax_words)
-            layer1["__chc_wr"] = _chrfpp_tokens(ref, wmax_words)
-        stage = df.filter(cand.isNotNull() & ref.isNotNull()) \
-            .withColumns(layer1)
-        sc, sr = F.col("__chc_sc"), F.col("__chc_sr")
-        layer2 = {}
-        for n in range(1, max_n + 1):
-            layer2[f"__chc_gc{n}"] = char_grams(sc, n)
-            layer2[f"__chc_gr{n}"] = char_grams(sr, n)
-        for n in range(1, word_order + 1):
-            layer2[f"__chc_wgc{n}"] = _eval_grams(F.col("__chc_wc"), n)
-            layer2[f"__chc_wgr{n}"] = _eval_grams(F.col("__chc_wr"), n)
-        stage = stage.withColumns(layer2)
-        layer3 = {}
-        for n in range(1, max_n + 1):
-            layer3[f"__chc_m{n}"] = _eval_clipped(
-                F.col(f"__chc_gc{n}"), F.col(f"__chc_gr{n}"))
-        for n in range(1, word_order + 1):
-            layer3[f"__chc_wm{n}"] = _eval_clipped(
-                F.col(f"__chc_wgc{n}"), F.col(f"__chc_wgr{n}"))
-        stage = stage.withColumns(layer3)
-        zero_l = F.lit(0).cast("long")
-        aggs = [F.count(F.lit(1)).alias("n_segments")]
-        # (sum-column, cand-total, ref-total, output-prefix) per order:
-        # char orders then word orders — the chrF++ statistics pool
-        orders = [(f"__chc_m{n}", f"__chc_gc{n}", f"__chc_gr{n}",
-                   f"m{n}", f"tc{n}", f"tr{n}", f"p{n}", f"r{n}")
-                  for n in range(1, max_n + 1)]
-        orders += [(f"__chc_wm{n}", f"__chc_wgc{n}", f"__chc_wgr{n}",
-                    f"wm{n}", f"wtc{n}", f"wtr{n}", f"wp{n}", f"wr{n}")
-                   for n in range(1, word_order + 1)]
-        for m_c, gc_c, gr_c, m_a, tc_a, tr_a, _p, _r in orders:
-            aggs += [
-                F.coalesce(F.sum(F.col(m_c)), zero_l).alias(m_a),
-                F.coalesce(F.sum(F.size(F.col(gc_c))
-                                 .cast("long")), zero_l).alias(tc_a),
-                F.coalesce(F.sum(F.size(F.col(gr_c))
-                                 .cast("long")), zero_l).alias(tr_a),
-            ]
-        row = stage.agg(*aggs)
-        p_sum = F.lit(0.0)
-        r_sum = F.lit(0.0)
-        f_sum = F.lit(0.0)
-        n_eff = F.lit(0)
-        outs = []
-        for _m_c, _gc_c, _gr_c, m_a, tc_a, tr_a, p_a, r_a in orders:
-            m = F.col(m_a).cast("double")
-            tc = F.col(tc_a).cast("double")
-            tr = F.col(tr_a).cast("double")
-            p = F.when(tc > 0, m / tc).otherwise(F.lit(0.0))
-            r = F.when(tr > 0, m / tr).otherwise(F.lit(0.0))
-            if formula == "sacrebleu":
-                eff = (tc > 0) & (tr > 0)
-                pd_, rd_ = m / tc, m / tr
-                f_n = F.when(b2 * pd_ + rd_ > 0.0,
-                             (1 + b2) * pd_ * rd_ / (b2 * pd_ + rd_)) \
-                    .otherwise(F.lit(0.0))
-                f_sum = f_sum + F.when(eff, f_n).otherwise(F.lit(0.0))
-            else:
-                eff = (tc > 0) | (tr > 0)
-                p_sum = p_sum + F.when(eff, p).otherwise(F.lit(0.0))
-                r_sum = r_sum + F.when(eff, r).otherwise(F.lit(0.0))
-            n_eff = n_eff + eff.cast("int")
-            outs += [p.alias(p_a), r.alias(r_a)]
-        if formula == "sacrebleu":
-            score = F.when(n_eff == 0, F.lit(0.0)) \
-                .otherwise(f_sum / n_eff)
-        else:
-            pavg = p_sum / n_eff
-            ravg = r_sum / n_eff
-            score = F.when(n_eff == 0, F.lit(0.0)) \
-                .when(pavg + ravg == 0.0, F.lit(0.0)) \
-                .otherwise((1 + b2) * pavg * ravg / (b2 * pavg + ravg))
-        return row.select(score.alias("chrf"), F.col("n_segments"), *outs)
+        multi = refs_e is not None
+        raw = m.raw(compile_expr(cand_e, sctx),
+                    compile_expr(refs_e if multi else ref_e, sctx), multi)
+        # the UDF output lands in a temp column first so the when-tree
+        # never references the Python expression twice
+        stage = df.withColumn("__er_raw", raw)
+        rawc = F.col("__er_raw")
+        return stage.withColumn(
+            as_field,
+            F.when(rawc["n_hyp"].isNull(), F.lit(None).cast(m.udf_type))
+            .otherwise(rawc),
+        ).drop("__er_raw")
 
     return fn
 
 
-_WER_TYPE = "struct<distance:bigint,wer:double,n_hyp:bigint,n_ref:bigint>"
-
-def _make_wer_scorers(max_words: int):
-    """(score_one, score_multi) closures for the $wer family's Arrow
-    boundary.  Defined INSIDE a factory so cloudpickle serializes them
-    by value — executors never need this package importable (the
-    engine's standing driver-side-only deployment property; a
-    module-level helper would pickle by reference and break
-    sys.path-based runs).
-
-    score_multi scores against each reference and the BEST reference
-    wins — smallest WER, ties broken by smallest distance then
-    smallest reference length (the NIST multi-reference convention:
-    error-count of the best-matching reference).  A reference with
-    undefined WER (empty reference, non-empty hypothesis) sorts after
-    every defined one, so it is chosen only when ALL references are
-    undefined (then wer is null with the smallest distance still
-    reported).  Returns None (null struct) for a null hypothesis or
-    no usable references."""
-    import re as _re
-
-    ws_split = _re.compile(r"[ \t\n\r\f\x0b]+").split  # Java \s
+def _wer_edits():
+    """``edits(wc, wr) -> (distance,)``: word-level Levenshtein with
+    unit costs (factory: pickled by value, see _edit_rate_udf)."""
 
     def lev(a: list, b: list) -> int:
         # two-row DP, rows over the shorter side for O(min) memory
@@ -2201,31 +2251,16 @@ def _make_wer_scorers(max_words: int):
             prev = cur
         return prev[-1]
 
-    def score_one(ct, rt):
-        wc = [w for w in ws_split(ct) if w][:max_words]
-        wr = [w for w in ws_split(rt) if w][:max_words]
-        d = lev(wc, wr)
-        if wr:
-            w = d / len(wr)
-        else:
-            w = 0.0 if not wc else None
-        return (d, w, len(wc), len(wr))
+    return lambda wc, wr: (lev(wc, wr),)
 
-    def score_multi(ct, refs):
-        if ct is None:
-            return None
-        refs = [r for r in refs if r is not None]
-        if not refs:
-            return None
-        best = None
-        for rt in refs:
-            d, w, nh, nr = score_one(ct, rt)
-            key = (w if w is not None else float("inf"), d, nr)
-            if best is None or key < best[0]:
-                best = (key, (d, w, nh, nr))
-        return best[1]
 
-    return score_one, score_multi
+class _Wer(_EditRate):
+    name = "wer"
+    options = {"maxWords": 2000, "caseSensitive": True}
+    udf_type = _WER_TYPE
+
+    def edits(self):
+        return _wer_edits()
 
 
 @register_stage("$wer", "per_batch")
@@ -2244,7 +2279,7 @@ def wer_stage(expression: Any, ctx: Context) -> StageFn:
     MULTI-REFERENCE (r10): ``references: <expr -> array<string>>``
     scores against each reference and reports the BEST — minimum WER,
     ties by minimum distance then minimum reference length (the NIST
-    convention; see :func:`_make_wer_scorers`).  Null reference
+    convention; see :func:`_edit_rate_udf`).  Null reference
     ELEMENTS are
     dropped; a null or effectively-empty array -> null struct.
     Exactly one of ``reference``/``references``.
@@ -2261,77 +2296,7 @@ def wer_stage(expression: Any, ctx: Context) -> StageFn:
 
     (Spark's builtin ``levenshtein`` is character-level; WER is defined
     over words, hence the DP here.)"""
-    cand_e = expression["candidate"]
-    ref_e = expression.get("reference")
-    refs_e = expression.get("references")
-    if (ref_e is None) == (refs_e is None):
-        raise ValueError(
-            "$wer needs exactly one of reference | references")
-    max_words = int(expression.get("maxWords", 2000))
-    case_sensitive = bool(expression.get("caseSensitive", True))
-    as_field = expression.get("as", "wer")
-    if max_words < 1:
-        raise ValueError("$wer maxWords must be >= 1")
-
-    def fn(df: DataFrame, c: Context) -> DataFrame:
-        # r13: heavy per-row column program — fan a single-scan-task
-        # corpus out across cores first (dp_dedup._spread's row-group
-        # gate makes this a no-op for already-wide real-scale inputs)
-        df = _spread(df)
-        sctx = ExprContext(schema=df.schema)
-        cand = compile_expr(cand_e, sctx)
-        if not case_sensitive:
-            cand = F.lower(cand)
-        score_one, score_multi = _make_wer_scorers(max_words)
-
-        if refs_e is not None:
-            refs = compile_expr(refs_e, sctx)
-            if not case_sensitive:
-                refs = F.transform(refs, F.lower)
-
-            @F.pandas_udf(_WER_TYPE)
-            def _wer(s: pd.Series, t: pd.Series) -> pd.DataFrame:
-                vals = [
-                    None if rs is None
-                    else score_multi(ct, list(rs))
-                    for ct, rs in zip(s, t)
-                ]
-                return pd.DataFrame(
-                    [(None, None, None, None) if v is None else v
-                     for v in vals],
-                    columns=["distance", "wer", "n_hyp", "n_ref"])
-
-            out = _wer(cand, refs)
-            null_guard = cand.isNull() | refs.isNull()
-        else:
-            ref = compile_expr(ref_e, sctx)
-            if not case_sensitive:
-                ref = F.lower(ref)
-
-            @F.pandas_udf(_WER_TYPE)
-            def _wer(s: pd.Series, t: pd.Series) -> pd.DataFrame:
-                vals = [
-                    None if ct is None or rt is None
-                    else score_one(ct, rt)
-                    for ct, rt in zip(s, t)
-                ]
-                return pd.DataFrame(
-                    [(None, None, None, None) if v is None else v
-                     for v in vals],
-                    columns=["distance", "wer", "n_hyp", "n_ref"])
-
-            out = _wer(cand, ref)
-            null_guard = cand.isNull() | ref.isNull()
-        null_st = F.lit(None).cast(_WER_TYPE)
-        stage = df.withColumn("__wer_raw", out)
-        raw = F.col("__wer_raw")
-        return stage.withColumn(
-            as_field,
-            F.when(null_guard | raw["n_hyp"].isNull(), null_st)
-            .otherwise(raw),
-        ).drop("__wer_raw")
-
-    return fn
+    return _edit_rate_stage(_Wer, "$wer", expression)
 
 
 @register_stage("$werCorpus", "corpus")
@@ -2343,116 +2308,24 @@ def wer_corpus_stage(expression: Any, ctx: Context) -> StageFn:
     n_hyp, n_ref, n_segments)``.
 
     Per segment the edit distance and reference length come from
-    :func:`_make_wer_scorers` — single reference directly, multiple
-    references via the best-matching reference (min WER, NIST
-    convention) — and the corpus sums those, then divides once.
-    Segments with a null hypothesis or no usable reference are
-    EXCLUDED from every sum (and from n_segments).  A corpus whose
-    total reference length is 0 reports wer 0.0 when the total
-    distance is also 0, else null wer (the undefined case, surfaced
-    like $wer's).
-
-    CORPUS-ONLY: gated exactly like $bleuCorpus/$chrfCorpus — inside a
-    foreachBatch re-entry it would silently score one micro-batch and
-    label it the corpus WER.
+    $wer's scorer — single reference directly, multiple references via
+    the best-matching reference (min WER, NIST convention) — and the
+    corpus sums those, then divides once.  Segments with a null
+    hypothesis or no usable reference are EXCLUDED from every sum (and
+    from n_segments).  A corpus whose total reference length is 0
+    reports wer 0.0 when the total distance is also 0, else null wer
+    (the undefined case, surfaced like $wer's).
 
     100 TB shape: the per-segment DP runs on the same Arrow-batched
     boundary as $wer (row-local, zero shuffle, maxWords-capped); the
     reduction is ONE global partial-aggregated sum to a single 5-long
     row — the $bleuCorpus shape."""
-    cand_e = expression["candidate"]
-    ref_e = expression.get("reference")
-    refs_e = expression.get("references")
-    if (ref_e is None) == (refs_e is None):
-        raise ValueError(
-            "$werCorpus needs exactly one of reference | references")
-    max_words = int(expression.get("maxWords", 2000))
-    case_sensitive = bool(expression.get("caseSensitive", True))
-    if max_words < 1:
-        raise ValueError("$werCorpus maxWords must be >= 1")
-
-    def fn(df: DataFrame, c: Context) -> DataFrame:
-        # r13: heavy per-row column program — fan a single-scan-task
-        # corpus out across cores first (dp_dedup._spread's row-group
-        # gate makes this a no-op for already-wide real-scale inputs)
-        df = _spread(df)
-        sctx = ExprContext(schema=df.schema)
-        cand = compile_expr(cand_e, sctx)
-        if not case_sensitive:
-            cand = F.lower(cand)
-        score_one, score_multi = _make_wer_scorers(max_words)
-
-        if refs_e is not None:
-            refs = compile_expr(refs_e, sctx)
-            if not case_sensitive:
-                refs = F.transform(refs, F.lower)
-
-            @F.pandas_udf(_WER_TYPE)
-            def _wer(s: pd.Series, t: pd.Series) -> pd.DataFrame:
-                vals = [
-                    None if rs is None
-                    else score_multi(ct, list(rs))
-                    for ct, rs in zip(s, t)
-                ]
-                return pd.DataFrame(
-                    [(None, None, None, None) if v is None else v
-                     for v in vals],
-                    columns=["distance", "wer", "n_hyp", "n_ref"])
-
-            raw = _wer(cand, refs)
-        else:
-            ref = compile_expr(ref_e, sctx)
-            if not case_sensitive:
-                ref = F.lower(ref)
-
-            @F.pandas_udf(_WER_TYPE)
-            def _wer(s: pd.Series, t: pd.Series) -> pd.DataFrame:
-                vals = [
-                    None if ct is None or rt is None
-                    else score_one(ct, rt)
-                    for ct, rt in zip(s, t)
-                ]
-                return pd.DataFrame(
-                    [(None, None, None, None) if v is None else v
-                     for v in vals],
-                    columns=["distance", "wer", "n_hyp", "n_ref"])
-
-            raw = _wer(cand, ref)
-        # r13: NO not-null .filter on the UDF column — pushdown moved
-        # it below the fan-out exchange and ExtractPythonUDFs then
-        # materialized a SECOND, single-task ArrowEvalPython at the
-        # scan (the whole per-segment DP ran twice, once serial).
-        # Excluded segments return an all-null struct, so count(col)
-        # and null-skipping sums compute the identical exclusion.
-        stage = df.withColumn("__wrc", raw)
-        zero_l = F.lit(0).cast("long")
-        row = stage.agg(
-            F.count("__wrc.n_hyp").alias("n_segments"),
-            F.coalesce(F.sum("__wrc.distance"), zero_l).alias("distance"),
-            F.coalesce(F.sum("__wrc.n_hyp"), zero_l).alias("n_hyp"),
-            F.coalesce(F.sum("__wrc.n_ref"), zero_l).alias("n_ref"),
-        )
-        d_tot = F.col("distance").cast("double")
-        r_tot = F.col("n_ref").cast("double")
-        wer = F.when(F.col("n_ref") > 0, d_tot / r_tot) \
-            .when(F.col("distance") == 0, F.lit(0.0)) \
-            .otherwise(F.lit(None).cast("double"))
-        return row.select(
-            wer.alias("wer"), F.col("distance"), F.col("n_hyp"),
-            F.col("n_ref"), F.col("n_segments"))
-
-    return fn
+    return _corpus_stage(_Wer, "$werCorpus", expression)
 
 
-_TER_TYPE = ("struct<edits:bigint,ter:double,shifts:bigint,"
-             "n_hyp:bigint,n_ref:bigint>")
-
-
-def _make_ter_scorers(max_words: int, max_shift_size: int,
-                      max_shift_dist: int):
-    """(score_one, score_multi) closures for the $ter family's Arrow
-    boundary (factory pattern = cloudpickle-by-value, exactly like
-    :func:`_make_wer_scorers`).
+def _ter_edits(max_shift_size: int, max_shift_dist: int):
+    """``edits(wc, wr) -> (edits, shifts)`` for the $ter family
+    (factory: pickled by value, see _edit_rate_udf).
 
     Translation Edit Rate (Snover et al. 2006, "A Study of Translation
     Edit Rate with Targeted Human Annotation"): minimum number of word
@@ -2488,12 +2361,9 @@ def _make_ter_scorers(max_words: int, max_shift_size: int,
     ``maxWords`` defaults to 250 (not 2000): the greedy search is
     O(candidates · n · dist) per round — quadratic-ish where $wer is
     one DP — and 250 words is the sentence/segment regime TER is
-    defined for.  score_multi picks the best reference by (ter, edits,
-    n_ref) — the same NIST convention as $wer."""
-    import re as _re
+    defined for.  The multi-reference pick is $wer's (ter, edits,
+    n_ref) NIST convention."""
     from collections import defaultdict as _dd
-
-    ws_split = _re.compile(r"[ \t\n\r\f\x0b]+").split  # Java \s
 
     def _myers_tables(wr: list):
         """(PM, m, mask, top) for bit-parallel Levenshtein against the
@@ -2676,31 +2546,26 @@ def _make_ter_scorers(max_words: int, max_shift_size: int,
             base, hyp = best
         return shifts + base, shifts, base
 
-    def score_one(ct, rt):
-        wc = [w for w in ws_split(ct) if w][:max_words]
-        wr = [w for w in ws_split(rt) if w][:max_words]
-        edits, shifts, _ = ter_edits(wc, wr)
-        if wr:
-            t = edits / len(wr)
-        else:
-            t = 0.0 if not wc else None
-        return (edits, t, shifts, len(wc), len(wr))
+    return lambda wc, wr: ter_edits(wc, wr)[:2]
 
-    def score_multi(ct, refs):
-        if ct is None:
-            return None
-        refs = [r for r in refs if r is not None]
-        if not refs:
-            return None
-        best = None
-        for rt in refs:
-            e, t, sh, nh, nr = score_one(ct, rt)
-            key = (t if t is not None else float("inf"), e, nr)
-            if best is None or key < best[0]:
-                best = (key, (e, t, sh, nh, nr))
-        return best[1]
 
-    return score_one, score_multi
+class _Ter(_EditRate):
+    name = "ter"
+    options = {"maxWords": 250, "maxShiftSize": 10, "maxShiftDistance": 50,
+               "caseSensitive": True}
+    udf_type = _TER_TYPE
+
+    def __init__(self, stage: str, expression: dict):
+        super().__init__(stage, expression)
+        self.max_shift_size = int(self.opts["maxShiftSize"])
+        self.max_shift_dist = int(self.opts["maxShiftDistance"])
+        if self.max_shift_size < 1:
+            raise ValueError(f"{stage} maxShiftSize must be >= 1")
+        if self.max_shift_dist < 0:
+            raise ValueError(f"{stage} maxShiftDistance must be >= 0")
+
+    def edits(self):
+        return _ter_edits(self.max_shift_size, self.max_shift_dist)
 
 
 @register_stage("$ter", "per_batch")
@@ -2709,11 +2574,11 @@ def ter_stage(expression: Any, ctx: Context) -> StageFn:
     sacrebleu BLEU/chrF/TER triple: ``{candidate, reference |
     references, maxWords?, maxShiftSize?, maxShiftDistance?, as?}``
     adds a struct ``(edits, ter, shifts, n_hyp, n_ref)``.  A shift of
-    a contiguous phrase counts as ONE edit; see
-    :func:`_make_ter_scorers` for the pinned greedy-shift semantics
-    and the deliberate deviations from tercom.  Null in either side ->
-    null struct; empty reference with non-empty hypothesis -> null
-    ter with edits still reported (the $wer convention).
+    a contiguous phrase counts as ONE edit; see :func:`_ter_edits` for
+    the pinned greedy-shift semantics and the deliberate deviations
+    from tercom.  Null in either side -> null struct; empty reference
+    with non-empty hypothesis -> null ter with edits still reported
+    (the $wer convention).
 
     MULTI-REFERENCE: best reference by (ter, edits, n_ref) — NIST.
     ``caseSensitive: false`` lowercases both sides first (sacrebleu
@@ -2722,80 +2587,7 @@ def ter_stage(expression: Any, ctx: Context) -> StageFn:
     100 TB shape: row-local on the $wer Arrow boundary, zero shuffle;
     the greedy search is capped by maxWords (default 250) /
     maxShiftSize (10) / maxShiftDistance (50) — the tercom caps."""
-    cand_e = expression["candidate"]
-    ref_e = expression.get("reference")
-    refs_e = expression.get("references")
-    if (ref_e is None) == (refs_e is None):
-        raise ValueError("$ter needs exactly one of reference | references")
-    max_words = int(expression.get("maxWords", 250))
-    max_shift_size = int(expression.get("maxShiftSize", 10))
-    max_shift_dist = int(expression.get("maxShiftDistance", 50))
-    # sacrebleu's TER lowercases by default (case_sensitive=False);
-    # ours defaults to case-sensitive like $wer — caseSensitive: false
-    # opts into the sacrebleu behavior (F.lower on both sides, JVM)
-    case_sensitive = bool(expression.get("caseSensitive", True))
-    as_field = expression.get("as", "ter")
-    if max_words < 1:
-        raise ValueError("$ter maxWords must be >= 1")
-    if max_shift_size < 1:
-        raise ValueError("$ter maxShiftSize must be >= 1")
-    if max_shift_dist < 0:
-        raise ValueError("$ter maxShiftDistance must be >= 0")
-
-    def fn(df: DataFrame, c: Context) -> DataFrame:
-        # r13: heavy per-row column program — fan a single-scan-task
-        # corpus out across cores first (dp_dedup._spread's row-group
-        # gate makes this a no-op for already-wide real-scale inputs)
-        df = _spread(df)
-        sctx = ExprContext(schema=df.schema)
-        cand = compile_expr(cand_e, sctx)
-        if not case_sensitive:
-            cand = F.lower(cand)
-        score_one, score_multi = _make_ter_scorers(
-            max_words, max_shift_size, max_shift_dist)
-
-        if refs_e is not None:
-            refs = compile_expr(refs_e, sctx)
-            if not case_sensitive:
-                refs = F.transform(refs, F.lower)
-
-            @F.pandas_udf(_TER_TYPE)
-            def _ter(s: pd.Series, t: pd.Series) -> pd.DataFrame:
-                vals = [None if rs is None else score_multi(ct, list(rs))
-                        for ct, rs in zip(s, t)]
-                return pd.DataFrame(
-                    [(None, None, None, None, None) if v is None else v
-                     for v in vals],
-                    columns=["edits", "ter", "shifts", "n_hyp", "n_ref"])
-
-            raw = _ter(cand, refs)
-        else:
-            ref = compile_expr(ref_e, sctx)
-            if not case_sensitive:
-                ref = F.lower(ref)
-
-            @F.pandas_udf(_TER_TYPE)
-            def _ter(s: pd.Series, t: pd.Series) -> pd.DataFrame:
-                vals = [None if ct is None or rt is None
-                        else score_one(ct, rt)
-                        for ct, rt in zip(s, t)]
-                return pd.DataFrame(
-                    [(None, None, None, None, None) if v is None else v
-                     for v in vals],
-                    columns=["edits", "ter", "shifts", "n_hyp", "n_ref"])
-
-            raw = _ter(cand, ref)
-        # null hypothesis / no usable references -> a NULL STRUCT, not
-        # a struct of nulls (the $wer convention)
-        null_st = F.lit(None).cast(_TER_TYPE)
-        stage = df.withColumn("__ter_raw", raw)
-        rawc = F.col("__ter_raw")
-        return stage.withColumn(
-            as_field,
-            F.when(rawc["n_hyp"].isNull(), null_st).otherwise(rawc),
-        ).drop("__ter_raw")
-
-    return fn
+    return _edit_rate_stage(_Ter, "$ter", expression)
 
 
 @register_stage("$terCorpus", "corpus")
@@ -2808,95 +2600,10 @@ def ter_corpus_stage(expression: Any, ctx: Context) -> StageFn:
     each segment's best reference's edits and length ($werCorpus's
     convention).  Segments with a null side are EXCLUDED.
 
-    CORPUS-ONLY: gated in streaming like $werCorpus.
-
     100 TB shape: per-segment greedy search row-local on the Arrow
     boundary; the reduction is ONE global partial-aggregated sum to a
     single short row — the $bleuCorpus shape."""
-    cand_e = expression["candidate"]
-    ref_e = expression.get("reference")
-    refs_e = expression.get("references")
-    if (ref_e is None) == (refs_e is None):
-        raise ValueError(
-            "$terCorpus needs exactly one of reference | references")
-    max_words = int(expression.get("maxWords", 250))
-    max_shift_size = int(expression.get("maxShiftSize", 10))
-    max_shift_dist = int(expression.get("maxShiftDistance", 50))
-    case_sensitive = bool(expression.get("caseSensitive", True))
-    if max_words < 1:
-        raise ValueError("$terCorpus maxWords must be >= 1")
-    if max_shift_size < 1:
-        raise ValueError("$terCorpus maxShiftSize must be >= 1")
-    if max_shift_dist < 0:
-        raise ValueError("$terCorpus maxShiftDistance must be >= 0")
-
-    def fn(df: DataFrame, c: Context) -> DataFrame:
-        # r13: heavy per-row column program — fan a single-scan-task
-        # corpus out across cores first (dp_dedup._spread's row-group
-        # gate makes this a no-op for already-wide real-scale inputs)
-        df = _spread(df)
-        sctx = ExprContext(schema=df.schema)
-        cand = compile_expr(cand_e, sctx)
-        if not case_sensitive:
-            cand = F.lower(cand)
-        score_one, score_multi = _make_ter_scorers(
-            max_words, max_shift_size, max_shift_dist)
-
-        if refs_e is not None:
-            refs = compile_expr(refs_e, sctx)
-            if not case_sensitive:
-                refs = F.transform(refs, F.lower)
-
-            @F.pandas_udf(_TER_TYPE)
-            def _ter(s: pd.Series, t: pd.Series) -> pd.DataFrame:
-                vals = [None if rs is None else score_multi(ct, list(rs))
-                        for ct, rs in zip(s, t)]
-                return pd.DataFrame(
-                    [(None, None, None, None, None) if v is None else v
-                     for v in vals],
-                    columns=["edits", "ter", "shifts", "n_hyp", "n_ref"])
-
-            raw = _ter(cand, refs)
-        else:
-            ref = compile_expr(ref_e, sctx)
-            if not case_sensitive:
-                ref = F.lower(ref)
-
-            @F.pandas_udf(_TER_TYPE)
-            def _ter(s: pd.Series, t: pd.Series) -> pd.DataFrame:
-                vals = [None if ct is None or rt is None
-                        else score_one(ct, rt)
-                        for ct, rt in zip(s, t)]
-                return pd.DataFrame(
-                    [(None, None, None, None, None) if v is None else v
-                     for v in vals],
-                    columns=["edits", "ter", "shifts", "n_hyp", "n_ref"])
-
-            raw = _ter(cand, ref)
-        # r13: same as $werCorpus — no not-null .filter on the UDF
-        # column (pushdown + ExtractPythonUDFs ran the WHOLE greedy TER
-        # a second time in a single-task scan filter: 336 s vs 283 s
-        # single-core compute at sf0.1); null-skipping aggregates
-        # compute the identical segment exclusion.
-        stage = df.withColumn("__trc", raw)
-        zero_l = F.lit(0).cast("long")
-        row = stage.agg(
-            F.count("__trc.n_hyp").alias("n_segments"),
-            F.coalesce(F.sum("__trc.edits"), zero_l).alias("edits"),
-            F.coalesce(F.sum("__trc.shifts"), zero_l).alias("shifts"),
-            F.coalesce(F.sum("__trc.n_hyp"), zero_l).alias("n_hyp"),
-            F.coalesce(F.sum("__trc.n_ref"), zero_l).alias("n_ref"),
-        )
-        e_tot = F.col("edits").cast("double")
-        r_tot = F.col("n_ref").cast("double")
-        ter = F.when(F.col("n_ref") > 0, e_tot / r_tot) \
-            .when(F.col("edits") == 0, F.lit(0.0)) \
-            .otherwise(F.lit(None).cast("double"))
-        return row.select(
-            ter.alias("ter"), F.col("edits"), F.col("shifts"),
-            F.col("n_hyp"), F.col("n_ref"), F.col("n_segments"))
-
-    return fn
+    return _corpus_stage(_Ter, "$terCorpus", expression)
 
 
 @register_stage("$classificationEval", "corpus")
@@ -2922,9 +2629,6 @@ def classification_eval_stage(expression: Any, ctx: Context) -> StageFn:
     labels drop out, absent ones appear with zero counts; ``n`` and
     ``accuracy`` stay global (sklearn's accuracy_score ignores
     ``labels=``).
-
-    CORPUS-ONLY: the output claims corpus scope, so it is gated in
-    streaming exactly like $bleuCorpus.
 
     100 TB shape: ONE partial-aggregated groupBy over (actual,
     predicted) collapses the corpus to the confusion matrix (≤ |labels|²
@@ -3068,8 +2772,6 @@ def regression_eval_stage(expression: Any, ctx: Context) -> StageFn:
     case surfaced, not faked.  Pairs with a null on either side are
     EXCLUDED; an empty corpus returns n = 0 with null metrics.
 
-    CORPUS-ONLY: gated in streaming like $classificationEval.
-
     100 TB shape: ONE global partial-aggregated sum (5 doubles + a
     count) to a single row — the $bleuCorpus reduction shape; every
     metric derives from that row arithmetically."""
@@ -3116,410 +2818,90 @@ _POISSON1_CDF = [
 ]
 
 
-_CORPUS_STATISTICS = ("corpusBleu", "corpusChrf", "corpusWer",
-                      "corpusTer")
+_STATISTICS = {"corpusBleu": _Bleu, "corpusChrf": _Chrf,
+               "corpusWer": _Wer, "corpusTer": _Ter}
 
 
-def _corpus_stat_machinery(statistic: str, expression: dict, stage_name: str):
-    """Per-segment sufficient-statistics machinery for the corpus-
-    statistic bootstrap modes (r11, VERDICT r10 #2): Koehn 2004
-    resamples the test set and recomputes the CORPUS metric per
-    replicate — for non-decomposable metrics (corpus BLEU/chrF) that is
-    NOT the mean of per-segment scores.  Because every corpus metric
-    here is a function of SUMS of per-segment sufficient statistics, a
-    replicate's corpus score is ``score(Σ wᵢ·statsᵢ)`` over the same
-    deterministic Poisson weights — exact, shuffle-cheap, and
-    oracle-checkable.
+def _corpus_statistic(stage_name: str, expression: dict):
+    """``(metric, ref_e, refs_e)`` of a bootstrap's ``statistic`` —
+    ``(None, None, None)`` for the default ``mean``.  Corpus-statistic
+    modes (r11, VERDICT r10 #2): Koehn 2004 resamples the test set and
+    recomputes the CORPUS metric per replicate — for non-decomposable
+    metrics (corpus BLEU/chrF) that is NOT the mean of per-segment
+    scores.  A replicate's corpus score is the metric's own
+    ``score(Σ wᵢ·statsᵢ)`` over the deterministic Poisson weights —
+    exact, shuffle-cheap, oracle-checkable, and the full-corpus score
+    is the matching $xCorpus score.
 
-    Returns ``(shared, build, score, lower_is_better, fields)``:
-
-    - ``shared(stage, sctx) -> (stage, ok)`` adds reference-side temp
-      columns used by both systems and the reference validity predicate;
-    - ``build(stage, sctx, cand_expr, suffix) -> (stage, ok)`` adds one
-      system's flat stat columns named ``__pb{suffix}_{field}``;
-    - ``score(get) -> Column`` computes the corpus statistic from
-      (possibly weighted) SUMS of those fields, ``get(field) -> Column``;
-    - ``lower_is_better`` flips the win direction (corpusWer);
-    - ``fields`` lists the stat field names.
-
-    Statistic formulas are byte-for-byte the $bleuCorpus / $chrfCorpus /
-    $werCorpus reductions (dp_eval.py above) applied to resampled sums.
-    """
-    ref_e = expression.get("reference")
-    refs_e = expression.get("references")
-    if statistic == "corpusChrf":
-        # $chrfCorpus is single-reference (chrF statistics are never
-        # pooled across references — see $chrf's sacrebleu note)
-        if ref_e is None or refs_e is not None:
-            raise ValueError(
-                f"{stage_name} statistic corpusChrf needs reference "
-                "(references is not supported, matching $chrfCorpus)")
-    elif (ref_e is None) == (refs_e is None):
+    Full per-statistic option whitelist (ADVICE r12): any key that is
+    a metric option of SOME statistic but not this one is rejected —
+    an option silently ignored by the active statistic is the
+    "interval does not bracket the point score" hazard.  Caller-level
+    keys (id/a/b/candidate/input/samples/seed/alpha/statistic/
+    reference/references/as) pass through untouched."""
+    statistic = expression.get("statistic", "mean")
+    if statistic == "mean":
+        return None, None, None
+    if statistic not in _STATISTICS:
         raise ValueError(
-            f"{stage_name} statistic {statistic} needs exactly one "
-            "of reference | references")
-    # full per-statistic option whitelist (ADVICE r12 — the r11 fix
-    # only special-cased `tokenizer`; a wordOrder/smooth/formula option
-    # silently ignored by the active statistic is the same "interval
-    # does not bracket the point score" hazard).  Any key that is a
-    # metric option for SOME statistic but not this one is rejected;
-    # caller-level keys (id/a/b/candidate/input/samples/seed/alpha/
-    # statistic/reference/references/as) pass through untouched.
-    stat_opts = {
-        "corpusBleu": {"maxN", "maxWords", "smooth", "tokenizer"},
-        "corpusChrf": {"maxN", "beta", "maxChars", "formula",
-                       "wordOrder", "maxWords"},
-        "corpusWer": {"maxWords", "caseSensitive"},
-        "corpusTer": {"maxWords", "maxShiftSize", "maxShiftDistance",
-                      "caseSensitive"},
-    }
-    allowed = stat_opts[statistic]
-    bad = sorted(
-        k for k in expression
-        if k in set().union(*stat_opts.values()) and k not in allowed)
+            f"{stage_name} statistic must be one of "
+            f"mean|{'|'.join(_STATISTICS)}, got {statistic!r}")
+    metric = _STATISTICS[statistic]
+    ref_e, refs_e = _reference(f"{stage_name} statistic {statistic}",
+                               expression, metric.multi_ref)
+    every = set().union(*(m.options for m in _STATISTICS.values()))
+    bad = sorted(k for k in expression
+                 if k in every and k not in metric.options)
     if bad:
         raise ValueError(
             f"{stage_name} statistic {statistic} does not take "
             f"{', '.join(bad)} (allowed metric options: "
-            f"{', '.join(sorted(allowed))})")
+            f"{', '.join(sorted(metric.options))})")
+    return metric(stage_name, expression), ref_e, refs_e
 
-    if statistic == "corpusBleu":
-        max_n = int(expression.get("maxN", 4))
-        max_words = int(expression.get("maxWords", 2000))
-        smooth = expression.get("smooth")
-        # r12 (ADVICE r11): thread the $bleu/$bleuCorpus tokenizer
-        # option through the corpus-statistic bootstrap so a corpusBleu
-        # interval brackets a 13a-tokenized $bleuCorpus point score —
-        # previously silently ignored (raw whitespace tokens).
-        tokenizer = _check_tokenizer(stage_name, expression.get("tokenizer"))
-        tok = _tok_fn(tokenizer)
-        if not 1 <= max_n <= 8:
-            raise ValueError(f"{stage_name} maxN must be in 1..8")
-        if max_words < 1:
-            raise ValueError(f"{stage_name} maxWords must be >= 1")
-        if smooth not in (None, "add1"):
-            raise ValueError(
-                f"{stage_name} smooth must be 'add1' or absent")
-        fields = (["c_len", "r_len"]
-                  + [f"m{n}" for n in range(1, max_n + 1)]
-                  + [f"t{n}" for n in range(1, max_n + 1)])
 
-        def shared(stage: DataFrame, sctx: ExprContext):
-            # r14 (guide §1.2): dependency-layered withColumns — one
-            # analyzer pass per layer instead of one per column; the
-            # columns (names and expressions) are identical, and
-            # CollapseProject merged the per-column Projects into the
-            # same shape anyway, so the optimized plan is unchanged
-            # while the measured driver plan-build cost drops ~3x.
-            if refs_e is not None:
-                refs = compile_expr(refs_e, sctx)
-                stage = stage.withColumns({
-                    "__pbs_wrs": F.transform(
-                        F.filter(refs, lambda r: r.isNotNull()),
-                        lambda r: _eval_words(tok(r), max_words))})
-                wrs = F.col("__pbs_wrs")
-                layer2 = {"__pbs_rls": F.transform(
-                    wrs, lambda w: F.size(w).cast("long"))}
+def _replicate_rows(pairs: DataFrame, seed: int, samples: int,
+                    cols: list) -> DataFrame:
+    """``cols`` of every segment once per replicate ``__r`` with its
+    Poisson(1) weight ``__w``: the row-local replicate explode."""
+    ws = F.transform(
+        F.sequence(F.lit(1), F.lit(samples)),
+        lambda r: _poisson1_weight(seed, F.col("__id"), r))
+    return pairs.withColumn("__ws", ws).select(
+        *cols, F.posexplode("__ws").alias("__r", "__w"))
 
-                def _grams_of(_n: int):
-                    # NOT a default-arg lambda: F.transform treats a
-                    # 2-parameter callable as the (element, index) form
-                    return lambda w: _eval_grams(w, _n)
 
-                for n in range(1, max_n + 1):
-                    layer2[f"__pbs_grs{n}"] = F.transform(
-                        wrs, _grams_of(n))
-                stage = stage.withColumns(layer2)
-                ok = refs.isNotNull() & (F.size(wrs) > 0)
-            else:
-                ref = compile_expr(ref_e, sctx)
-                stage = stage.withColumns(
-                    {"__pbs_wr": _eval_words(tok(ref), max_words)})
-                stage = stage.withColumns({
-                    f"__pbs_gr{n}": _eval_grams(F.col("__pbs_wr"), n)
-                    for n in range(1, max_n + 1)})
-                ok = ref.isNotNull()
-            return stage, ok
+def _corpus_replicates(df: DataFrame, sctx: ExprContext, idc: Column,
+                       m: _CorpusMetric, cands: list, ref_e: Any,
+                       refs_e: Any, samples: int, seed: int):
+    """``(rep, base)`` of a corpus-statistic bootstrap over the
+    candidate systems ``cands``: ``rep`` has one row per replicate
+    ``__r`` with the weighted sums Σ w·stats in the ``_stat(i, field)``
+    columns and the total weight ``__wsum``; ``base`` has the scored
+    segment count ``n`` and the plain sums.  Segments where any system
+    or the reference side is unscorable are EXCLUDED (pairing requires
+    all)."""
+    stage, ok, fields = m.stats(df.withColumn("__pb_id", idc), sctx,
+                                cands, ref_e, refs_e)
+    statcols = [_stat(i, f) for i in range(len(cands)) for f in fields]
+    slim = stage.select(F.col("__pb_id").alias("__id"),
+                        ok.alias("__ok"), *statcols)
+    # same checkpoint barrier + ordering rationale as the mean path of
+    # $pairedBootstrap (predicate-pushdown substitution hazard)
+    slim = pin(slim)
+    pairs = slim.filter(F.col("__id").isNotNull() & F.col("__ok"))
+    wl = F.col("__w").cast("long")  # integer weights: exact sums
+    rep = _replicate_rows(pairs, seed, samples, statcols).groupBy(
+        "__r").agg(*[F.sum(wl * F.col(sc)).alias(sc) for sc in statcols],
+                   F.sum("__w").alias("__wsum"))
+    base = pairs.agg(F.count(F.lit(1)).alias("n"),
+                     *[F.sum(sc).alias(sc) for sc in statcols])
+    return rep, base
 
-        def build(stage: DataFrame, sctx: ExprContext, cand_e: Any,
-                  suffix: str):
-            p = f"__pb{suffix}"
-            cand = compile_expr(cand_e, sctx)
-            stage = stage.withColumns(
-                {f"{p}_wc": _eval_words(tok(cand), max_words)})
-            wc = F.col(f"{p}_wc")
-            c_len_l = F.size(wc).cast("long")
-            layer2 = {f"{p}_gc{n}": _eval_grams(wc, n)
-                      for n in range(1, max_n + 1)}
-            layer2[f"{p}_c_len"] = c_len_l
-            stage = stage.withColumns(layer2)
-            layer3 = {}
-            for n in range(1, max_n + 1):
-                if refs_e is not None:
-                    m = _eval_clipped_multi(F.col(f"{p}_gc{n}"),
-                                            F.col(f"__pbs_grs{n}"))
-                else:
-                    m = _eval_clipped(F.col(f"{p}_gc{n}"),
-                                      F.col(f"__pbs_gr{n}"))
-                layer3[f"{p}_m{n}"] = m
-                layer3[f"{p}_t{n}"] = F.size(F.col(f"{p}_gc{n}")) \
-                    .cast("long")
-            if refs_e is not None:
-                # per-segment effective reference length relative to
-                # THIS system's candidate (Papineni 2002 §2.3: closest,
-                # ties -> shorter)
-                best = F.aggregate(
-                    F.col("__pbs_rls"),
-                    F.struct(F.lit(None).cast("long").alias("d"),
-                             F.lit(None).cast("long").alias("l")),
-                    lambda acc, ln: F.when(
-                        acc["l"].isNull()
-                        | (F.abs(ln - c_len_l) < acc["d"])
-                        | ((F.abs(ln - c_len_l) == acc["d"])
-                           & (ln < acc["l"])),
-                        F.struct(F.abs(ln - c_len_l).cast("long")
-                                 .alias("d"), ln.alias("l")),
-                    ).otherwise(acc))
-                r_len = best["l"]
-            else:
-                r_len = F.size(F.col("__pbs_wr")).cast("long")
-            layer3[f"{p}_r_len"] = r_len
-            stage = stage.withColumns(layer3)
-            return stage, cand.isNotNull()
 
-        def score(get) -> Column:
-            zero = F.lit(False)
-            log_sum = F.lit(0.0)
-            for n in range(1, max_n + 1):
-                m = get(f"m{n}").cast("double")
-                t = get(f"t{n}").cast("double")
-                if smooth == "add1" and n >= 2:
-                    p_ = (m + 1.0) / (t + 1.0)
-                    zero = zero | (t == 0.0)
-                else:
-                    p_ = m / t
-                    zero = zero | (t == 0.0) | (m == 0.0)
-                log_sum = log_sum + F.log(p_) / max_n
-            c_tot = get("c_len").cast("double")
-            r_tot = get("r_len").cast("double")
-            bp = F.when(c_tot >= r_tot, F.lit(1.0)) \
-                .otherwise(F.exp(1.0 - r_tot / c_tot))
-            return F.when(zero, F.lit(0.0)).otherwise(bp * F.exp(log_sum))
-
-        return shared, build, score, False, fields
-
-    if statistic == "corpusChrf":
-        max_n = int(expression.get("maxN", 6))
-        beta = float(expression.get("beta", 2.0))
-        max_chars = int(expression.get("maxChars", 2000))
-        formula = expression.get("formula", "popovic")
-        if formula not in ("popovic", "sacrebleu"):
-            raise ValueError(
-                f"{stage_name} formula must be popovic|sacrebleu, "
-                f"got {formula!r}")
-        if not 1 <= max_n <= 10:
-            raise ValueError(f"{stage_name} maxN must be in 1..10")
-        if beta <= 0:
-            raise ValueError(f"{stage_name} beta must be > 0")
-        if max_chars < 1:
-            raise ValueError(f"{stage_name} maxChars must be >= 1")
-        # r12 chrF++: word orders ride the same sufficient-statistics
-        # shape — a replicate's corpus chrF++ pools Σ wᵢ·(word-gram
-        # stats) next to the char-gram sums
-        word_order, wmax_words = _check_word_order(stage_name, expression)
-        b2 = beta * beta
-        # (m, tc, tr) field-name triples: char orders then word orders
-        triples = [(f"m{n}", f"tc{n}", f"tr{n}", "c", n)
-                   for n in range(1, max_n + 1)]
-        triples += [(f"wm{n}", f"wtc{n}", f"wtr{n}", "w", n)
-                    for n in range(1, word_order + 1)]
-        fields = [k for t in triples for k in t[:3]]
-
-        def strip(t: Column) -> Column:
-            return F.substring(F.regexp_replace(t, r"\s+", ""),
-                               1, max_chars)
-
-        def char_grams(s: Column, n: int) -> Column:
-            ln = F.length(s)
-            grams = F.transform(F.sequence(F.lit(1), ln - (n - 1)),
-                                lambda i: F.substring(s, i, F.lit(n)))
-            return F.when(ln >= n, grams) \
-                .otherwise(F.array().cast("array<string>"))
-
-        def shared(stage: DataFrame, sctx: ExprContext):
-            # r14 (guide §1.2): layered withColumns — one analyzer pass
-            # per dependency layer; identical columns, same optimized
-            # plan (see the corpusBleu note above).
-            ref = compile_expr(ref_e, sctx)
-            layer1 = {"__pbs_sr": strip(ref)}
-            if word_order > 0:
-                layer1["__pbs_wr"] = _chrfpp_tokens(ref, wmax_words)
-            stage = stage.withColumns(layer1)
-            layer2 = {f"__pbs_gr{n}": char_grams(F.col("__pbs_sr"), n)
-                      for n in range(1, max_n + 1)}
-            for n in range(1, word_order + 1):
-                layer2[f"__pbs_wgr{n}"] = _eval_grams(
-                    F.col("__pbs_wr"), n)
-            stage = stage.withColumns(layer2)
-            return stage, ref.isNotNull()
-
-        def build(stage: DataFrame, sctx: ExprContext, cand_e: Any,
-                  suffix: str):
-            p = f"__pb{suffix}"
-            cand = compile_expr(cand_e, sctx)
-            layer1 = {f"{p}_sc": strip(cand)}
-            if word_order > 0:
-                layer1[f"{p}_wtoks"] = _chrfpp_tokens(cand, wmax_words)
-            stage = stage.withColumns(layer1)
-            layer2 = {f"{p}_gc{n}": char_grams(F.col(f"{p}_sc"), n)
-                      for n in range(1, max_n + 1)}
-            for n in range(1, word_order + 1):
-                layer2[f"{p}_wgc{n}"] = _eval_grams(
-                    F.col(f"{p}_wtoks"), n)
-            stage = stage.withColumns(layer2)
-            layer3 = {}
-            for n in range(1, max_n + 1):
-                layer3[f"{p}_m{n}"] = _eval_clipped(
-                    F.col(f"{p}_gc{n}"), F.col(f"__pbs_gr{n}"))
-                layer3[f"{p}_tc{n}"] = F.size(F.col(f"{p}_gc{n}")) \
-                    .cast("long")
-                layer3[f"{p}_tr{n}"] = F.size(F.col(f"__pbs_gr{n}")) \
-                    .cast("long")
-            for n in range(1, word_order + 1):
-                layer3[f"{p}_wm{n}"] = _eval_clipped(
-                    F.col(f"{p}_wgc{n}"), F.col(f"__pbs_wgr{n}"))
-                layer3[f"{p}_wtc{n}"] = F.size(F.col(f"{p}_wgc{n}")) \
-                    .cast("long")
-                layer3[f"{p}_wtr{n}"] = F.size(F.col(f"__pbs_wgr{n}")) \
-                    .cast("long")
-            stage = stage.withColumns(layer3)
-            return stage, cand.isNotNull()
-
-        def score(get) -> Column:
-            if formula == "sacrebleu":
-                f_sum = F.lit(0.0)
-                n_eff = F.lit(0)
-                for m_k, tc_k, tr_k, _kind, _n in triples:
-                    m = get(m_k).cast("double")
-                    tc = get(tc_k).cast("double")
-                    tr = get(tr_k).cast("double")
-                    eff = (tc > 0) & (tr > 0)
-                    p_, r_ = m / tc, m / tr
-                    f_n = F.when(
-                        b2 * p_ + r_ > 0.0,
-                        (1 + b2) * p_ * r_ / (b2 * p_ + r_)
-                    ).otherwise(F.lit(0.0))
-                    f_sum = f_sum + F.when(eff, f_n).otherwise(F.lit(0.0))
-                    n_eff = n_eff + eff.cast("int")
-                return F.when(n_eff == 0, F.lit(0.0)) \
-                    .otherwise(f_sum / n_eff)
-            p_sum = F.lit(0.0)
-            r_sum = F.lit(0.0)
-            n_eff = F.lit(0)
-            for m_k, tc_k, tr_k, _kind, _n in triples:
-                m = get(m_k).cast("double")
-                tc = get(tc_k).cast("double")
-                tr = get(tr_k).cast("double")
-                eff = (tc > 0) | (tr > 0)
-                p_ = F.when(tc > 0, m / tc).otherwise(F.lit(0.0))
-                r_ = F.when(tr > 0, m / tr).otherwise(F.lit(0.0))
-                p_sum = p_sum + F.when(eff, p_).otherwise(F.lit(0.0))
-                r_sum = r_sum + F.when(eff, r_).otherwise(F.lit(0.0))
-                n_eff = n_eff + eff.cast("int")
-            pavg = p_sum / n_eff
-            ravg = r_sum / n_eff
-            return F.when(n_eff == 0, F.lit(0.0)) \
-                .when(pavg + ravg == 0.0, F.lit(0.0)) \
-                .otherwise((1 + b2) * pavg * ravg / (b2 * pavg + ravg))
-
-        return shared, build, score, False, fields
-
-    # corpusWer / corpusTer — the edit-rate statistics share a shape:
-    # per-segment (numerator, reference length) through the Arrow DP
-    # boundary; the corpus score is Σnum / Σn_ref (lower is better)
-    if statistic == "corpusTer":
-        max_words = int(expression.get("maxWords", 250))
-        max_shift_size = int(expression.get("maxShiftSize", 10))
-        max_shift_dist = int(expression.get("maxShiftDistance", 50))
-        case_sensitive = bool(expression.get("caseSensitive", True))
-        if max_shift_size < 1:
-            raise ValueError(f"{stage_name} maxShiftSize must be >= 1")
-        if max_shift_dist < 0:
-            raise ValueError(
-                f"{stage_name} maxShiftDistance must be >= 0")
-        num = "edits"
-        udf_type = _TER_TYPE
-        udf_cols = ["edits", "ter", "shifts", "n_hyp", "n_ref"]
-
-        def scorers():
-            return _make_ter_scorers(max_words, max_shift_size,
-                                     max_shift_dist)
-    else:
-        max_words = int(expression.get("maxWords", 2000))
-        case_sensitive = bool(expression.get("caseSensitive", True))
-        num = "distance"
-        udf_type = _WER_TYPE
-        udf_cols = ["distance", "wer", "n_hyp", "n_ref"]
-
-        def scorers():
-            return _make_wer_scorers(max_words)
-    if max_words < 1:
-        raise ValueError(f"{stage_name} maxWords must be >= 1")
-    fields = [num, "n_ref"]
-    null_row = (None,) * len(udf_cols)
-
-    def shared(stage: DataFrame, sctx: ExprContext):
-        return stage, F.lit(True)  # validity lives in the null struct
-
-    def build(stage: DataFrame, sctx: ExprContext, cand_e: Any,
-              suffix: str):
-        score_one, score_multi = scorers()
-        cand = compile_expr(cand_e, sctx)
-        if not case_sensitive:
-            cand = F.lower(cand)
-        if refs_e is not None:
-            refs = compile_expr(refs_e, sctx)
-            if not case_sensitive:
-                refs = F.transform(refs, F.lower)
-
-            @F.pandas_udf(udf_type)
-            def _w(s: pd.Series, t: pd.Series) -> pd.DataFrame:
-                vals = [None if rs is None else score_multi(ct, list(rs))
-                        for ct, rs in zip(s, t)]
-                return pd.DataFrame(
-                    [null_row if v is None else v for v in vals],
-                    columns=udf_cols)
-
-            raw = _w(cand, refs)
-        else:
-            ref = compile_expr(ref_e, sctx)
-            if not case_sensitive:
-                ref = F.lower(ref)
-
-            @F.pandas_udf(udf_type)
-            def _w(s: pd.Series, t: pd.Series) -> pd.DataFrame:
-                vals = [None if ct is None or rt is None
-                        else score_one(ct, rt)
-                        for ct, rt in zip(s, t)]
-                return pd.DataFrame(
-                    [null_row if v is None else v for v in vals],
-                    columns=udf_cols)
-
-            raw = _w(cand, ref)
-        p = f"__pb{suffix}"
-        stage = stage.withColumn(f"{p}_raw", raw)
-        stage = stage.withColumn(f"{p}_{num}", F.col(f"{p}_raw.{num}"))
-        stage = stage.withColumn(f"{p}_n_ref", F.col(f"{p}_raw.n_ref"))
-        return stage, F.col(f"{p}_raw.n_hyp").isNotNull()
-
-    def score(get) -> Column:
-        d = get(num).cast("double")
-        r = get("n_ref").cast("double")
-        return F.when(get("n_ref") > 0, d / r) \
-            .when(get(num) == 0, F.lit(0.0)) \
-            .otherwise(F.lit(None).cast("double"))
-
-    return shared, build, score, True, fields
+def _system_score(m: _CorpusMetric, i: int) -> Column:
+    """System ``i``'s corpus score over the (weighted) sums."""
+    return m.score(lambda f: F.col(_stat(i, f)))
 
 
 @register_stage("$pairedBootstrap", "corpus")
@@ -3554,29 +2936,25 @@ def paired_bootstrap_stage(expression: Any, ctx: Context) -> StageFn:
     anywhere).  ``id`` must be a stable per-segment key.  Rows with a
     null id/a/b are EXCLUDED.
 
-    CORPUS-ONLY: gated in streaming like $bleuCorpus — a
-    per-micro-batch "significance test" is a silent wrong answer.
-
     STATISTIC MODES (r11, the full Koehn 2004 procedure):
     ``statistic: "mean"`` (default) resamples the mean of the two
     per-segment score columns ``a``/``b`` — correct for decomposable
     metrics (WER-as-mean, accuracy, EM/F1).  For NON-decomposable
     corpus metrics (mean of sentence BLEUs ≠ corpus BLEU — the reason
     $bleuCorpus exists), ``statistic: "corpusBleu" | "corpusChrf" |
-    "corpusWer"`` recomputes the CORPUS metric per replicate as
-    ``score(Σ wᵢ·statsᵢ)`` over per-segment sufficient statistics —
-    bit-identical to rescoring the resampled test set, because each
-    corpus metric is a function of summed per-segment counts.  In
-    these modes ``a``/``b`` are the two systems' candidate expressions
-    (or ``{candidate: <expr>}``), a shared ``reference`` /
-    ``references`` sits at the top level, and the metric options
-    (``maxN``/``maxWords``/``smooth`` for BLEU; ``maxN``/``beta``/
-    ``maxChars`` for chrF, single-reference like $chrfCorpus;
-    ``maxWords`` for WER) apply to both systems.  ``mean_a``/
-    ``mean_b`` then carry the two CORPUS scores; for ``corpusWer``
-    (lower is better) ``wins_a`` counts replicates where A's WER is
-    LOWER (delta < 0).  Segments where either system or the reference
-    side is unscorable are EXCLUDED (pairing requires both).
+    "corpusWer" | "corpusTer"`` recomputes the CORPUS metric per
+    replicate as ``score(Σ wᵢ·statsᵢ)`` over per-segment sufficient
+    statistics — bit-identical to rescoring the resampled test set,
+    because each corpus metric is a function of summed per-segment
+    counts.  In these modes ``a``/``b`` are the two systems' candidate
+    expressions (or ``{candidate: <expr>}``), a shared ``reference`` /
+    ``references`` sits at the top level, and the metric options (the
+    matching $xCorpus stage's; chrF is single-reference like
+    $chrfCorpus) apply to both systems.  ``mean_a``/``mean_b`` then
+    carry the two CORPUS scores; for ``corpusWer``/``corpusTer`` (lower
+    is better) ``wins_a`` counts replicates where A's rate is LOWER
+    (delta < 0).  Segments where either system or the reference side
+    is unscorable are EXCLUDED (pairing requires both).
 
     100 TB shape: the replicate axis explodes row-locally (n x B
     weights, each one md5 + a CASE ladder) and groupBy(replicate)
@@ -3585,20 +2963,15 @@ def paired_bootstrap_stage(expression: Any, ctx: Context) -> StageFn:
     1-row base-means frame combine via the pinned 1-row broadcast
     cross join.  B defaults to 200 (Koehn uses 300-1000 at eval-set
     scale; raise it for small n).  Corpus modes ride the same shape —
-    the explode carries ~2·|fields| longs instead of 2 doubles, and
+    the explode carries 2·|fields| longs instead of 2 doubles, and
     every per-replicate corpus score is arithmetic on one row of
     integer sums."""
     id_e = expression["id"]
     a_e = expression["a"]
     b_e = expression["b"]
-    statistic = expression.get("statistic", "mean")
-    if statistic not in ("mean",) + _CORPUS_STATISTICS:
-        raise ValueError(
-            "$pairedBootstrap statistic must be one of "
-            f"mean|{'|'.join(_CORPUS_STATISTICS)}, got {statistic!r}")
-    if statistic != "mean":
-        machinery = _corpus_stat_machinery(statistic, expression,
-                                           "$pairedBootstrap")
+    metric, ref_e, refs_e = _corpus_statistic("$pairedBootstrap",
+                                              expression)
+    if metric is not None:
         a_e = a_e["candidate"] if isinstance(a_e, dict) else a_e
         b_e = b_e["candidate"] if isinstance(b_e, dict) else b_e
     samples = int(expression.get("samples", 200))
@@ -3613,112 +2986,56 @@ def paired_bootstrap_stage(expression: Any, ctx: Context) -> StageFn:
         df = _spread(df)
         sctx = ExprContext(schema=df.schema)
         idc = compile_expr(id_e, sctx).cast("string")
-        if statistic != "mean":
-            shared, build, stat_score, lower_better, fields = machinery
-            stage = df.withColumn("__pb_id", idc)
-            stage, ok_sh = shared(stage, sctx)
-            stage, ok_a = build(stage, sctx, a_e, "a")
-            stage, ok_b = build(stage, sctx, b_e, "b")
-            slim = stage.select(
-                F.col("__pb_id").alias("__id"),
-                (ok_sh & ok_a & ok_b).alias("__ok"),
-                *[F.col(f"__pba_{f}").alias(f"__a_{f}") for f in fields],
-                *[F.col(f"__pbb_{f}").alias(f"__b_{f}") for f in fields])
-            # same checkpoint barrier + ordering rationale as the mean
-            # path below (predicate-pushdown substitution hazard)
+        if metric is not None:
+            rep, base = _corpus_replicates(
+                df, sctx, idc, metric, [a_e, b_e], ref_e, refs_e, samples,
+                seed)
+            sa, sb = _system_score(metric, 0), _system_score(metric, 1)
+            delta_r = F.when(F.col("__wsum") > 0, sa - sb)
+            win = (delta_r < 0) if metric.lower_is_better else (delta_r > 0)
+            base = base.select("n", sa.alias("mean_a"), sb.alias("mean_b"))
+        else:
+            a = compile_expr(a_e, sctx).cast("double")
+            b = compile_expr(b_e, sctx).cast("double")
+            slim = df.select(
+                idc.alias("__id"), a.alias("__a"), b.alias("__b"))
+            # HARD plan barrier (a checkpoint) BETWEEN
+            # the projection and the null filter.  Ordering is the whole
+            # point: a filter placed below the barrier gets predicate-
+            # pushed through every upstream Project, each crossing
+            # SUBSTITUTING the metric attributes with their defining
+            # expressions — a $chrf/$bleu column program inlines
+            # combinatorially (measured 173 s vs 7 s for a mere
+            # isNotNull over two chrF scores on 500 docs).  With the
+            # barrier first, the filter tests materialized slim rows, the
+            # upstream metric evaluates exactly once per row, and the
+            # base-means and replicate subtrees share the same
+            # materialization (context.pin).
             slim = pin(slim)
             pairs = slim.filter(
-                F.col("__id").isNotNull() & F.col("__ok"))
-            statcols = ([f"__a_{f}" for f in fields]
-                        + [f"__b_{f}" for f in fields])
-            ws = F.transform(
-                F.sequence(F.lit(1), F.lit(samples)),
-                lambda r: _poisson1_weight(seed, F.col("__id"), r))
-            ex = pairs.withColumn("__ws", ws).select(
-                *statcols, F.posexplode("__ws").alias("__r", "__w"))
-            wl = F.col("__w").cast("long")  # integer weights: exact sums
+                F.col("__id").isNotNull() & F.col("__a").isNotNull()
+                & F.col("__b").isNotNull())
+            ex = _replicate_rows(pairs, seed, samples, ["__a", "__b"])
+            wd = F.col("__w").cast("double")
             rep = ex.groupBy("__r").agg(
-                *[F.sum(wl * F.col(sc)).alias(sc) for sc in statcols],
+                F.sum(wd * (F.col("__a") - F.col("__b"))).alias("__wdiff"),
                 F.sum("__w").alias("__wsum"))
-            sa_r = stat_score(lambda f: F.col(f"__a_{f}"))
-            sb_r = stat_score(lambda f: F.col(f"__b_{f}"))
-            delta_r = F.when(F.col("__wsum") > 0, sa_r - sb_r)
-            win = (delta_r < 0) if lower_better else (delta_r > 0)
-            summ = rep.agg(
-                F.coalesce(F.sum(F.when(win, 1).otherwise(0)), F.lit(0))
-                .cast("long").alias("wins_a"),
-                F.coalesce(
-                    F.sum(F.when(delta_r.isNull() | (delta_r == 0), 1)
-                          .otherwise(0)), F.lit(0)
-                ).cast("long").alias("ties"),
-            )
+            delta_r = F.when(
+                F.col("__wsum") > 0,
+                F.col("__wdiff") / F.col("__wsum").cast("double"))
+            win = delta_r > 0
             base = pairs.agg(
                 F.count(F.lit(1)).alias("n"),
-                *[F.sum(sc).alias(sc) for sc in statcols])
-            sa_b = stat_score(lambda f: F.col(f"__a_{f}"))
-            sb_b = stat_score(lambda f: F.col(f"__b_{f}"))
-            out = base.crossJoin(F.broadcast(summ))
-            null_d = F.lit(None).cast("double")
-            empty = F.col("n") == 0
-            return out.select(
-                "n",
-                F.when(empty, null_d).otherwise(sa_b).alias("mean_a"),
-                F.when(empty, null_d).otherwise(sb_b).alias("mean_b"),
-                F.when(empty, null_d).otherwise(sa_b - sb_b)
-                .alias("delta"),
-                F.col("wins_a"),
-                F.col("ties"),
-                F.lit(samples).cast("long").alias("b_samples"),
-                F.when(empty, null_d)
-                .otherwise((F.lit(samples) - F.col("wins_a"))
-                           .cast("double") / F.lit(float(samples)))
-                .alias("p_value"),
-            )
-        a = compile_expr(a_e, sctx).cast("double")
-        b = compile_expr(b_e, sctx).cast("double")
-        slim = df.select(
-            idc.alias("__id"), a.alias("__a"), b.alias("__b"))
-        # HARD plan barrier (a checkpoint) BETWEEN
-        # the projection and the null filter.  Ordering is the whole
-        # point: a filter placed below the barrier gets predicate-
-        # pushed through every upstream Project, each crossing
-        # SUBSTITUTING the metric attributes with their defining
-        # expressions — a $chrf/$bleu column program inlines
-        # combinatorially (measured 173 s vs 7 s for a mere
-        # isNotNull over two chrF scores on 500 docs).  With the
-        # barrier first, the filter tests materialized slim rows, the
-        # upstream metric evaluates exactly once per row, and the
-        # base-means and replicate subtrees share the same
-        # materialization (context.pin).
-        slim = pin(slim)
-        pairs = slim.filter(
-            F.col("__id").isNotNull() & F.col("__a").isNotNull()
-            & F.col("__b").isNotNull())
-
-        ws = F.transform(
-            F.sequence(F.lit(1), F.lit(samples)),
-            lambda r: _poisson1_weight(seed, F.col("__id"), r))
-        ex = pairs.withColumn("__ws", ws).select(
-            "__a", "__b", F.posexplode("__ws").alias("__r", "__w"))
-        wd = F.col("__w").cast("double")
-        rep = ex.groupBy("__r").agg(
-            F.sum(wd * (F.col("__a") - F.col("__b"))).alias("__wdiff"),
-            F.sum("__w").alias("__wsum"))
-        delta_r = F.when(F.col("__wsum") > 0,
-                         F.col("__wdiff") / F.col("__wsum").cast("double"))
+                F.avg("__a").alias("mean_a"),
+                F.avg("__b").alias("mean_b"))
         summ = rep.agg(
-            F.coalesce(
-                F.sum(F.when(delta_r > 0, 1).otherwise(0)), F.lit(0)
-            ).cast("long").alias("wins_a"),
+            F.coalesce(F.sum(F.when(win, 1).otherwise(0)), F.lit(0))
+            .cast("long").alias("wins_a"),
             F.coalesce(
                 F.sum(F.when(delta_r.isNull() | (delta_r == 0), 1)
                       .otherwise(0)), F.lit(0)
             ).cast("long").alias("ties"),
         )
-        base = pairs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg("__a").alias("mean_a"),
-            F.avg("__b").alias("mean_b"))
         out = base.crossJoin(F.broadcast(summ))
         null_d = F.lit(None).cast("double")
         empty = F.col("n") == 0
@@ -3813,8 +3130,6 @@ def bootstrap_ci_stage(expression: Any, ctx: Context) -> StageFn:
     statistics.  Rows with a null id/input are EXCLUDED; empty corpus
     -> n = 0, null interval.
 
-    CORPUS-ONLY in streaming, like $pairedBootstrap.
-
     STATISTIC MODES (r11): ``statistic: "mean"`` (default) intervals
     the mean of the per-segment ``input`` column.  ``statistic:
     "corpusBleu" | "corpusChrf" | "corpusWer" | "corpusTer"``
@@ -3824,9 +3139,10 @@ def bootstrap_ci_stage(expression: Any, ctx: Context) -> StageFn:
     (the Koehn 2004 procedure; see $pairedBootstrap).  In corpus modes
     the spec takes ``candidate`` (instead of ``input``) plus
     ``reference`` / ``references`` and the metric options; ``mean``
-    carries the full-corpus score.  Replicates whose corpus score is
-    undefined (e.g. corpusWer with an all-empty resampled reference)
-    are excluded from the order statistics like zero-weight replicates.
+    carries the full-corpus score, which equals the matching $xCorpus
+    score.  Replicates whose corpus score is undefined (e.g.
+    corpusWer with an all-empty resampled reference) are excluded
+    from the order statistics like zero-weight replicates.
 
     100 TB shape: identical to $pairedBootstrap — row-local replicate
     explode, partial-aggregated groupBy(replicate) (<= B rows per task
@@ -3835,14 +3151,8 @@ def bootstrap_ci_stage(expression: Any, ctx: Context) -> StageFn:
     cross join; the checkpoint barrier keeps an upstream metric
     program evaluated once per row."""
     id_e = expression["id"]
-    statistic = expression.get("statistic", "mean")
-    if statistic not in ("mean",) + _CORPUS_STATISTICS:
-        raise ValueError(
-            "$bootstrapCI statistic must be one of "
-            f"mean|{'|'.join(_CORPUS_STATISTICS)}, got {statistic!r}")
-    if statistic != "mean":
-        machinery = _corpus_stat_machinery(statistic, expression,
-                                           "$bootstrapCI")
+    metric, ref_e, refs_e = _corpus_statistic("$bootstrapCI", expression)
+    if metric is not None:
         in_e = expression["candidate"]
     else:
         in_e = expression["input"]
@@ -3863,48 +3173,20 @@ def bootstrap_ci_stage(expression: Any, ctx: Context) -> StageFn:
 
         sctx = ExprContext(schema=df.schema)
         idc = compile_expr(id_e, sctx).cast("string")
-        if statistic != "mean":
-            shared, build, stat_score, _lower, fields = machinery
-            stage = df.withColumn("__bci_id", idc)
-            stage, ok_sh = shared(stage, sctx)
-            stage, ok_a = build(stage, sctx, in_e, "a")
-            slim = stage.select(
-                F.col("__bci_id").alias("__id"),
-                (ok_sh & ok_a).alias("__ok"),
-                *[F.col(f"__pba_{f}").alias(f"__a_{f}") for f in fields])
-            slim = pin(slim)
-            pairs = slim.filter(
-                F.col("__id").isNotNull() & F.col("__ok"))
-            statcols = [f"__a_{f}" for f in fields]
-            ws = F.transform(
-                F.sequence(F.lit(1), F.lit(samples)),
-                lambda r: _poisson1_weight(seed, F.col("__id"), r))
-            ex = pairs.withColumn("__ws", ws).select(
-                *statcols, F.posexplode("__ws").alias("__r", "__w"))
-            wl = F.col("__w").cast("long")
-            rep = ex.groupBy("__r").agg(
-                *[F.sum(wl * F.col(sc)).alias(sc) for sc in statcols],
-                F.sum("__w").alias("__wsum"))
-            mean_r = F.when(
-                F.col("__wsum") > 0,
-                stat_score(lambda f: F.col(f"__a_{f}")))
-            base_cols = [F.count(F.lit(1)).alias("n")] + \
-                [F.sum(sc).alias(sc) for sc in statcols]
-            base = pairs.agg(*base_cols).select(
-                "n",
-                stat_score(lambda f: F.col(f"__a_{f}")).alias("mean"))
+        if metric is not None:
+            rep, base = _corpus_replicates(
+                df, sctx, idc, metric, [in_e], ref_e, refs_e, samples, seed)
+            score = _system_score(metric, 0)
+            mean_r = F.when(F.col("__wsum") > 0, score)
+            base = base.select("n", score.alias("mean"))
         else:
             v = compile_expr(in_e, sctx).cast("double")
             slim = df.select(idc.alias("__id"), v.alias("__v"))
             slim = pin(slim)
             pairs = slim.filter(
                 F.col("__id").isNotNull() & F.col("__v").isNotNull())
-            ws = F.transform(
-                F.sequence(F.lit(1), F.lit(samples)),
-                lambda r: _poisson1_weight(seed, F.col("__id"), r))
-            ex = pairs.withColumn("__ws", ws).select(
-                "__v", F.posexplode("__ws").alias("__r", "__w"))
-            rep = ex.groupBy("__r").agg(
+            rep = _replicate_rows(pairs, seed, samples, ["__v"]).groupBy(
+                "__r").agg(
                 F.sum(F.col("__w").cast("double") * F.col("__v"))
                 .alias("__wv"),
                 F.sum("__w").alias("__wsum"))
@@ -4138,9 +3420,9 @@ def permutation_test_stage(expression: Any, ctx: Context) -> StageFn:
     impossible by construction).  Replicates compare SUMS, not means
     (same n every replicate), so no division enters the comparison.
 
-    DETERMINISM + CORPUS-ONLY: exactly the $pairedBootstrap contract
-    — pure function of the data, bit-reproducible, DuckDB-oracle-able,
-    gated in streaming.  Rows with a null id/a/b are EXCLUDED."""
+    DETERMINISM: exactly the $pairedBootstrap contract — pure function
+    of the data, bit-reproducible, DuckDB-oracle-able.  Rows with a
+    null id/a/b are EXCLUDED."""
     id_e = expression["id"]
     a_e = expression["a"]
     b_e = expression["b"]

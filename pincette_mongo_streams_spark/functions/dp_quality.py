@@ -7,13 +7,10 @@ Split out of functions/datapipe.py (r10); the import surface stays
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Optional
-
-import pandas as pd
+from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..context import Context
 from ..expressions import ExprContext, compile_expr

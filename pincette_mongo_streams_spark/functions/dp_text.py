@@ -9,7 +9,7 @@ Split out of functions/datapipe.py (r10); the import surface stays
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Optional
+from typing import Any, Iterator
 
 import pandas as pd
 

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import features
-from .expressions import ExprContext, _lit_deep, compile_expr, mongo_truthy, truthy_expr
+from .expressions import ExprContext, _lit_deep, truthy_expr
 from .paths import split_path
 
 _FIELD_OPS = {

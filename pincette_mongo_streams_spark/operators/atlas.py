@@ -496,12 +496,10 @@ def _norm_terms(query: str) -> list[str]:
 # over literal rings; see that module's docstring for the planar
 # approximation notes).
 
-from ..geo import (EARTH_R_M as _EARTH_R_M,  # noqa: E402
-                   geo_point as _geo_point,
+from ..geo import (geo_point as _geo_point,  # noqa: E402
                    haversine_m as _haversine_m,
                    lonlat_from_type as _lonlat_from_type,
-                   point_in_geometry as _point_in_geometry,
-                   point_in_ring as _point_in_ring)
+                   point_in_geometry as _point_in_geometry)
 
 
 def _geo_lonlat(df: DataFrame, path: str) -> tuple[Column, Column]:

@@ -28,7 +28,6 @@ Reference (src/main/java/net/pincette/mongo/streams/):
 from __future__ import annotations
 
 import json
-import math
 import os
 import time
 from typing import Any, Iterator, Optional

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..context import Context, pin

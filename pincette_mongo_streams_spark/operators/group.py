@@ -57,9 +57,7 @@ from pyspark.sql import types as T
 
 from ..context import Context
 from ..expressions import ExprContext, compile_expr
-from ..paths import split_path
 from ..pipeline import StageFn, register_stage
-from .stateless import KEY_COL
 
 
 def _is_literal_id(expr: Any) -> bool:

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..context import Context
-from ..expressions import REMOVE, ExprContext, Remove, compile_expr
+from ..expressions import ExprContext, Remove, compile_expr
 from ..match import compile_match
 from ..paths import drop_path, nested_col, set_path, split_path
 from ..pipeline import StageFn, register_stage

@@ -131,7 +131,13 @@ def sql_stage(expression: Any, ctx: Context) -> StageFn:
     touched and two concurrent pipelines can't collide.  Catalyst sees
     one seamless plan: filters/projections in the SQL still push into
     the upstream scan, so there is no optimization boundary and no
-    scale cost beyond what the SQL itself does."""
+    scale cost beyond what the SQL itself does.
+
+    In a streaming pipeline the statement runs once per micro-batch
+    (the ``per_batch`` kind), which is right for row-local SQL only: a
+    statement that aggregates, sorts, limits, windows or deduplicates
+    ``{this}`` raises when the batch runs (its answer would cover one
+    micro-batch, not the stream) — use $group, or run as a batch."""
     if isinstance(expression, str):
         query, views = expression, []
     elif isinstance(expression, dict) and "query" in expression:
@@ -168,12 +174,57 @@ def sql_stage(expression: Any, ctx: Context) -> StageFn:
                 "(e.g. RLIKE 'a{{2,3}}')")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        frames = {"this": df}
+        # in a micro-batch, {this} carries a marker alias so the check
+        # below finds where the batch enters the statement's plan
+        frames = {"this": df.alias(_THIS) if c.micro_batch else df}
         for name in views:
             if name not in c.collections:
                 raise ValueError(f"$sql view {name!r} is not a known "
                                  "collection")
             frames[name] = c.collections[name]
-        return df.sparkSession.sql(query, **frames)
+        out = df.sparkSession.sql(query, **frames)
+        if c.micro_batch:
+            node = _whole_input_node(out._jdf.queryExecution().analyzed())
+            if node is not None:
+                raise ValueError(
+                    f"$sql runs once per micro-batch in a streaming "
+                    f"pipeline, so its {node} over {{this}} would answer "
+                    "for one batch only, not the stream: move the "
+                    "aggregation to $group, or run the pipeline as a "
+                    "batch")
+        return out
 
     return fn
+
+
+_THIS = "__sql_this"
+
+# plan nodes whose answer depends on every input row: over one
+# micro-batch they silently compute a within-batch answer
+_WHOLE_INPUT_NODES = {"Aggregate", "Sort", "GlobalLimit", "LocalLimit",
+                      "Window", "Deduplicate", "Distinct", "Intersect",
+                      "Except"}
+
+
+def _whole_input_node(plan) -> Any:
+    """Name of the first whole-input node (``_WHOLE_INPUT_NODES``) above
+    the ``_THIS``-aliased frame in an analyzed JVM plan, or None.  The
+    walk stops at the marker, so nodes of upstream stages (below it)
+    and nodes over other views only (no marker beneath) do not count;
+    subquery plans are walked too."""
+
+    def walk(node):  # -> (holds the marker, offending node name)
+        if (node.nodeName() == "SubqueryAlias"
+                and node.alias() == _THIS):
+            return True, None
+        found, bad = False, None
+        kids = [node.children(), node.subqueries()]
+        for seq in kids:
+            for i in range(seq.size()):
+                f, b = walk(seq.apply(i))
+                found, bad = found or f, bad or b
+        if bad is None and found and node.nodeName() in _WHOLE_INPUT_NODES:
+            bad = node.nodeName()
+        return found, bad
+
+    return walk(plan)[1]

@@ -1184,6 +1184,41 @@ def test_chrf_plus_plus_corpus_and_bootstrap(spark):
     assert ci["ci_low"] <= want <= ci["ci_high"]
 
 
+@pytest.mark.parametrize("statistic,stage,ref_key,opts", [
+    ("corpusBleu", "$bleuCorpus", "reference", {"maxN": 3, "smooth": "add1"}),
+    ("corpusBleu", "$bleuCorpus", "references", {"tokenizer": "13a"}),
+    ("corpusChrf", "$chrfCorpus", "reference",
+     {"maxN": 3, "wordOrder": 2, "formula": "sacrebleu"}),
+    ("corpusWer", "$werCorpus", "reference", {"caseSensitive": False}),
+    ("corpusWer", "$werCorpus", "references", {"maxWords": 6}),
+    ("corpusTer", "$terCorpus", "reference", {"maxShiftSize": 3}),
+    ("corpusTer", "$terCorpus", "references", {}),
+])
+def test_corpus_score_has_one_definition(spark, statistic, stage, ref_key,
+                                         opts):
+    """The full-corpus ``mean`` of ``$bootstrapCI {statistic}`` IS the
+    matching ``$xCorpus`` score — equal exactly, not within a tolerance
+    — on the same rows and options, a null-candidate row included
+    (both exclude it)."""
+    rng = random.Random(7411)
+    rows = []
+    for i, c, r in _pairs(4401, 40):
+        refs = [r, _rand_text(rng), None]
+        rows.append((i, None if i == 3 else c, r, refs))
+    df = spark.createDataFrame(
+        rows, "i long, c string, r string, refs array<string>")
+    ref = {ref_key: "$r" if ref_key == "reference" else "$refs"}
+    ctx = Context(spark=spark)
+    corpus = compile_pipeline(
+        [{stage: {"candidate": "$c", **ref, **opts}}], ctx)(df).collect()[0]
+    ci = compile_pipeline(
+        [{"$bootstrapCI": {"id": "$i", "statistic": statistic,
+                           "candidate": "$c", **ref, **opts,
+                           "samples": 5}}], ctx)(df).collect()[0]
+    assert corpus["n_segments"] == ci["n"] == len(rows) - 1
+    assert ci["mean"] == corpus[stage[1:-len("Corpus")]]
+
+
 def test_bleu_intl_tokenizer(spark):
     """tokenizer: "intl" (mteval-v14 international, sacrebleu's second
     tokenizer) — equivalence against a Python implementation of the

@@ -964,6 +964,24 @@ def test_sql_stage_streams(spark, tmpdir):
     assert rows == [(2, 40), (3, 60)]
 
 
+def test_sql_stage_rejects_within_batch_aggregate(spark, tmpdir):
+    """$sql runs once per micro-batch, so a GROUP BY over {this} would
+    emit a per-batch count (n = 2, then n = 1, where the batch run
+    gives n = 3); it raises naming the fix instead.  An aggregate that
+    does not read {this} (here a scalar subquery over constants) stays
+    row-local and runs."""
+    schema = "k string"
+    batches = [[{"k": "a"}, {"k": "a"}], [{"k": "a"}]]
+    with pytest.raises(Exception, match=r"\$sql runs once per micro-batch"):
+        _run(spark, str(tmpdir), schema, batches,
+             [{"$sql": "SELECT k, count(*) AS n FROM {this} GROUP BY k"}])
+    out = _run(
+        spark, str(tmpdir), schema, batches,
+        [{"$sql": "SELECT k, (SELECT max(x) FROM VALUES (1), (5) AS v(x)) "
+                  "AS m FROM {this}"}])
+    assert sorted((r["k"], r["m"]) for e in out for r in e) == [("a", 5)] * 3
+
+
 def test_rocksdb_state_store_provider(spark, tmpdir):
     """r6: `state_store="rocksdb"` lands the provider + changelog
     checkpointing confs and the stateful operators ($group update mode,
