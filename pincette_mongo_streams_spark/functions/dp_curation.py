@@ -1021,7 +1021,7 @@ def mix_corpora_stage(expression: Any, ctx: Context) -> StageFn:
     def fn(df: DataFrame, c: Context) -> DataFrame:
         out = None
         for name, src, rate, part_id in parts:
-            part = df if src is None else c.collections[src]
+            part = df if src is None else c.collection(src)
             idc = compile_expr(part_id, ExprContext(schema=part.schema))
             # null ids hash as the empty string (coalesce), not to a
             # dropped NULL predicate — a row's fate must be a decision,

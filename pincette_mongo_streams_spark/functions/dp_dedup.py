@@ -250,11 +250,10 @@ def word_shingles(col: Column, n: int) -> Column:
 
 def sql_field_ref(expr: Any) -> Optional[str]:
     """Backticked SQL reference for a plain ``"$field.path"`` expression,
-    else None — the gate for the generated-SQL fast paths below.  (r12
-    build-latency lever: the classic Dataset API ANALYZES eagerly on
-    every transformation, so a stage built as one selectExpr over SQL
-    text pays one analyzer pass + one py4j round trip where the
-    equivalent Column chain pays dozens.)"""
+    else None.  Stages built as generated SQL text read such a field in
+    place (the classic Dataset API analyzes eagerly on every
+    transformation, so one selectExpr over SQL text pays one analyzer
+    pass where the equivalent Column chain pays dozens)."""
     if isinstance(expr, str) and expr.startswith("$") \
             and not expr.startswith("$$"):
         from ..paths import split_path
@@ -265,10 +264,32 @@ def sql_field_ref(expr: Any) -> Optional[str]:
     return None
 
 
+# a plain identifier id can be named in generated SQL as is
+_SIMPLE_ID = _re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def sql_input(df: DataFrame, inp: Any, col: str,
+              id_field: Optional[str] = None) -> tuple:
+    """``(frame, input ref, id ref)`` for a stage built as generated SQL.
+    A plain ``"$field"`` input (with a plain identifier id, when one is
+    asked for) is read in place.  Any other input is first projected to
+    the temporary column ``col`` — next to every column, or next to only
+    the id when ``id_field`` is given — and the same SQL runs over that
+    column."""
+    ref = sql_field_ref(inp)
+    if ref is not None and (id_field is None
+                            or _SIMPLE_ID.fullmatch(id_field)):
+        return df, ref, id_field and f"`{id_field}`"
+    value = compile_expr(inp, ExprContext(schema=df.schema)).alias(col)
+    if id_field is None:
+        return df.select("*", value), f"`{col}`", None
+    df = df.select(F.col(id_field), value)
+    return df, f"`{col}`", "`" + df.columns[0].replace("`", "``") + "`"
+
+
 def word_shingles_sql(ref: str, n: int) -> str:
-    """``word_shingles`` as one SQL string over a column reference —
-    tree-identical to the Column form (same split/sequence/slice plan;
-    pinned by the $minhash equivalence test)."""
+    """``word_shingles`` as one SQL string over a column reference (the
+    same split/sequence/slice chain)."""
     w = f"split(lower({ref}), '\\\\s+')"
     idx = (f"CASE WHEN size({w}) - {n - 1} > 0 "
            f"THEN sequence(0, size({w}) - {n}) "
@@ -309,37 +330,64 @@ def _pair_dot(a: Column, b: Column) -> Column:
                        lambda acc, v: acc + v)
 
 
-def _cc_labels(pairs: DataFrame) -> DataFrame:
-    """Connected components over a near-dup pair frame (__ida, __idb):
-    resolves chained near-dups (a≈b≈c with a̸≈c) into one component,
-    labeled by its min id (columns __cc_node, __cc_comp)."""
-    from ..operators.graphcc import connected_components
-
-    return connected_components(
-        pairs.select(F.col("__ida").alias("a"), F.col("__idb").alias("b")))
+# ------------------------------------------------ near-dup pair resolution
 
 
-def _annotate_components(df: DataFrame, labels: DataFrame,
-                         id_field: str, as_field: str) -> DataFrame:
-    """ANNOTATE mode shared by $minhashDedup/$embedDedup/$semanticDedup:
-    label every row with its component id (isolated rows label
-    themselves) instead of dropping."""
-    lab = labels.select(F.col("__cc_node").alias("__did"),
-                        F.col("__cc_comp").alias("__lab"))
+def check_annotate(stage: str, transitive: bool, as_field: Any) -> None:
+    """``as`` labels rows with connected-component ids, so it needs
+    ``transitive: true`` (pairwise resolution has no single well-defined
+    cluster per document)."""
+    if as_field and not transitive:
+        raise ValueError(
+            f"{stage} as (annotate mode) requires transitive: true — "
+            "cluster labels are connected-component ids")
+
+
+def _keeper_pairs(buckets: DataFrame, *carry: str) -> DataFrame:
+    """The min ``__did`` of each ``__bucket`` is its keeper; every other
+    member pairs with it as a DISTINCT ``(__did, *carry, __keep)`` row."""
+    keepers = buckets.groupBy("__bucket").agg(F.min("__did").alias("__keep"))
     return (
-        df.join(lab, df[id_field] == lab["__did"], "left")
-        .withColumn(as_field, F.coalesce(F.col("__lab"), F.col(id_field)))
-        .drop("__did", "__lab")
+        buckets.join(keepers, "__bucket")
+        .filter(F.col("__did") != F.col("__keep"))
+        .select("__did", *carry, "__keep")
+        .distinct()
     )
 
 
-def _component_dups(labels: DataFrame) -> DataFrame:
-    """Every non-representative component member as a (__did) frame —
-    exactly the min-id doc of each cluster survives the anti-join."""
-    return (
-        labels.filter(F.col("__cc_node") != F.col("__cc_comp"))
-        .select(F.col("__cc_node").alias("__did"))
-    )
+def resolve_pairs(df: DataFrame, pairs: DataFrame, id_field: str,
+                  transitive: bool, as_field: Optional[str] = None
+                  ) -> DataFrame:
+    """The one resolution rule of the near-dup stages, over ``pairs`` of
+    (``__did`` duplicate member, ``__keep`` the doc it duplicates):
+
+    - pairwise: every member row of ``df`` is dropped;
+    - ``transitive``: the pairs are edges of connected components
+      (operators/graphcc.py), so chained near-dups (a≈b≈c with a̸≈c)
+      form one cluster and exactly its min id survives;
+    - ``as_field`` (with ``transitive``): annotate — every row is kept
+      and labeled with its component id (isolated rows label
+      themselves); compose with ``$groupCap`` to keep the best doc per
+      cluster instead of the min-id one."""
+    if not transitive:
+        dups = pairs.select("__did").distinct()
+    else:
+        from ..operators.graphcc import connected_components
+
+        labels = connected_components(pairs.select(
+            F.col("__did").alias("a"), F.col("__keep").alias("b")))
+        if as_field:
+            lab = labels.select(F.col("__cc_node").alias("__did"),
+                                F.col("__cc_comp").alias("__lab"))
+            return (
+                df.join(lab, df[id_field] == lab["__did"], "left")
+                .withColumn(as_field,
+                            F.coalesce(F.col("__lab"), F.col(id_field)))
+                .drop("__did", "__lab")
+            )
+        dups = (labels.filter(F.col("__cc_node") != F.col("__cc_comp"))
+                .select(F.col("__cc_node").alias("__did")))
+    return df.join(dups, df[id_field] == dups["__did"], "left_anti")
 
 
 # ------------------------------------------------------------- exact dedup
@@ -393,38 +441,12 @@ def minhash_coeffs(num: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_bases(text: Column, n: int) -> Column:
-    """One md5-derived base hash per distinct shingle (the expensive part,
-    computed exactly once)."""
-    sh = word_shingles(text, n)
-    return F.transform(sh, lambda s: md5_long(s, 0) % F.lit(MINHASH_P))
-
-
-def minhash_sig_from_bases(bases: Column, num: int) -> Column:
-    """num cheap (a*h+b) mod P permutations over the materialized base-hash
-    array; each term is a tiny codegen-friendly transform+min.  (Chaining
-    the md5 inside every term would recompute it num times; folding with
-    nested zip_with drops out of codegen — both measured much slower.)"""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    bases,
-                    (lambda a_, b_: lambda h: (F.lit(a_) * h + F.lit(b_))
-                     % F.lit(MINHASH_P))(a, b),
-                )
-            )
-            for a, b in minhash_coeffs(num)
-        ]
-    )
-
-
 def minhash_sig_terms_sql(bases_col: str, num: int) -> str:
-    """``minhash_sig_from_bases`` over a named column as ONE SQL string:
-    the per-permutation ``F.transform`` lambdas cost a py4j roundtrip
-    each (~0.6 s of plan-build time at num=32), while one ``F.expr`` is
-    a single roundtrip.  Products stay < 2^62 (both factors <
-    MINHASH_P = 2^31-1), so no ANSI overflow."""
+    """num cheap (a*h+b) mod P permutations over a named base-hash array
+    column as ONE SQL string (the md5 is computed once per shingle in the
+    bases; chaining it inside every term would recompute it num times).
+    Products stay < 2^62 (both factors < MINHASH_P = 2^31-1), so no ANSI
+    overflow."""
     terms = ", ".join(
         f"array_min(transform(`{bases_col}`, h -> ({a}L * h + {b}L) % {MINHASH_P}L))"
         for a, b in minhash_coeffs(num)
@@ -432,31 +454,17 @@ def minhash_sig_terms_sql(bases_col: str, num: int) -> str:
     return f"array({terms})"
 
 
-def minhash_signature(text: Column, n: int, num: int) -> Column:
-    return minhash_sig_from_bases(minhash_bases(text, n), num)
-
-
 def with_minhash_sig(df: DataFrame, inp: Any, n: int, num: int,
                      sig_col: str = "__sig") -> DataFrame:
     """Add a MinHash signature column in TWO fused projections (bases,
     then permutations over the materialized base array — multi-referenced
     aliases survive CollapseProject).  Shared by $minhash /
-    $minhashDedup / $crossDedup / $jaccardJoin.  r12 build-latency
-    lever: the classic Dataset API runs the analyzer eagerly per
-    transformation, so the old withColumn+withColumn+drop chain paid
-    three analyzer passes over these wide HOF trees; plain "$field"
-    inputs additionally take a pure generated-SQL path (one py4j
-    round trip per projection)."""
+    $minhashDedup / $crossDedup / $jaccardJoin."""
     keep = [f"`{c_}`" for c_ in df.columns]
-    ref = sql_field_ref(inp)
-    if ref is not None:
-        bases = (f"transform({word_shingles_sql(ref, n)}, "
-                 f"s -> {md5_long_sql('s', 0)} % {MINHASH_P}L)")
-        step1 = df.selectExpr("*", f"{bases} as __mh_bases")
-    else:
-        text = compile_expr(inp, ExprContext(schema=df.schema))
-        step1 = df.select("*", minhash_bases(text, n).alias("__mh_bases"))
-    return step1.selectExpr(
+    df, ref, _ = sql_input(df, inp, "__mh_in")
+    bases = (f"transform({word_shingles_sql(ref, n)}, "
+             f"s -> {md5_long_sql('s', 0)} % {MINHASH_P}L)")
+    return df.selectExpr("*", f"{bases} as __mh_bases").selectExpr(
         *keep,
         minhash_sig_terms_sql("__mh_bases", num) + f" as `{sig_col}`",
     )
@@ -478,19 +486,27 @@ def minhash_stage(expression: Any, ctx: Context) -> StageFn:
     return fn
 
 
-def minhash_band_hashes(sig_col: str, bands: int,
-                        rows_per_band: int) -> list:
-    """Band hashes over a MinHash signature column — ONE format shared by
-    $minhashDedup and $crossDedup (the DuckDB oracles pin it, so the two
-    stages must never drift apart)."""
-    return [
-        F.md5(F.concat_ws(",", *[
-            F.lit(b),
-            F.slice(F.col(sig_col), b * rows_per_band + 1,
-                    rows_per_band).cast("string"),
-        ]))
+def minhash_buckets(sig: DataFrame, bands: int, rows_per_band: int,
+                    *keys: Column) -> DataFrame:
+    """``keys`` plus one ``__bucket`` row per MinHash band of ``__sig`` —
+    the ONE band-hash format of $minhashDedup, $crossDedup and
+    $jaccardJoin (the DuckDB oracles pin it, so they never drift
+    apart)."""
+    return sig.select(*keys, F.explode(F.array(*[
+        F.md5(F.concat_ws(",", F.lit(b), F.slice(
+            F.col("__sig"), b * rows_per_band + 1, rows_per_band
+        ).cast("string")))
         for b in range(bands)
-    ]
+    ])).alias("__bucket"))
+
+
+def shingle_jaccard() -> tuple:
+    """Exact Jaccard of the shingle-set columns ``__sha`` and ``__shb``,
+    as ``(jaccard, union size)``.  Two empty sets have no Jaccard (null),
+    so such a pair never verifies."""
+    inter = F.size(F.array_intersect("__sha", "__shb"))
+    union = F.size("__sha") + F.size("__shb") - inter
+    return F.try_divide(inter, union), union
 
 
 def _check_bands(stage: str, num: int, bands: int) -> None:
@@ -545,79 +561,30 @@ def minhash_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     verify = expression.get("verify")
     transitive = bool(expression.get("transitive", False))
     as_field = expression.get("as")
-    if as_field and not transitive:
-        raise ValueError(
-            "$minhashDedup as (annotate mode) requires transitive: true — "
-            "cluster labels are connected-component ids; per-bucket "
-            "pruning has no single well-defined cluster per document")
+    check_annotate("$minhashDedup", transitive, as_field)
     _check_bands("$minhashDedup", num, bands)
     rows_per_band = num // bands
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
         df = _spread(df)
-        text = compile_expr(inp, ExprContext(schema=df.schema))
-        band_hash = minhash_band_hashes("__sig", bands, rows_per_band)
         with_sig = with_minhash_sig(df, inp, n, num)
-        buckets = with_sig.select(
-            F.col(id_field).alias("__did"), F.explode(F.array(*band_hash)).alias("__bucket")
-        )
-        # min doc id per bucket survives; every other bucket member is a dup
-        keepers = buckets.groupBy("__bucket").agg(F.min("__did").alias("__keep"))
-        cands = (
-            buckets.join(keepers, "__bucket")
-            .filter(F.col("__did") != F.col("__keep"))
-            .select("__did", "__keep")
-            .distinct()
-        )
+        cands = _keeper_pairs(minhash_buckets(
+            with_sig, bands, rows_per_band, F.col(id_field).alias("__did")))
         if verify is not None:
             # exact-Jaccard confirmation per candidate pair over the true
             # shingle sets — candidate-sized work, not all-pairs
-            sh = df.select(F.col(id_field).alias("__vid"),
-                           word_shingles(text, n).alias("__vsh"))
-            sa = sh.select(F.col("__vid").alias("__did"),
-                           F.col("__vsh").alias("__sha"))
-            sb = sh.select(F.col("__vid").alias("__keep"),
-                           F.col("__vsh").alias("__shb"))
-            inter = F.size(F.array_intersect("__sha", "__shb"))
+            sh = word_shingles(
+                compile_expr(inp, ExprContext(schema=df.schema)), n)
+            jaccard, _ = shingle_jaccard()
             cands = (
-                cands.join(sa, "__did").join(sb, "__keep")
-                .filter(
-                    inter / (F.size("__sha") + F.size("__shb") - inter)
-                    >= float(verify)
-                )
+                cands.join(df.select(F.col(id_field).alias("__did"),
+                                     sh.alias("__sha")), "__did")
+                .join(df.select(F.col(id_field).alias("__keep"),
+                                sh.alias("__shb")), "__keep")
+                .filter(jaccard >= float(verify))
             )
-        if transitive:
-            from ..operators.graphcc import connected_components
-
-            labels = connected_components(
-                cands.select(F.col("__did").alias("a"), F.col("__keep").alias("b"))
-            )
-            if as_field:
-                # annotate mode: keep every row, add the transitive
-                # cluster id (min id of the component; singletons label
-                # themselves) — compose with $groupCap {by: "$<as>"} to
-                # keep the BEST doc per cluster instead of the min-id one
-                lab = labels.select(
-                    F.col("__cc_node").alias("__did"),
-                    F.col("__cc_comp").alias("__lab"),
-                )
-                return (
-                    with_sig.join(
-                        lab, with_sig[id_field] == lab["__did"], "left")
-                    .withColumn(
-                        as_field,
-                        F.coalesce(F.col("__lab"), F.col(id_field)))
-                    .drop("__did", "__lab", "__sig")
-                )
-            dups = (
-                labels.filter(F.col("__cc_node") != F.col("__cc_comp"))
-                .select(F.col("__cc_node").alias("__did"))
-            )
-        else:
-            dups = cands.select(F.col("__did")).distinct()
-        return with_sig.join(
-            dups, with_sig[id_field] == dups["__did"], "left_anti"
-        ).drop("__sig")
+        return resolve_pairs(
+            with_sig, cands, id_field, transitive, as_field).drop("__sig")
 
     return fn
 
@@ -653,24 +620,14 @@ def cross_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     _check_bands("$crossDedup", num, bands)
     rows_per_band = num // bands
 
-    def band_hashes(sig_col: str) -> list:
-        return minhash_band_hashes(sig_col, bands, rows_per_band)
-
     def fn(df: DataFrame, c: Context) -> DataFrame:
         df = _spread(df)
         ref = c.collection(from_coll)
-        text = compile_expr(inp, ExprContext(schema=df.schema))
-        rtext = compile_expr(fin, ExprContext(schema=ref.schema))
-        left_sig = with_minhash_sig(df, inp, n, num)
+        lb = minhash_buckets(with_minhash_sig(df, inp, n, num), bands,
+                             rows_per_band, F.col(id_field).alias("__did"))
         right_sig = with_minhash_sig(ref, fin, n, num)
-        lb = left_sig.select(
-            F.col(id_field).alias("__did"),
-            F.explode(F.array(*band_hashes("__sig"))).alias("__bucket"),
-        )
         if verify is None:
-            rb = right_sig.select(
-                F.explode(F.array(*band_hashes("__sig"))).alias("__bucket")
-            ).distinct()
+            rb = minhash_buckets(right_sig, bands, rows_per_band).distinct()
             dups = lb.join(rb, "__bucket", "left_semi").select(
                 "__did"
             ).distinct()
@@ -681,11 +638,11 @@ def cross_dedup_stage(expression: Any, ctx: Context) -> StageFn:
             # through the band explode would multiply the shuffle payload
             # by `bands`).  The reference-side key is a deterministic
             # content hash, so retries and re-reads agree.
+            text = compile_expr(inp, ExprContext(schema=df.schema))
+            rtext = compile_expr(fin, ExprContext(schema=ref.schema))
             rkey = F.xxhash64(rtext)
-            rb = right_sig.select(
-                rkey.alias("__rid"),
-                F.explode(F.array(*band_hashes("__sig"))).alias("__bucket"),
-            )
+            rb = minhash_buckets(right_sig, bands, rows_per_band,
+                                 rkey.alias("__rid"))
             rsh = ref.select(
                 rkey.alias("__rid"), word_shingles(rtext, n).alias("__shb")
             ).dropDuplicates(["__rid"])
@@ -700,11 +657,9 @@ def cross_dedup_stage(expression: Any, ctx: Context) -> StageFn:
                 .join(rsh, "__rid")
                 .join(lsh, "__did")
             )
-            inter = F.size(F.array_intersect("__sha", "__shb"))
-            dups = pairs.filter(
-                inter / (F.size("__sha") + F.size("__shb") - inter)
-                >= float(verify)
-            ).select("__did").distinct()
+            jaccard, _ = shingle_jaccard()
+            dups = pairs.filter(jaccard >= float(verify)).select(
+                "__did").distinct()
         return df.join(
             dups, df[id_field] == dups["__did"], "left_anti"
         )
@@ -746,32 +701,20 @@ def jaccard_join_stage(expression: Any, ctx: Context) -> StageFn:
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
         df = _spread(df)
-        text = compile_expr(inp, ExprContext(schema=df.schema))
-        left = with_minhash_sig(df, inp, n, num)
-        lb = left.select(
-            F.col(id_field).alias("left_id"),
-            F.explode(
-                F.array(*minhash_band_hashes("__sig", bands, rows_per_band))
-            ).alias("__bucket"),
-        )
         if from_coll is None:
-            right_df, rtext, rid = df, text, id_field
+            right_df, rinp, rid = df, inp, id_field
         else:
-            right_df = c.collection(from_coll)
-            rtext = compile_expr(fin, ExprContext(schema=right_df.schema))
-            rid = fid
-        right = (with_minhash_sig(right_df, fin if from_coll is not None
-                                  else inp, n, num))
-        rb = right.select(
-            F.col(rid).alias("right_id"),
-            F.explode(
-                F.array(*minhash_band_hashes("__sig", bands, rows_per_band))
-            ).alias("__bucket"),
-        )
+            right_df, rinp, rid = c.collection(from_coll), fin, fid
+        lb = minhash_buckets(with_minhash_sig(df, inp, n, num), bands,
+                             rows_per_band, F.col(id_field).alias("left_id"))
+        rb = minhash_buckets(with_minhash_sig(right_df, rinp, n, num), bands,
+                             rows_per_band, F.col(rid).alias("right_id"))
         pairs = lb.join(rb, "__bucket").select("left_id", "right_id")
         if from_coll is None:
             pairs = pairs.filter(F.col("left_id") < F.col("right_id"))
         pairs = pairs.distinct()
+        text = compile_expr(inp, ExprContext(schema=df.schema))
+        rtext = compile_expr(rinp, ExprContext(schema=right_df.schema))
         lsh = df.select(
             F.col(id_field).alias("left_id"),
             word_shingles(text, n).alias("__sha"),
@@ -780,16 +723,15 @@ def jaccard_join_stage(expression: Any, ctx: Context) -> StageFn:
             F.col(rid).alias("right_id"),
             word_shingles(rtext, n).alias("__shb"),
         )
-        inter = F.size(F.array_intersect("__sha", "__shb"))
-        union = F.size("__sha") + F.size("__shb") - inter
-        jacc = inter / union
+        jaccard, union = shingle_jaccard()
         return (
             pairs.join(lsh, "left_id")
             .join(rsh, "right_id")
             .filter(union > 0)
             .withColumn(
                 "jaccard",
-                F.floor(jacc * 1e9 + F.lit(0.5)).cast("double") / F.lit(1e9),
+                F.floor(jaccard * 1e9 + F.lit(0.5)).cast("double")
+                / F.lit(1e9),
             )
             .filter(F.col("jaccard") >= threshold)
             .select("left_id", "right_id", "jaccard")
@@ -1023,23 +965,14 @@ def _with_simhash(df: DataFrame, inp: Any, n: int, bits: int,
     fold cost ~1 s of parse/analysis per plan and allocated a 16-wide
     array per shingle at runtime)."""
     keep = [f"`{c_}`" for c_ in df.columns]
-    ref = sql_field_ref(inp)
+    df, ref, _ = sql_input(df, inp, "__sh_in")
     # the shingle->hash step fuses into ONE projection (the transform
     # composes over the shingle expression textually — each is evaluated
     # once per row since the hash transform's input array materializes
     # before the lambda runs); the vote fold stays a second projection so
     # `__sh_h` is a multi-referenced alias (CollapseProject keeps it).
-    # r12: withColumn x3 + drop paid four eager analyzer passes.
-    if ref is not None:
-        sh_sql = word_shingles_sql(ref, n)
-    else:
-        text = compile_expr(inp, ExprContext(schema=df.schema))
-        df = df.select("*", word_shingles(text, n).alias("__sh0"))
-        keep = keep  # __sh0 dropped by the final projection below
-        sh_sql = "`__sh0`"
-    hashes = (f"transform({sh_sql}, s -> "
-              f"cast(conv(substr(md5(concat('0:', s)), 1, 15), 16, 10) "
-              f"as bigint))")
+    hashes = (f"transform({word_shingles_sql(ref, n)}, "
+              f"s -> {md5_long_sql('s', 0)})")
     value = (
         f"aggregate(transform(sequence(0, {bits - 1}), j -> "
         f"if(2L * aggregate(`__sh_h`, 0L, "
@@ -1101,15 +1034,7 @@ def simhash_dedup_stage(expression: Any, ctx: Context) -> StageFn:
             F.col(id_field).alias("__did"), F.col("__simh").alias("__dh"),
             F.explode(F.array(*band_vals)).alias("__bucket"),
         )
-        keepers = buckets.groupBy("__bucket").agg(
-            F.min("__did").alias("__keep")
-        )
-        cands = (
-            buckets.join(keepers, "__bucket")
-            .filter(F.col("__did") != F.col("__keep"))
-            .select("__did", "__dh", "__keep")
-            .distinct()
-        )
+        cands = _keeper_pairs(buckets, "__dh")
         kh = hashed.select(
             F.col(id_field).alias("__keep"), F.col("__simh").alias("__kh")
         )
@@ -1131,19 +1056,8 @@ def simhash_dedup_stage(expression: Any, ctx: Context) -> StageFn:
                 F.lit(max_h + 1),
             ) <= max_h
         )
-        if transitive:
-            from ..operators.graphcc import connected_components
-
-            labels = connected_components(
-                verified.select(F.col("__did").alias("a"),
-                                F.col("__keep").alias("b"))
-            )
-            dups = labels.select(F.col("__cc_node").alias("__did"))
-        else:
-            dups = verified.select("__did").distinct()
-        return hashed.join(
-            dups, hashed[id_field] == dups["__did"], "left_anti"
-        ).drop("__simh")
+        return resolve_pairs(
+            hashed, verified, id_field, transitive).drop("__simh")
 
     return fn
 
@@ -1242,10 +1156,9 @@ def ngram_jaccard_dedup_stage(expression: Any, ctx: Context) -> StageFn:
                 / (F.col("__na") + F.col("__nb") - F.col("__inter")),
             )
         )
-        dups = scored.filter(F.col("__j") >= threshold).select(
-            F.col("__idb").alias("__did")
-        ).distinct()
-        return df.join(dups, df[id_field] == dups["__did"], "left_anti")
+        return resolve_pairs(
+            df, scored.filter(F.col("__j") >= threshold).select(
+                F.col("__idb").alias("__did")), id_field, False)
 
     return fn
 

@@ -16,14 +16,18 @@ from ..context import Context
 from ..expressions import ExprContext, compile_expr
 from ..pipeline import StageFn, register_stage
 
-from .dp_dedup import _spread
-from .dp_dedup import sql_field_ref as _sql_ref
+from .dp_dedup import _spread, sql_input
 
-import re as _re_mod
 
-# simple-identifier gate for the generated-SQL fast paths (dotted /
-# quoted ids keep the Column path)
-_IDENT = _re_mod.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+def bm25_term_sql(tf: str, df_: str, n: str, dl: str, avgdl: str,
+                  k1: float, b: float) -> str:
+    """One query term's BM25 contribution as SQL over column references:
+    idf · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl)), with the
+    Lucene-style idf ln(1 + (N − df + 0.5)/(df + 0.5)).  Shared by
+    $bm25 and $search text."""
+    return (f"ln(1.0D + ({n} - {df_} + 0.5D) / ({df_} + 0.5D))"
+            f" * {tf} * {k1 + 1.0}D"
+            f" / ({tf} + {k1}D * ({1.0 - b}D + {b}D * {dl} / {avgdl}))")
 
 
 @register_stage("$bm25", "per_batch")
@@ -62,47 +66,40 @@ def bm25_stage(expression: Any, ctx: Context) -> StageFn:
         raise ValueError("$bm25 needs at least one query term")
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from pyspark.sql import Window
-
         df = _spread(df)  # a small corpus file arrives as ONE scan
         # partition; the token fold is the per-row-heavy work _spread
         # exists for (large inputs are already wide and pass through)
-        # r12 fast path: plain "$field" input + simple id -> the WHOLE
-        # query as one spark.sql() text over a templated DataFrame
-        # reference (~5 py4j round trips instead of ~200; the classic
-        # API additionally re-analyzes eagerly at each of the ~10
-        # transformations).  The CTE chain compiles to the SAME plan
-        # the Column form produced — single broadcast stats aggregate,
-        # TakeOrderedAndProject, WindowExec over <= k rows — which
-        # tests/test_plan_invariants.py keeps pinned.
-        ref = _sql_ref(inp)
-        if ref is not None and _IDENT.fullmatch(id_field):
-            terms_arr = ", ".join(
-                "'" + t.replace("'", "''") + "'" for t in terms)
-            nt = len(terms)
-            tf_cols = ", ".join(
-                f"__tfs[{i}] as __tf{i}" for i in range(nt))
-            df_aggs = ", ".join(
-                f"sum(cast(__tf{i} > 0 as double)) AS __df{i}"
-                for i in range(nt))
-            score = " + ".join(
-                f"ln(1.0D + (__n - __df{i} + 0.5D) / (__df{i} + 0.5D))"
-                f" * __tf{i} * {k1 + 1.0}D"
-                f" / (__tf{i} + {k1}D * ({1.0 - b}D + {b}D * __dl /"
-                f" __avgdl))"
-                for i in range(nt))
-            # __bm_base is consumed TWICE (stats aggregate + probe side)
-            # and Spark inlines CTEs, so without a shuffle boundary the
-            # scan + spread + tokenize fold runs twice.  The REPARTITION
-            # hint pins an Exchange over the narrow (id, dl, tf*) rows;
-            # both consumers' subtrees are canonically identical, so AQE
-            # reuses the shuffle stage (ReusedExchange) and the corpus is
-            # scanned and tokenized ONCE — shuffling ~40 B/row instead of
-            # re-reading and re-folding the text (r13 measured plan:
-            # 2 scans -> 1, tokenize sites executed 2 -> 1).
-            sql = f"""
+        # The whole query is one spark.sql() text over a templated
+        # DataFrame reference: a single broadcast stats aggregate,
+        # TakeOrderedAndProject and a WindowExec over <= k rows, which
+        # tests/test_plan_invariants.py keeps pinned.  All term
+        # frequencies come from ONE fold over the token array, so a row
+        # is tokenized once regardless of the query size.
+        df, ref, idq = sql_input(df, inp, "__bm_in", id_field)
+        terms_arr = ", ".join(
+            "'" + t.replace("'", "''") + "'" for t in terms)
+        nt = len(terms)
+        tf_cols = ", ".join(
+            f"__tfs[{i}] as __tf{i}" for i in range(nt))
+        df_aggs = ", ".join(
+            f"sum(cast(__tf{i} > 0 as double)) AS __df{i}"
+            for i in range(nt))
+        score = " + ".join(
+            bm25_term_sql(f"__tf{i}", f"__df{i}", "__n", "__dl",
+                          "__avgdl", k1, b)
+            for i in range(nt))
+        # __bm_base is consumed TWICE (stats aggregate + probe side)
+        # and Spark inlines CTEs, so without a shuffle boundary the
+        # scan + spread + tokenize fold runs twice.  The REPARTITION
+        # hint pins an Exchange over the narrow (id, dl, tf*) rows;
+        # both consumers' subtrees are canonically identical, so AQE
+        # reuses the shuffle stage (ReusedExchange) and the corpus is
+        # scanned and tokenized ONCE — shuffling ~40 B/row instead of
+        # re-reading and re-folding the text (r13 measured plan:
+        # 2 scans -> 1, tokenize sites executed 2 -> 1).
+        sql = f"""
 WITH __bm_toks AS (
-  SELECT `{id_field}` AS __bm_id,
+  SELECT {idq} AS __bm_id,
          filter(split(lower({ref}), '[^a-z0-9]+'), t -> t != '') AS __toks
   FROM {{corpus}}
 ),
@@ -126,67 +123,10 @@ __bm_top AS (
   ORDER BY score DESC, __bm_id
   LIMIT {k}
 )
-SELECT __bm_id AS `{id_field}`, score,
+SELECT __bm_id AS {idq}, score,
        row_number() OVER (ORDER BY score DESC, __bm_id) AS rank
 FROM __bm_top"""
-            return df.sparkSession.sql(sql, corpus=df)
-        text = compile_expr(inp, ExprContext(schema=df.schema))
-        tokens = F.filter(
-            F.split(F.lower(text), "[^a-z0-9]+"), lambda t: t != ""
-        )
-        # ALL term frequencies in one fold over the token array (the
-        # simhash vote-fold pattern): tokenization happens once per row
-        # regardless of query size, instead of once per term — HOFs are
-        # interpreted (no codegen CSE), so textual duplication would
-        # really recompute the split.  The fold is ONE SQL string: the
-        # equivalent nested-lambda Column construction costs ~1 s of py4j
-        # round-trips per plan (the simhash lesson).
-        terms_sql = ", ".join("'" + t.replace("'", "''") + "'" for t in terms)
-        counts = F.expr(
-            f"aggregate(`__toks`, array_repeat(0.0D, {len(terms)}), "
-            f"(acc, t) -> zip_with(acc, array({terms_sql}), "
-            f"(a, trm) -> a + if(t = trm, 1.0D, 0.0D)))"
-        )
-        # the whole scoring plan is built from GENERATED SQL strings — a
-        # handful of py4j calls total, instead of O(terms) Column-building
-        # round-trips (~0.3 s of driver latency per plan at 3 terms)
-        idq = f"`{id_field}`"
-        # the token column materializes in a 2-column projection (id +
-        # tokens), not a withColumn over the full row — one fewer (and
-        # narrower) eager analyzer pass per plan build (r12)
-        base = df.select(
-            F.col(id_field), tokens.alias("__toks")
-        ).select(
-            F.col(id_field),
-            F.expr("cast(size(`__toks`) as double)").alias("__dl"),
-            counts.alias("__tfs"),
-        ).selectExpr(
-            idq, "__dl",
-            *[f"__tfs[{i}] as __tf{i}" for i in range(len(terms))],
-        ).repartition(F.col(id_field))
-        # ^ same exchange-reuse lever as the SQL path: base feeds both the
-        # stats aggregate and the probe side; the keyed repartition makes
-        # the shared subtree end at an Exchange that AQE reuses, so the
-        # tokenize fold runs once per corpus instead of twice.
-        stats = base.groupBy().agg(
-            F.expr("cast(count(1) as double)").alias("__n"),
-            F.expr("avg(__dl)").alias("__avgdl"),
-            *[
-                F.expr(f"sum(cast(__tf{i} > 0 as double))").alias(f"__df{i}")
-                for i in range(len(terms))
-            ],
-        )
-        joined = base.crossJoin(F.broadcast(stats))
-        score_sql = " + ".join(
-            f"ln(1.0D + (__n - __df{i} + 0.5D) / (__df{i} + 0.5D))"
-            f" * __tf{i} * {k1 + 1.0}D"
-            f" / (__tf{i} + {k1}D * ({1.0 - b}D + {b}D * __dl / __avgdl))"
-            for i in range(len(terms))
-        )
-        scored = joined.selectExpr(idq, f"0.0D + {score_sql} as score")
-        top = scored.orderBy(F.col("score").desc(), F.col(id_field)).limit(k)
-        w = Window.orderBy(F.col("score").desc(), F.col(id_field))
-        return top.withColumn("rank", F.row_number().over(w))
+        return df.sparkSession.sql(sql, corpus=df)
 
     return fn
 

@@ -18,16 +18,8 @@ from ..expressions import ExprContext, compile_expr
 from ..pipeline import StageFn, check_kind, register_stage
 
 from . import dp_dedup
-from .dp_dedup import (_annotate_components,
-                       _cc_labels, _component_dups, _pair_dot,
-                       _spread, _unit_vector)
-
-
-import re as _re_mod
-
-# simple-identifier gate for generated-SQL fast paths (dotted / quoted
-# ids keep the Column path)
-_SIMPLE_ID = _re_mod.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+from .dp_dedup import (_pair_dot, _spread, _unit_vector, check_annotate,
+                       resolve_pairs)
 
 
 def vec_dot(a: Column, b: Column) -> Column:
@@ -80,11 +72,7 @@ def embed_dedup_stage(expression: Any, ctx: Context) -> StageFn:
     force_exact = bool(expression.get("exact", False))
     transitive = bool(expression.get("transitive", False))
     as_field = expression.get("as")
-    if as_field and not transitive:
-        raise ValueError(
-            "$embedDedup as (annotate mode) requires transitive: true — "
-            "cluster labels are connected-component ids (same contract "
-            "as $minhashDedup)")
+    check_annotate("$embedDedup", transitive, as_field)
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
         if bits is None and not force_exact:
@@ -125,25 +113,16 @@ def embed_dedup_stage(expression: Any, ctx: Context) -> StageFn:
         # merged the filter into the join with the dot product FIRST in
         # the conjunction, so the O(dim) fold ran on every raw pair
         # before the id/bucket checks (19 s of the exact-mode query's
-        # 20 s at sf0.1; And conjuncts evaluate left-to-right).  The
-        # surviving pairs (few) re-derive __cos in the projection.
+        # 20 s at sf0.1; And conjuncts evaluate left-to-right).
         pairs = (
             docs.alias("a")
             .join(docs.alias("b"),
                   cond & (_pair_dot(F.col("a.__e"), F.col("b.__e"))
                           >= threshold))
-            .select(F.col("a.__did").alias("__ida"),
-                    F.col("b.__did").alias("__idb"),
-                    _pair_dot(F.col("a.__e"), F.col("b.__e")).alias("__cos"))
+            .select(F.col("b.__did").alias("__did"),
+                    F.col("a.__did").alias("__keep"))
         )
-        if transitive:
-            labels = _cc_labels(pairs)
-            if as_field:
-                return _annotate_components(df, labels, id_field, as_field)
-            dups = _component_dups(labels)
-        else:
-            dups = pairs.select(F.col("__idb").alias("__did")).distinct()
-        return df.join(dups, df[id_field] == dups["__did"], "left_anti")
+        return resolve_pairs(df, pairs, id_field, transitive, as_field)
 
     return fn
 
@@ -228,27 +207,20 @@ def ann_topk_stage(expression: Any, ctx: Context) -> StageFn:
     k = int(expression.get("k", 10))
 
     def fn(df: DataFrame, c: Context) -> DataFrame:
-        from pyspark.sql import Window
-
         q = c.collection(queries_coll)
         # heavy: one O(d) dot product per (corpus row x query) pair —
         # fan a narrow corpus out before the broadcast cross (r12: the
         # single-row-group sf0.1 corpus ran ~20k dim-d dots in ONE task)
         df = _spread(df)
-        # r13 build-latency fast path: plain "$field" input + simple id
-        # -> the whole stage as ONE templated spark.sql text (the bm25 /
-        # minhash lever): the classic-API form below pays ~6 eager
-        # analyzer passes + the window Column chain per plan build
-        # (~100 ms of driver latency measured at r13); the SQL compiles
-        # to the SAME plan — broadcast queries side, per-query
-        # row_number window — pinned by tests/test_plan_invariants.py.
-        ref = dp_dedup.sql_field_ref(inp)
-        if ref is not None and _SIMPLE_ID.fullmatch(id_field):
-            normf = "sqrt(aggregate({0}, 0.0D, (acc, x) -> acc + x * x))"
-            qc = "cast(embedding as array<double>)"
-            sql = f"""
+        # the whole stage is ONE templated spark.sql text (broadcast
+        # queries side, per-query row_number window — pinned by
+        # tests/test_plan_invariants.py)
+        df, ref, idq = dp_dedup.sql_input(df, inp, "__an_in", id_field)
+        normf = "sqrt(aggregate({0}, 0.0D, (acc, x) -> acc + x * x))"
+        qc = "cast(embedding as array<double>)"
+        sql = f"""
 WITH __an_c0 AS (
-  SELECT `{id_field}` AS corpus_id, cast({ref} as array<double>) AS __ce
+  SELECT {idq} AS corpus_id, cast({ref} as array<double>) AS __ce
   FROM {{corpus}}
 ),
 __an_c AS (
@@ -270,36 +242,7 @@ SELECT * FROM (
                             ORDER BY score DESC, corpus_id) AS rank
   FROM __an_s
 ) WHERE rank <= {k}"""
-            return df.sparkSession.sql(sql, corpus=df, queries=q)
-        emb = compile_expr(inp, ExprContext(schema=df.schema))
-        # norms + dot as generated SQL (one py4j call each) — the Python
-        # HOF-lambda form costs a py4j round-trip per lambda, which is
-        # pure driver latency on every plan build (the bm25 lesson).
-        # aggregate(a, 0, (acc,x) -> acc + x*x) folds in the same order as
-        # aggregate(transform(a, x -> x*x), ...) — bit-identical sums.
-        norm = "sqrt(aggregate({0}, 0.0D, (acc, x) -> acc + x * x))"
-        corpus = df.select(
-            F.col(id_field).alias("corpus_id"), emb.cast("array<double>").alias("__ce")
-        ).selectExpr("corpus_id", "__ce", norm.format("__ce") + " as __cn")
-        # ONE projection for the (tiny, broadcast) query side: the norm
-        # recomputes the cast inline — O(k·d) on ~dozens of rows — where
-        # a second projection would cost another eager analyzer pass on
-        # every plan build (r12)
-        qcast = "cast(embedding as array<double>)"
-        queries = q.selectExpr(
-            "query_id", f"{qcast} as __qe",
-            norm.format(qcast) + " as __qn")
-        dot = ("aggregate(zip_with(__ce, __qe, (x, y) -> x * y), 0.0D, "
-               "(acc, v) -> acc + v)")
-        scored = corpus.crossJoin(F.broadcast(queries)).selectExpr(
-            "query_id", "corpus_id",
-            f"try_divide({dot}, __cn * __qn) as score",
-        )
-        w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("corpus_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
+        return df.sparkSession.sql(sql, corpus=df, queries=q)
 
     return fn
 
@@ -709,9 +652,7 @@ def semantic_dedup_stage(expression: Any, ctx: Context) -> StageFn:
         raise ValueError(
             "$semanticDedup keep: 'far' is pairwise — transitive chains "
             "resolve by component min-id; drop keep or use keep: 'minId'")
-    if as_field and not transitive:
-        raise ValueError(
-            "$semanticDedup as (annotate mode) requires transitive: true")
+    check_annotate("$semanticDedup", transitive, as_field)
     if keep is None:
         keep = "minId" if transitive else "far"
 
@@ -749,27 +690,19 @@ def semantic_dedup_stage(expression: Any, ctx: Context) -> StageFn:
                   & (F.col("a.__did") < F.col("b.__did"))
                   & (_round9_col(_pair_dot(F.col("a.__e"), F.col("b.__e")))
                      >= F.lit(threshold)))
-            .select(F.col("a.__did").alias("__ida"),
-                    F.col("b.__did").alias("__idb"),
-                    F.col("a.__cd").alias("__cda"),
-                    F.col("b.__cd").alias("__cdb"))
+            .select(F.col("b.__did").alias("__did"),
+                    F.col("a.__did").alias("__keep"),
+                    F.col("a.__cd").alias("__cdk"),
+                    F.col("b.__cd").alias("__cdd"))
         )
-        if transitive:
-            labels = _cc_labels(pairs)
-            if as_field:
-                return _annotate_components(df, labels, id_field, as_field)
-            dups = _component_dups(labels)
-        elif keep == "far":
+        if keep == "far":
             # the member CLOSER to its centroid is the redundant one
-            dups = pairs.select(
-                F.when(F.col("__cda") < F.col("__cdb"), F.col("__ida"))
-                .when(F.col("__cdb") < F.col("__cda"), F.col("__idb"))
-                .otherwise(F.greatest("__ida", "__idb"))
-                .alias("__did")
-            ).distinct()
-        else:
-            dups = pairs.select(F.col("__idb").alias("__did")).distinct()
-        return df.join(dups, df[id_field] == dups["__did"], "left_anti")
+            pairs = pairs.select(
+                F.when(F.col("__cdk") < F.col("__cdd"), F.col("__keep"))
+                .when(F.col("__cdd") < F.col("__cdk"), F.col("__did"))
+                .otherwise(F.greatest("__keep", "__did"))
+                .alias("__did"))
+        return resolve_pairs(df, pairs, id_field, transitive, as_field)
 
     return fn
 

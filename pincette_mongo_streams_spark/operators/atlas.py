@@ -1104,6 +1104,8 @@ def _bm25_prepare(df: DataFrame, query: str, paths: Any, tag: str,
     containing any member — one BM25 term slot per group.  ``fuzzy``
     (mutually exclusive with groups, as in Atlas) widens each term slot
     to tokens within ``maxEdits`` Levenshtein edits."""
+    from ..functions.dp_retrieval import bm25_term_sql
+
     if isinstance(paths, str):
         paths = [paths]
     if groups is None:
@@ -1158,11 +1160,9 @@ def _bm25_prepare(df: DataFrame, query: str, paths: Any, tag: str,
     )
     out = out.crossJoin(F.broadcast(stats))
     score_sql = " + ".join(
-        f"ln(1.0D + (__s_{tag}_n - __s_{tag}_df{pi}_{i} + 0.5D) / "
-        f"(__s_{tag}_df{pi}_{i} + 0.5D))"
-        f" * __s_{tag}_tfs{pi}[{i}] * {k1 + 1.0}D"
-        f" / (__s_{tag}_tfs{pi}[{i}] + {k1}D * ({1.0 - b}D + {b}D * "
-        f"__s_{tag}_dl{pi} / __s_{tag}_avgdl{pi}))"
+        bm25_term_sql(f"__s_{tag}_tfs{pi}[{i}]", f"__s_{tag}_df{pi}_{i}",
+                      f"__s_{tag}_n", f"__s_{tag}_dl{pi}",
+                      f"__s_{tag}_avgdl{pi}", k1, b)
         for pi in range(len(paths))
         for i in range(len(terms))
     )

@@ -178,10 +178,12 @@ def sql_stage(expression: Any, ctx: Context) -> StageFn:
         # below finds where the batch enters the statement's plan
         frames = {"this": df.alias(_THIS) if c.micro_batch else df}
         for name in views:
-            if name not in c.collections:
+            try:
+                view = c.collection(name)
+            except KeyError:
                 raise ValueError(f"$sql view {name!r} is not a known "
-                                 "collection")
-            frames[name] = c.collections[name]
+                                 "collection") from None
+            frames[name] = _in_session(view, df.sparkSession)
         out = df.sparkSession.sql(query, **frames)
         if c.micro_batch:
             node = _whole_input_node(out._jdf.queryExecution().analyzed())
@@ -198,6 +200,19 @@ def sql_stage(expression: Any, ctx: Context) -> StageFn:
 
 
 _THIS = "__sql_this"
+
+
+def _in_session(df: DataFrame, spark: Any) -> DataFrame:
+    """``df`` bound to ``spark``.  ``SparkSession.sql`` registers each
+    template frame as a temp view in the FRAME's session but resolves
+    the statement (and drops the views) in its own, so a collection of
+    the caller's session is unresolvable in a streaming micro-batch,
+    whose session is a clone, and its view would outlive the call."""
+    if df._jdf.sparkSession().equals(spark._jsparkSession):
+        return df
+    dataset = spark._jvm.org.apache.spark.sql.classic.Dataset
+    return DataFrame(
+        dataset.ofRows(spark._jsparkSession, df._jdf.logicalPlan()), spark)
 
 # plan nodes whose answer depends on every input row: over one
 # micro-batch they silently compute a within-batch answer

@@ -89,3 +89,24 @@ def test_sql_reserved_view_names_rejected(spark):
                 [{"$sql": {"query": "SELECT * FROM {this}",
                            "views": [bad]}}],
                 Context(spark=spark, collections={bad: df}))(df)
+
+
+def test_views_and_mix_parts_resolve_through_the_loader(spark):
+    """$sql views and $mixCorpora parts read collections through
+    Context.collection, so a Context with only a collection_loader (no
+    pre-bound collections) serves them."""
+    df = spark.createDataFrame(ROWS)
+    names = spark.createDataFrame([Row(id=1, name="a"), Row(id=2, name="b")])
+    ctx = Context(spark=spark, collection_loader={"names": names}.__getitem__)
+    out = compile_pipeline(
+        [{"$sql": {"query": "SELECT t.id, n.name FROM {this} t "
+                            "JOIN {names} n ON t.id = n.id",
+                   "views": ["names"]}}], ctx)(df)
+    assert sorted((r.id, r.name) for r in out.collect()) == \
+        [(1, "a"), (2, "b")]
+    ctx = Context(spark=spark, collection_loader={"names": names}.__getitem__)
+    out = compile_pipeline(
+        [{"$mixCorpora": {"id": "$id", "extra": {"n": {"from": "names"}}}}],
+        ctx)(df)
+    assert sorted((r.id, r.mix_source) for r in out.collect()) == \
+        [(1, "base"), (1, "n"), (2, "base"), (2, "n"), (3, "base")]
