@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..context import Context
+from ..context import Context, pin
 from ..expressions import ExprContext, compile_expr
 from ..pipeline import StageFn, register_stage
 
@@ -89,12 +89,12 @@ def _pin_once(df: DataFrame, c: Context) -> DataFrame:
     action, once for the returned passthrough/drop filter.  A
     nondeterministic or re-read source could disagree between the two
     evaluations (row delivered AND retained, or dropped without being
-    sent), so truncate lineage with a lazy localCheckpoint: the first
+    sent), so truncate lineage with a lazy ``context.pin``: the first
     action materializes the split input exactly once and both sides read
     the pinned copy.  Skipped when no producer is wired (the emit is a
     no-op, so only one evaluation happens anyway)."""
     if c.producer_factory is not None or c.producer is not None:
-        return df.localCheckpoint(eager=False)
+        return pin(df)
     return df
 
 

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..context import Context
+from ..context import Context, pin
 from ..expressions import ExprContext, compile_expr
 from ..pipeline import StageFn, compile_pipeline, register_stage
 from .group import compile_accumulator, sorted_output_array, topn_struct_and_cmp
@@ -1073,7 +1073,7 @@ def graph_lookup_stage(expression: Any, ctx: Context) -> StageFn:
         # cut the result loose from the cached BFS frames, then release
         # them — otherwise every invocation leaks depth+1 cached frames
         # into executor storage for the session's lifetime
-        result = out.drop("__rk").localCheckpoint(eager=True)
+        result = pin(out.drop("__rk"), eager=True)
         for frame in persisted:
             frame.unpersist()
         return result

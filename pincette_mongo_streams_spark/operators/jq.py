@@ -1,11 +1,10 @@
 """Native jq-subset compiler: jq filters -> Spark DataFrame programs.
 
-The python ``jq`` binding is absent from many runtimes (including this
-image), so ``$jq`` scripts beyond the ``. + {...}`` fast path would be
-dead weight.  This module compiles the pipeline-shaped jq subset — the
-forms that make sense over a stream of documents — straight to
-Catalyst, sharing the AST + Column codegen with the JSLT compiler
-(operators/jslt.py).
+Every ``$jq`` script is parsed once, by the interpreter's parser
+(``jq_interp.parse``).  This module translates the pipeline-shaped
+subset of that tuple AST — the forms that make sense over a stream of
+documents — into the JSLT AST (operators/jslt.py), whose Column
+compiler it shares, so those scripts run as Catalyst expressions.
 
 A script is a ``|``-pipe of STEPS; each step transforms the document:
 
@@ -16,20 +15,23 @@ A script is a ``|``-pipe of STEPS; each step transforms the document:
 - ``del(.a, .b)``             remove top-level fields
 - ``select(<expr>)``          keep the document only when the filter holds
 
-Expressions: dot paths (absent -> null), literals, arrays/objects,
-``+ - * /`` (``+`` concatenates when a side is a string), comparisons,
-``and`` / ``or``, ``if c then a else b end`` (else optional),
-``<a> // <b>`` (alternative: right when left is null/false), and VALUE
-PIPES inside parentheses — ``(.name | ascii_downcase)``,
-``(.text | split(",") | length)`` — with builtins length, not, tostring,
-tonumber, floor, ceil, round, ascii_downcase, ascii_upcase, ltrimstr,
-rtrimstr, test, split (literal separator, as in jq), join, and the
-array builtins add, min, max, first, last, reverse, sort, unique.
+Expressions: dot paths (absent -> null) and literal integer indexes
+(``.xs[0].name``), literals, arrays/objects, ``+ - * /`` (``+``
+concatenates when a side is a string), comparisons, ``and`` / ``or``,
+``if c then a elif d then b else e end`` (else optional: a missing
+else is null), ``<a> // <b>`` (alternative: right when left is
+null/false), and VALUE PIPES — ``(.name | ascii_downcase)``,
+``(.text | split(",") | length)`` — with builtins length, not,
+tostring, tonumber, floor, ceil, round, ascii_downcase, ascii_upcase,
+ltrimstr, rtrimstr, test, split (literal separator, as in jq), join,
+and the array builtins add, min, max, first, last, reverse, sort,
+unique.
 
 String interpolation ``"a \\(expr) b"`` compiles to a native concat
-chain (interpolated object KEYS are dynamic and fall to tier 2).
+chain (interpolated object KEYS are dynamic and stay on the
+interpreter).
 
-Folds and bindings (r3) — all compiled to ``aggregate``/``transform``
+Folds and bindings — all compiled to ``aggregate``/``transform``
 higher-order functions, no UDF:
 
 - ``reduce .xs[] as $x (INIT; UPD)`` (``.`` = accumulator in UPD)
@@ -38,8 +40,8 @@ higher-order functions, no UDF:
 - ``EXPR as $x | <rest>`` step-level bindings (hidden-column backed) and
   ``(EXPR as $x | BODY)`` expression-level bindings
 
-Anything else raises ``JqUnsupported`` and script.py reports the tier-2
-boundary (the real jq binding, import-gated).
+Anything else raises ``JqUnsupported``, and script.py runs the script
+on the pure-Python interpreter (operators/jq_interp.py) instead.
 """
 
 from __future__ import annotations
@@ -57,15 +59,16 @@ from .jslt import (
     Call,
     For,
     Foreach,
+    Idx,
     If,
     Lit,
     Obj,
     Path,
     Reduce,
+    Sub,
     Var,
     _Compiler,
     _schema_hint,
-    _unquote,
 )
 from .stateless import KEY_COL
 
@@ -74,380 +77,123 @@ class JqUnsupported(Exception):
     """Filter uses jq beyond the compiled subset."""
 
 
-_JQ_TOKEN = re.compile(
-    r"""
-    (?P<ws>\s+)
-  | (?P<string>"(?:[^"\\]|\\.)*")
-  | (?P<number>-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
-  | (?P<op>==|!=|<=|>=|//|[-+*/<>(){}\[\],:.;|$])
-  | (?P<ident>[A-Za-z_][A-Za-z0-9_]*)
-    """,
-    re.X,
-)
+def _commas(node: tuple) -> list[tuple]:
+    """``a, b, c`` -> [a, b, c]."""
+    if node[0] == "comma":
+        return _commas(node[1]) + _commas(node[2])
+    return [node]
 
 
-def _jq_tokenize(src: str) -> list[tuple[str, str]]:
-    out: list[tuple[str, str]] = []
-    i = 0
-    while i < len(src):
-        m = _JQ_TOKEN.match(src, i)
-        if not m:
-            raise JqUnsupported(f"unexpected character {src[i]!r} at {i}")
-        i = m.end()
-        if m.lastgroup != "ws":
-            out.append((m.lastgroup, m.group()))
-    out.append(("eof", ""))
-    return out
+def _key(node: tuple) -> str:
+    """A literal field name: ``.foo``, ``."foo"`` or an object key."""
+    if node[0] == "lit" and isinstance(node[1], str):
+        return node[1]
+    if node[0] == "str" and all(isinstance(p, str) for p in node[1]):
+        return "".join(node[1])
+    raise JqUnsupported("computed keys are dynamic")
 
 
-# zero-argument builtins usable bare after a value pipe: `.x | length`
-_ZERO_ARG = {"length", "not", "tostring", "tonumber", "floor", "ceil",
-             "round", "ascii_downcase", "ascii_upcase",
-             "add", "min", "max", "first", "last", "reverse", "sort",
-             "unique"}
+def _expr(node: tuple) -> Any:
+    """One value-level jq AST node (operators/jq_interp.py) -> the
+    shared JSLT AST.  Value pipes fold into calls: ``x | f(a)`` ->
+    Call(f, [x, a]); bare calls, streams and everything else the Column
+    model cannot hold raise ``JqUnsupported``."""
+    kind = node[0]
+    if kind == "identity":
+        return Path([])
+    if kind == "lit":
+        if isinstance(node[1], (dict, list)):
+            raise JqUnsupported("structured literal")
+        return Lit(node[1])
+    if kind == "str":
+        # "a \(x) b" -> a native concat chain (`+` with a string side
+        # concatenates)
+        out: Any = Lit("")
+        for part in node[1]:
+            out = Bin("+", out, Lit(part) if isinstance(part, str)
+                      else Call("tostring", [_expr(part[1])]))
+        return out
+    if kind == "var":
+        return Var(node[1])
+    if kind == "index":
+        target, key = _expr(node[1]), _key(node[2])
+        if isinstance(target, Path):
+            return Path(target.parts + [key])
+        if isinstance(target, Sub):
+            return Sub(target.target, target.parts + [key])
+        return Sub(target, [key])
+    if kind == "bracket":
+        index = _expr(node[2])
+        if not (isinstance(index, Lit) and type(index.value) is int):
+            raise JqUnsupported("only literal integer indexes compile")
+        return Idx(_expr(node[1]), index.value)
+    if kind == "neg":
+        inner = _expr(node[1])
+        if isinstance(inner, Lit) and type(inner.value) in (int, float):
+            return Lit(-inner.value)
+        return Bin("-", Lit(0), inner)
+    if kind in ("arith", "cmp"):
+        if node[1] == "%":
+            raise JqUnsupported("operator '%'")
+        return Bin(node[1], _expr(node[2]), _expr(node[3]))
+    if kind in ("and", "or", "alt"):
+        return Bin("//" if kind == "alt" else kind,
+                   _expr(node[1]), _expr(node[2]))
+    if kind == "if":
+        # elif chains nest; a missing else stays None
+        out = None if node[2] is None else _expr(node[2])
+        for cond, then in reversed(node[1]):
+            out = If(_expr(cond), _expr(then), out)
+        return out
+    if kind == "arr":
+        return Arr([] if node[1] is None
+                   else [_expr(n) for n in _commas(node[1])])
+    if kind == "obj":
+        return Obj([(_key(k), _expr(v)) for k, v in node[1]], False)
+    if kind == "as":
+        return As(_expr(node[1]), node[2], _expr(node[3]))
+    if kind in ("reduce", "foreach"):
+        _, src, var, init, upd, extract = node
+        if src[0] != "iterate" or extract is not None:
+            raise JqUnsupported(f"{kind} needs `SRC[] as $x (INIT; UPD)`")
+        if src[1] == ("identity",):
+            raise JqUnsupported("`.[]` over the whole document is not an array")
+        cls = Reduce if kind == "reduce" else Foreach
+        return cls(_expr(src[1]), var, _expr(init), _expr(upd))
+    if kind == "pipe" and node[2][0] == "call":
+        _, name, args = node[2]
+        return Call(name, [_expr(node[1])] + [_expr(a) for a in args])
+    raise JqUnsupported(f"jq {kind!r} outside the compiled subset")
 
 
-class _JqParser:
-    """Recursive-descent parser over the jq subset, producing the JSLT
-    AST (operators/jslt.py) so the Column compiler is shared.  Value
-    pipes fold into calls: ``x | f(a)`` -> Call(f, [x, a])."""
-
-    def __init__(self, tokens: list[tuple[str, str]]):
-        self.toks = tokens
-        self.i = 0
-
-    def peek(self) -> tuple[str, str]:
-        return self.toks[self.i]
-
-    def next(self) -> tuple[str, str]:
-        t = self.toks[self.i]
-        self.i += 1
-        return t
-
-    def expect(self, text: str) -> None:
-        kind, val = self.next()
-        if val != text:
-            raise JqUnsupported(f"expected {text!r}, got {val!r}")
-
-    # steps ----------------------------------------------------------
-
-    def parse_pipeline(self) -> list[Any]:
-        steps = [self.parse_step()]
-        while self.peek()[1] == "|":
-            self.next()
-            steps.append(self.parse_step())
-        if self.peek()[0] != "eof":
-            raise JqUnsupported(f"trailing input at {self.peek()[1]!r}")
-        return steps
-
-    def parse_step(self) -> tuple[str, Any]:
-        if self.peek() == ("ident", "del"):
-            self.next()
-            self.expect("(")
-            paths = [self.parse_expr()]
-            while self.peek()[1] == ",":
-                self.next()
-                paths.append(self.parse_expr())
-            self.expect(")")
-            for p in paths:
-                if not isinstance(p, Path) or len(p.parts) != 1:
-                    raise JqUnsupported("del() takes top-level field paths")
-            return ("del", paths)
-        if self.peek() == ("ident", "select"):
-            self.next()
-            self.expect("(")
-            cond = self.parse_expr()
-            self.expect(")")
-            return ("select", cond)
-        node = self.parse_expr()
-        if self.peek() == ("ident", "as"):
-            # step-level binding: `EXPR as $x | <rest of pipeline>` —
-            # $x is visible to every later step
-            self.next()
-            return ("bind", (node, self.parse_var_name()))
-        return ("expr", node)
-
-    def parse_var_name(self) -> str:
-        self.expect("$")
-        kind, name = self.next()
-        if kind != "ident":
-            raise JqUnsupported("variable name must follow $")
-        return name
-
-    # expressions ----------------------------------------------------
-
-    def parse_expr(self) -> Any:
-        return self.parse_alt()
-
-    def parse_alt(self) -> Any:
-        node = self.parse_or()
-        while self.peek()[1] == "//":
-            self.next()
-            node = Bin("//", node, self.parse_or())
-        return node
-
-    def parse_or(self) -> Any:
-        node = self.parse_and()
-        while self.peek() == ("ident", "or"):
-            self.next()
-            node = Bin("or", node, self.parse_and())
-        return node
-
-    def parse_and(self) -> Any:
-        node = self.parse_cmp()
-        while self.peek() == ("ident", "and"):
-            self.next()
-            node = Bin("and", node, self.parse_cmp())
-        return node
-
-    def parse_cmp(self) -> Any:
-        node = self.parse_add()
-        if self.peek()[1] in ("==", "!=", "<", "<=", ">", ">="):
-            op = self.next()[1]
-            node = Bin(op, node, self.parse_add())
-        return node
-
-    def parse_add(self) -> Any:
-        node = self.parse_mul()
-        while self.peek()[1] in ("+", "-"):
-            op = self.next()[1]
-            node = Bin(op, node, self.parse_mul())
-        return node
-
-    def parse_mul(self) -> Any:
-        node = self.parse_unary()
-        while self.peek()[1] in ("*", "/"):
-            op = self.next()[1]
-            node = Bin(op, node, self.parse_unary())
-        return node
-
-    def parse_unary(self) -> Any:
-        if self.peek()[1] == "-":
-            self.next()
-            return Bin("-", Lit(0), self.parse_primary())
-        return self.parse_primary()
-
-    def parse_primary(self) -> Any:
-        kind, val = self.peek()
-        if val == "(":
-            self.next()
-            node = self.parse_expr()
-            if self.peek() == ("ident", "as"):
-                # expression-level binding: (EXPR as $x | BODY)
-                self.next()
-                var = self.parse_var_name()
-                self.expect("|")
-                body = self.parse_expr()
-                while self.peek()[1] == "|":
-                    self.next()
-                    body = self.parse_piped_call(body)
-                self.expect(")")
-                return As(node, var, body)
-            # value pipes: (x | f | g(a)) folds to g(f(x), a)
-            while self.peek()[1] == "|":
-                self.next()
-                node = self.parse_piped_call(node)
-            self.expect(")")
-            return node
-        if val == "$":
-            self.next()
-            kind2, name = self.next()
-            if kind2 != "ident":
-                raise JqUnsupported("variable name must follow $")
-            return self.parse_postfix_path(Var(name))
-        if val == ".":
-            return self.parse_postfix_path(self.parse_path())
-        if val == "[":
-            self.next()
-            items = []
-            while self.peek()[1] != "]":
-                items.append(self.parse_expr())
-                if self.peek()[1] == ",":
-                    self.next()
-            self.expect("]")
-            return Arr(items)
-        if val == "{":
-            return self.parse_object()
-        if kind == "string":
-            self.next()
-            return self.string_node(val)
-        if kind == "number":
-            self.next()
-            return Lit(float(val) if any(c in val for c in ".eE") else int(val))
-        if kind == "ident":
-            if val == "if":
-                self.next()
-                cond = self.parse_expr()
-                self.expect("then")
-                then = self.parse_expr()
-                other = None
-                if self.peek() == ("ident", "else"):
-                    self.next()
-                    other = self.parse_expr()
-                self.expect("end")
-                return If(cond, then, other)
-            if val in ("true", "false"):
-                self.next()
-                return Lit(val == "true")
-            if val == "null":
-                self.next()
-                return Lit(None)
-            if val in ("reduce", "foreach"):
-                # reduce SRC[] as $x (INIT; UPD) / foreach ... (collected)
-                self.next()
-                src = self.parse_primary()
-                if self.peek()[1] == "[":  # `.items[]` iteration suffix
-                    self.next()
-                    self.expect("]")
-                    if isinstance(src, Path) and not src.parts:
-                        raise JqUnsupported(
-                            "`.[]` over the whole document is not an array")
-                if self.peek() != ("ident", "as"):
-                    raise JqUnsupported(f"{val} needs `as $var`")
-                self.next()
-                var = self.parse_var_name()
-                self.expect("(")
-                init = self.parse_expr()
-                self.expect(";")
-                upd = self.parse_expr()
-                self.expect(")")
-                cls = Reduce if val == "reduce" else Foreach
-                return cls(src, var, init, upd)
-        raise JqUnsupported(f"unsupported token {val!r}")
-
-    def string_node(self, raw: str) -> Any:
-        """A string literal, or — with ``\\(expr)`` interpolations — a
-        native concat chain (`+` with a string side concatenates)."""
-        import json as _json
-
-        inner = raw[1:-1]
-        if "\\(" not in inner:
-            return Lit(_unquote(raw))
-        node: Any = Lit("")
-        buf = ""
-        i = 0
-        while i < len(inner):
-            if inner.startswith("\\(", i):
-                depth, j = 1, i + 2
-                while j < len(inner) and depth:
-                    if inner[j] == "(":
-                        depth += 1
-                    elif inner[j] == ")":
-                        depth -= 1
-                    j += 1
-                if depth:
-                    raise JqUnsupported("unterminated \\( interpolation")
-                if buf:
-                    node = Bin("+", node, Lit(_json.loads(f'"{buf}"')))
-                    buf = ""
-                sub = _JqParser(_jq_tokenize(inner[i + 2:j - 1]))
-                expr = sub.parse_expr()
-                if sub.peek()[0] != "eof":
-                    raise JqUnsupported("trailing input in interpolation")
-                node = Bin("+", node, Call("tostring", [expr]))
-                i = j
-                continue
-            if inner[i] == "\\":
-                buf += inner[i:i + 2]
-                i += 2
-                continue
-            buf += inner[i]
-            i += 1
-        if buf:
-            node = Bin("+", node, Lit(_json.loads(f'"{buf}"')))
-        return node
-
-    def parse_piped_call(self, value: Any) -> Any:
-        kind, name = self.next()
-        if kind != "ident":
-            raise JqUnsupported(f"pipe target must be a builtin, got {name!r}")
-        args = [value]
-        if self.peek()[1] == "(":
-            self.next()
-            while self.peek()[1] != ")":
-                args.append(self.parse_expr())
-                if self.peek()[1] == ";":
-                    self.next()
-            self.expect(")")
-        elif name not in _ZERO_ARG:
-            raise JqUnsupported(f"builtin {name!r} needs arguments")
-        return Call(name, args)
-
-    def parse_postfix_path(self, node):
-        """Literal array indexing after a path/variable: ``.foo[0]``,
-        ``.foo[-1].bar`` — literal integer index only (``[]`` iteration
-        is the reduce/foreach source form; other bracket forms fall to
-        tier 2)."""
-        from .jslt import _RESERVED, Idx, Sub
-
-        while (self.peek()[1] == "["
-               and self.toks[self.i + 1][0] == "number"
-               and "." not in self.toks[self.i + 1][1]
-               and self.toks[self.i + 2][1] == "]"):
-            self.next()
-            _, num = self.next()
-            self.next()
-            node = Idx(node, int(num))
-            parts: list[str] = []
-            while self.peek()[1] == ".":
-                save = self.i
-                self.next()
-                k, v = self.peek()
-                if k == "ident" and v not in _RESERVED:
-                    self.next()
-                    parts.append(v)
-                elif k == "string":
-                    self.next()
-                    parts.append(_unquote(v))
-                else:
-                    self.i = save
-                    break
-            if parts:
-                node = Sub(node, parts)
-        return node
-
-    def parse_path(self) -> Path:
-        from .jslt import _RESERVED
-
-        parts: list[str] = []
-        while self.peek()[1] == ".":
-            self.next()
-            kind, val = self.peek()
-            # keywords after a bare `.` belong to the surrounding grammar
-            # (`reduce .nums[] as $x (0; . + $x)`), not the path
-            if kind == "ident" and val not in _RESERVED:
-                self.next()
-                parts.append(val)
-            elif kind == "string":
-                self.next()
-                parts.append(_unquote(val))
-            else:
-                break
-        return Path(parts)
-
-    def parse_object(self) -> Obj:
-        self.expect("{")
-        pairs: list[tuple[str, Any]] = []
-        while self.peek()[1] != "}":
-            kind, val = self.peek()
-            if kind == "string":
-                self.next()
-                key = _unquote(val)
-            elif kind == "ident":
-                self.next()
-                key = val
-            else:
-                raise JqUnsupported(f"bad object key {val!r}")
-            if self.peek()[1] == ":":
-                self.next()
-                pairs.append((key, self.parse_expr()))
-            else:
-                # jq shorthand: {foo} == {foo: .foo}
-                pairs.append((key, Path([key])))
-            if self.peek()[1] == ",":
-                self.next()
-        self.expect("}")
-        return Obj(pairs, False)
+def _steps(node: tuple) -> list[tuple[str, Any]]:
+    """The top-level ``|`` pipe -> document steps (see the module
+    docstring)."""
+    kind = node[0]
+    if kind == "pipe":
+        return _steps(node[1]) + _steps(node[2])
+    if kind == "as":
+        # `EXPR as $x | <rest>`: $x is visible to every later step
+        return [("bind", (_expr(node[1]), node[2]))] + _steps(node[3])
+    if kind == "call" and node[1] in ("del", "select") and len(node[2]) == 1:
+        if node[1] == "select":
+            return [("select", _expr(node[2][0]))]
+        paths = [_expr(p) for p in _commas(node[2][0])]
+        if not all(isinstance(p, Path) and len(p.parts) == 1 for p in paths):
+            raise JqUnsupported("del() takes top-level field paths")
+        return [("del", [p.parts[0] for p in paths])]
+    expr = _expr(node)
+    if isinstance(expr, Path) and not expr.parts:
+        return []  # identity
+    if (isinstance(expr, Bin) and expr.op == "+"
+            and isinstance(expr.left, Path) and not expr.left.parts
+            and isinstance(expr.right, Obj)):
+        return [("merge", expr.right.pairs)]
+    if isinstance(expr, Obj):
+        return [("rebuild", expr.pairs)]
+    raise JqUnsupported(
+        "pipe steps must be '.', '. + {..}', '{..}', del(..), "
+        "select(..) or 'EXPR as $x'")
 
 
 _JQ_TO_JSLT_FN = {
@@ -567,11 +313,13 @@ class _JqCompiler(_Compiler):
         raise JqUnsupported(f"builtin {name!r}")
 
 
-def compile_jq_steps(script: str, rekey) -> Any:
-    """Parse ``script``; returns a function ``df -> DataFrame`` or raises
-    ``JqUnsupported``.  ``rekey`` is the _rekey_on_id hook applied when a
-    step (re)sets ``_id``."""
-    steps = _JqParser(_jq_tokenize(script)).parse_pipeline()
+def compile_jq_steps(ast: tuple, rekey) -> Any:
+    """Translate a parsed script (``jq_interp.parse``); returns a
+    function ``df -> DataFrame`` or raises ``JqUnsupported``.  The
+    function itself raises ``JqUnsupported``/``JsltUnsupported`` when a
+    step does not compile against ``df``'s schema.  ``rekey`` is the
+    _rekey_on_id hook applied when a step (re)sets ``_id``."""
+    steps = _steps(ast)
 
     def apply(df: DataFrame) -> DataFrame:
         out = df
@@ -583,23 +331,14 @@ def compile_jq_steps(script: str, rekey) -> Any:
                 expr_node, var = payload
                 out = out.withColumn(_JQVAR + var,
                                      comp.compile(expr_node)[0])
-                continue
-            if tag == "del":
-                out = out.drop(*[p.parts[0] for p in payload])
-                continue
-            if tag == "select":
+            elif tag == "del":
+                out = out.drop(*payload)
+            elif tag == "select":
                 out = out.filter(comp.compile(payload)[0])
-                continue
-            node = payload
-            if isinstance(node, Path) and not node.parts:
-                continue  # identity
-            if (isinstance(node, Bin) and node.op == "+"
-                    and isinstance(node.left, Path) and not node.left.parts
-                    and isinstance(node.right, Obj)):
-                for k, v in node.right.pairs:
+            elif tag == "merge":
+                for k, v in payload:
                     out = out.withColumn(k, comp.compile(v)[0])
-                continue
-            if isinstance(node, Obj):
+            else:
                 # a rebuild replaces the DOCUMENT, not the message key:
                 # carry the engine-internal key column through (as
                 # $project/$replaceWith do — stateless.py:185,255); the
@@ -608,12 +347,7 @@ def compile_jq_steps(script: str, rekey) -> Any:
                 keep = [F.col(c) for c in out.columns
                         if c == KEY_COL or c.startswith(_JQVAR)]
                 out = out.select(*keep, *[comp.compile(v)[0].alias(k)
-                                          for k, v in node.pairs])
-                continue
-            raise JqUnsupported(
-                "pipe steps must be '.', '. + {..}', '{..}', del(..), "
-                "select(..) or 'EXPR as $x'"
-            )
+                                          for k, v in payload])
         hidden = [c for c in out.columns if c.startswith(_JQVAR)]
         if hidden:
             out = out.drop(*hidden)

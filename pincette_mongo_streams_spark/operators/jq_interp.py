@@ -1,13 +1,12 @@
 """Pure-Python jq interpreter — the $jq tier-2 long tail.
 
-The reference runs any jackson-jq program (Jq.java:19-33); the python
-``jq`` binding is absent from this image, so scripts beyond the native
-subset (operators/jq.py) used to hard-fail.  This module interprets a
-much larger jq slice over plain JSON values with real STREAM semantics
-(every expression evaluates to a generator of outputs), so script.py can
-degrade to a working — slower, Python-per-row — path instead of
-ImportError.  The native Column compiler remains tier 1; this runs only
-for scripts it rejects.
+The reference runs any jackson-jq program (Jq.java:19-33).  ``parse``
+here is the only jq parser: the native Column compiler (operators/jq.py,
+tier 1) translates the subset of its AST that the Column model can
+hold, and this module interprets everything else over plain JSON values
+with real STREAM semantics (every expression evaluates to a generator of
+outputs) — a slower, Python-per-row path for the scripts tier 1
+rejects.
 
 Supported beyond the native subset: multi-output streams and ``,``,
 ``.x[0]`` / ``.x[]`` / slices / optional ``?``, string interpolation
@@ -71,6 +70,8 @@ _TOKEN = re.compile(
 )
 
 _INTERP = object()  # marker inside string-part lists
+_ESCAPES = {'"': '"', "\\": "\\", "/": "/", "b": "\b", "f": "\f",
+            "n": "\n", "r": "\r", "t": "\t"}
 
 
 def _lex_string(src: str, i: int):
@@ -104,20 +105,13 @@ def _lex_string(src: str, i: int):
                 parts.append((_INTERP, src[i + 2:j - 1]))
                 i = j
                 continue
-            if nxt in '"\\/':
-                buf.append(nxt)
-            elif nxt == "n":
-                buf.append("\n")
-            elif nxt == "t":
-                buf.append("\t")
-            elif nxt == "r":
-                buf.append("\r")
-            elif nxt == "u":
+            if nxt == "u":
                 buf.append(chr(int(src[i + 2:i + 6], 16)))
                 i += 6
                 continue
-            else:
+            if nxt not in _ESCAPES:
                 raise JqInterpError(f"bad escape \\{nxt}")
+            buf.append(_ESCAPES[nxt])
             i += 2
             continue
         buf.append(ch)
@@ -321,16 +315,18 @@ class _Parser:
         pairs = []
         while not self.at("}"):
             kind, val = self.peek()
-            if kind == "ident" and val not in _KEYWORDS:
+            if kind == "ident" and (val not in _KEYWORDS
+                                    or self.toks[self.i + 1] == ("op", ":")):
+                # a keyword is a key only before `:` (`{if: 1}`)
                 self.next()
                 key_node = ("lit", val)
-                default = ("index", ("identity",), ("lit", val))
+                default = ("index", ("identity",), key_node)
             elif kind == "string":
                 self.next()
                 key_node = ("str", self._str_ast(val)) if not (
                     len(val) == 1 and isinstance(val[0], str)) else \
                     ("lit", val[0] if val else "")
-                default = None
+                default = ("index", ("identity",), key_node)  # {"a"}
             elif self.at("("):
                 self.next()
                 key_node = self.parse_pipe()
@@ -1751,8 +1747,9 @@ def jq_first(script: str, functions=None, resolver=None):
     ``functions``: custom ``{name: fn(input, *args)}`` (jqModuleLoader
     analog, Jq.java:27-31) consulted after script defs and builtins.
     ``resolver`` (dict or callable: module name -> jq source) serves
-    `import "m" as m;` / `include "m";` directives at compile time."""
-    ast = parse(script, resolver)
+    `import "m" as m;` / `include "m";` directives at compile time;
+    ``script`` may also be an AST from ``parse``."""
+    ast = parse(script, resolver) if isinstance(script, str) else script
     customs = dict(functions or {})
 
     def run(doc):

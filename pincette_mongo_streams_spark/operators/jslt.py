@@ -88,10 +88,7 @@ class JsltUnsupported(Exception):
 
 
 # keywords that may directly follow a bare `.` in the surrounding grammar
-_RESERVED = frozenset({
-    "if", "else", "for", "let", "and", "or", "as", "then", "end",
-    "reduce", "foreach",
-})
+_RESERVED = frozenset({"if", "else", "for", "let", "and", "or"})
 
 
 # ---------------------------------------------------------------- AST
@@ -1414,8 +1411,21 @@ def _literal_str(node: Any) -> str:
     raise JsltUnsupported("this argument must be a string literal")
 
 
-def compile_jslt(script: str, df: DataFrame, resolver=None):
-    """Compile a JSLT script against ``df``'s schema.
+def parse_jslt(script: str, resolver=None):
+    """Parse ``script`` once and resolve its imports: returns ``(lets,
+    defs, body)``, the form both tiers take (``compile_jslt`` here,
+    ``jslt_eval.jslt_transform``).  ``resolver`` (dict or callable:
+    module name -> source) serves `import "m" as m` declarations
+    (Jslt.java:19-36).  Raises JsltUnsupported when the script does not
+    parse."""
+    imports, lets, defs, body = _Parser(tokenize(script)).parse_script()
+    if body is None:
+        raise JsltUnsupported("top-level JSLT script needs a body")
+    return lets, {**load_import_defs(imports, resolver), **defs}, body
+
+
+def compile_jslt(parsed: tuple, df: DataFrame):
+    """Compile a ``parse_jslt`` result against ``df``'s schema.
 
     Returns ``(added, dropped, projected)``: exactly one of
     ``added``/``projected`` is non-None — ``added`` (dict of name ->
@@ -1423,12 +1433,10 @@ def compile_jslt(script: str, df: DataFrame, resolver=None):
     ``dropped`` the matcher exclusions (`* - a, b : .`) to remove;
     ``projected`` (list of aliased Columns) for spread-less templates
     ($project-compute semantics).  Raises JsltUnsupported outside the
-    subset.  ``resolver`` (dict or callable: module name -> source)
-    serves `import "m" as m` declarations (Jslt.java:19-36)."""
-    imports, lets, defs, body = _Parser(tokenize(script)).parse_script()
+    subset."""
+    lets, defs, body = parsed
     if not isinstance(body, Obj):
         raise JsltUnsupported("top-level JSLT must be an object template")
-    defs = {**load_import_defs(imports, resolver), **defs}
     comp = _Compiler(df.schema, lets, defs)
     cols = {k: comp.compile(v)[0] for k, v in body.pairs}
     if body.spread:

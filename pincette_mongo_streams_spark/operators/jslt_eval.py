@@ -456,22 +456,19 @@ def _format_time(secs, fmt):
     return d.strftime(_java_fmt_to_py(fmt))
 
 
-def jslt_transform(script: str, functions=None, resolver=None):
-    """Parse ``script`` with the shared parser and return
-    ``doc -> transformed doc`` over plain JSON values.  Raises the
-    compiler's JsltUnsupported if even the parser rejects it.
+def jslt_transform(script, functions=None, resolver=None):
+    """Return ``doc -> transformed doc`` over plain JSON values for
+    ``script``: source text (parsed with the shared parser, imports
+    served by ``resolver``: module name -> source) or a
+    ``jslt.parse_jslt`` result.  Raises the compiler's JsltUnsupported
+    if the parser rejects it.
 
     ``functions`` is the customJsltFunctions analog (Jslt.java:27-33):
-    ``{name: fn(*args)}`` consulted after script defs and builtins.
-    ``resolver`` serves `import "m" as m` (module name -> source)."""
-    from .jslt import _Parser, load_import_defs, tokenize
+    ``{name: fn(*args)}`` consulted after script defs and builtins."""
+    from .jslt import parse_jslt
 
-    imports, lets, defs, body = _Parser(tokenize(script)).parse_script()
-    if body is None:
-        from .jslt import JsltUnsupported
-
-        raise JsltUnsupported("top-level JSLT script needs a body")
-    defs = {**load_import_defs(imports, resolver), **defs}
+    lets, defs, body = (parse_jslt(script, resolver)
+                        if isinstance(script, str) else script)
     plain_lets = {k: _strip(v) for k, v in lets.items()}
     plain_defs = {k: (list(p), _strip(b)) for k, (p, b) in defs.items()}
     plain_body = _strip(body)

@@ -226,3 +226,38 @@ def test_add_empty_and_string_arrays(spark):
                     'w: (.words | add)}',
              rows=rows, schema=schema)[0]
     assert d["e"] == -1.0 and d["w"] == "abc"
+
+
+def test_comment_and_elif_compile_natively(spark):
+    """jq scripts parse once, with the interpreter's grammar: a `#`
+    comment line and an `elif` chain compile to Catalyst expressions
+    (no Python eval node) and give the interpreter's rows."""
+    from pincette_mongo_streams_spark.operators.jq_interp import jq_first
+
+    script = ("# grade each score\n"
+              '. + {grade: (if .score >= 90 then "A" '
+              'elif .score >= 80 then "B" else "C" end)}')
+    rows = [Row(_id="0", score=95), Row(_id="1", score=85),
+            Row(_id="2", score=10)]
+    df = spark.createDataFrame(rows, "_id string, score long")
+    out = compile_pipeline([{"$jq": script}], Context(spark=spark))(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BatchEvalPython" not in plan
+    assert "ArrowEvalPython" not in plan
+    run_one = jq_first(script)
+    got = sorted((r.asDict() for r in out.collect()), key=lambda d: d["_id"])
+    assert got == [run_one(r.asDict()) for r in rows]
+    assert [d["grade"] for d in got] == ["A", "B", "C"]
+
+
+@pytest.mark.parametrize("stage", [
+    {"$jq": ". + {a: "},
+    {"$jslt": '{"a": }'},
+    {"$jq": 'import "m" as m; m::f'},  # no jq_resolver configured
+])
+def test_script_errors_raise_when_the_stage_compiles(stage):
+    """Scripts parse, and resolve their imports, once when the stage
+    compiles; a script that cannot run fails there, not at the first
+    micro-batch."""
+    with pytest.raises(NotImplementedError):
+        compile_pipeline([stage], Context())
