@@ -89,12 +89,14 @@ def _pin_once(df: DataFrame, c: Context) -> DataFrame:
     action, once for the returned passthrough/drop filter.  A
     nondeterministic or re-read source could disagree between the two
     evaluations (row delivered AND retained, or dropped without being
-    sent), so truncate lineage with a lazy ``context.pin``: the first
-    action materializes the split input exactly once and both sides read
-    the pinned copy.  Skipped when no producer is wired (the emit is a
+    sent), so pin the input eagerly with ``context.pin``: the pin
+    computes it once and both sides read the pinned copy.  The pin must
+    be eager: Spark does not persist a lazily reliable-checkpointed
+    frame, so its checkpoint job would compute the input a second time
+    after the emit.  Skipped when no producer is wired (the emit is a
     no-op, so only one evaluation happens anyway)."""
     if c.producer_factory is not None or c.producer is not None:
-        return pin(df)
+        return pin(df, eager=True)
     return df
 
 

@@ -18,8 +18,8 @@ A script is a ``|``-pipe of STEPS; each step transforms the document:
 Expressions: dot paths (absent -> null) and literal integer indexes
 (``.xs[0].name``), literals, arrays/objects, ``+ - * /`` (``+``
 concatenates when a side is a string), comparisons, ``and`` / ``or``,
-``if c then a elif d then b else e end`` (else optional: a missing
-else is null), ``<a> // <b>`` (alternative: right when left is
+``if c then a elif d then b else e end`` (the ``else`` is required:
+jq gives ``.`` when no branch holds), ``<a> // <b>`` (alternative: right when left is
 null/false), and VALUE PIPES — ``(.name | ascii_downcase)``,
 ``(.text | split(",") | length)`` — with builtins length, not,
 tostring, tonumber, floor, ceil, round, ascii_downcase, ascii_upcase,
@@ -140,8 +140,11 @@ def _expr(node: tuple) -> Any:
         return Bin("//" if kind == "alt" else kind,
                    _expr(node[1]), _expr(node[2]))
     if kind == "if":
-        # elif chains nest; a missing else stays None
-        out = None if node[2] is None else _expr(node[2])
+        # elif chains nest.  A missing else yields `.` in jq, which a
+        # typed Column branch cannot hold beside the other branches
+        if node[2] is None:
+            raise JqUnsupported("`if` without `else`")
+        out = _expr(node[2])
         for cond, then in reversed(node[1]):
             out = If(_expr(cond), _expr(then), out)
         return out

@@ -61,6 +61,7 @@ _TOKEN = re.compile(
     r"""
     (?P<ws>\s+|\#[^\n]*)
   | (?P<number>\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
+  | (?P<field>\.[A-Za-z_][A-Za-z0-9_]*)  # `.if` is a field, `. if` is not
   | (?P<op>\?//|==|!=|<=|>=|//=|//|\|=|\+=|-=|\*=|/=|%=|\.\.|[-+*/%<>(){}\[\],:.;|$?])
   | (?P<format>@[A-Za-z0-9]+)
   | (?P<ident>[A-Za-z_][A-Za-z0-9_]*)
@@ -272,8 +273,11 @@ class _Parser:
     def parse_postfix(self):
         node = self.parse_primary()
         while True:
+            if self.peek()[0] == "field":
+                node = ("index", node, ("lit", self.next()[1][1:]))
+                continue
             if self.at("."):
-                # .foo chained after an expression: (expr).foo
+                # ."foo" or . foo chained after an expression
                 save = self.i
                 self.next()
                 kind, val = self.peek()
@@ -397,11 +401,14 @@ class _Parser:
             # `recurse`, jackson-jq runs it — Jq.java:19-33)
             self.next()
             return ("call", "recurse", [])
+        if kind == "field":
+            self.next()
+            return ("index", ("identity",), ("lit", val[1:]))
         if self.at("."):
             self.next()
             kind2, val2 = self.peek()
             if kind2 == "ident" and val2 not in _KEYWORDS:
-                self.next()
+                self.next()  # `. foo`; `. as`, `. then` stay keywords
                 return ("index", ("identity",), ("lit", val2))
             if kind2 == "string":
                 self.next()

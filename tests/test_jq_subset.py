@@ -250,6 +250,40 @@ def test_comment_and_elif_compile_natively(spark):
     assert [d["grade"] for d in got] == ["A", "B", "C"]
 
 
+def test_keyword_named_fields_compile_natively(spark):
+    """A word right after `.` is a field even when it spells a jq
+    keyword (`.label`, `.not`, `.try`), as in jq 1.7; `. as`, `. then`
+    and the like keep their keyword meaning after whitespace."""
+    from pincette_mongo_streams_spark.operators.jq_interp import jq_first
+
+    script = 'select(.label == "x") | . + {n: .not, t: .try}'
+    rows = [Row(_id="0", label="x", **{"not": 1, "try": "a"}),
+            Row(_id="1", label="y", **{"not": 2, "try": "b"})]
+    df = spark.createDataFrame(rows, "_id string, label string, "
+                                     "`not` long, `try` string")
+    out = compile_pipeline([{"$jq": script}], Context(spark=spark))(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BatchEvalPython" not in plan
+    assert "ArrowEvalPython" not in plan
+    run_one = jq_first(script)
+    assert [r.asDict() for r in out.collect()] == [run_one(rows[0].asDict())]
+
+
+def test_elif_without_else_keeps_the_input(spark):
+    """jq gives `.` when no `if` branch holds and there is no `else`;
+    the stage must not turn that into null."""
+    from pincette_mongo_streams_spark.operators.jq_interp import jq_first
+
+    script = ('. + {tags: (.tags | map(if . == "spam" then "S" '
+              'elif . == "ham" then "H" end))}')
+    rows = [Row(_id="0", tags=["spam", "ham", "eggs"])]
+    df = spark.createDataFrame(rows, "_id string, tags array<string>")
+    out = compile_pipeline([{"$jq": script}], Context(spark=spark))(df)
+    got = [r.asDict() for r in out.collect()]
+    assert got == [jq_first(script)(rows[0].asDict())]
+    assert got[0]["tags"] == ["S", "H", "eggs"]
+
+
 @pytest.mark.parametrize("stage", [
     {"$jq": ". + {a: "},
     {"$jslt": '{"a": }'},
